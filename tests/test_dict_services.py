@@ -8,6 +8,7 @@ from __future__ import annotations
 import math
 import shutil
 from collections import Counter
+from contextlib import contextmanager
 
 import numpy as np
 import pytest
@@ -1427,3 +1428,168 @@ def test_search_and_msm_still_validates(idx):
     OR-only unsatisfiable shortcut."""
     with pytest.raises(ValueError, match="min_should_match applies to OR"):
         idx.search("buf_pack64 ptr_set_util29", mode="AND", min_should_match=5)
+
+
+# ------------------------------------------- batch plans: size-independent
+
+
+def _page_templates(idx):
+    """Single-query shapes mixing k, offset, search_after, exclude,
+    exclude_docs, AND, min_should_match and boosts over the index's
+    hottest terms (plus one term the index lacks)."""
+    from wikitfidf_spark.index.query import Query
+
+    t = [r["term"] for r in
+         idx.dictionary.orderBy(F.desc("df"), F.asc("term")).limit(40).collect()]
+    page1 = sorted(idx.topk_batch([Query(0, [t[2], t[6]], k=3)]).collect(),
+                   key=lambda r: r["rank"])
+    top = sorted(idx.topk_batch([Query(0, [t[4], t[7]], k=4)]).collect(),
+                 key=lambda r: r["rank"])
+    return [
+        dict(terms=[t[0], t[1]], k=5),
+        dict(terms=[t[2]], k=1),
+        dict(terms=[t[0], t[3]], mode="AND", k=4),
+        dict(terms=[t[1], t[4], t[5]], k=3, offset=2),
+        dict(terms=[t[0]], k=7, offset=5),
+        dict(terms=[t[2], t[6]], k=3,
+             search_after=(page1[-1]["score_q"], page1[-1]["doc_id"])),
+        dict(terms=[t[0], t[1]], k=6, exclude=(t[30],)),
+        dict(terms=[t[4], t[7]], k=5,
+             exclude_docs=(top[0]["doc_id"], top[2]["doc_id"])),
+        dict(terms=[t[5], t[8]], k=4, offset=1, exclude=(t[39],),
+             exclude_docs=(top[1]["doc_id"],)),
+        dict(terms=[t[1], t[2], t[9]], k=5, min_should_match=2),
+        dict(terms=[t[3], t[6]], k=4, boosts=(2, 1)),
+        dict(terms=[t[7], t[8]], mode="AND", k=2, offset=1),
+        dict(terms=["zz_never_a_term"], k=3),
+    ]
+
+
+def _rows_by_qid(rows):
+    out: dict[int, list] = {}
+    for r in sorted(rows, key=lambda r: (r["query_id"], r["rank"])):
+        out.setdefault(r["query_id"], []).append(
+            (r["doc_id"], r["score_q"], r["rank"])
+        )
+    return out
+
+
+@pytest.mark.parametrize("n_queries,strategy", [
+    (2003, "taat"), (13, "taat"), (13, "wand"),
+])
+def test_topk_batch_any_size_equals_one_at_a_time(idx, n_queries, strategy):
+    """Per-query k and offset ride the kernel's output rows, for any
+    batch size: a batch above the size where the global merge once
+    switched from plan literals to a broadcast join (2000 queries) and
+    one below it each return, per query, exactly the rows of the same
+    query run alone.  Query ids are scattered (negative, non-contiguous)
+    so the per-row k/offset lookup is exercised."""
+    from wikitfidf_spark.index.query import Query
+
+    tpl = _page_templates(idx)
+    alone = [_rows_by_qid(idx.topk_batch([Query(0, **t)]).collect()).get(0, []) for t in tpl]
+    assert all(alone[:-1]) and not alone[-1]
+    qids = [3 * i - 3000 for i in range(n_queries)]
+    got = _rows_by_qid(idx.topk_batch(
+        [Query(q, **tpl[i % len(tpl)]) for i, q in enumerate(qids)], strategy=strategy,
+    ).collect())
+    for i, q in enumerate(qids):
+        assert got.get(q, []) == alone[i % len(tpl)], (q, tpl[i % len(tpl)])
+
+
+@pytest.mark.parametrize("n_sources", [2003, 7])
+def test_more_like_this_batch_src_label_any_size(idx, n_sources):
+    """src_doc_id is each query's own source for any batch size, and
+    every query's rows equal the single more_like_this call."""
+    ids = [r["doc_id"] for r in
+           idx.docmeta.select("doc_id").orderBy("doc_id").limit(5).collect()]
+    srcs = [ids[(i * 3) % len(ids)] for i in range(n_sources)]
+    alone = {
+        d: [(r["doc_id"], r["score_q"], r["rank"]) for r in sorted(
+            idx.more_like_this(d, m=6, k=4, strategy="taat").collect(),
+            key=lambda r: r["rank"])]
+        for d in ids
+    }
+    batch = idx.more_like_this_batch(srcs, m=6, k=4, strategy="taat").collect()
+    assert all(r["src_doc_id"] == srcs[r["query_id"]] for r in batch)
+    got = _rows_by_qid(batch)
+    for qid, d in enumerate(srcs):
+        assert got.get(qid, []) == alone[d], (qid, d)
+    assert all(alone.values())
+
+
+@contextmanager
+def _py4j_calls(spark):
+    """Count the driver's Py4J commands inside the block, leaving out
+    the memory commands Python's garbage collector sends on its own
+    schedule to release JVM objects."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, n = client.send_command, [0]
+
+    def counted(cmd, *a, **kw):
+        n[0] += not cmd.startswith("m\n")
+        return send(cmd, *a, **kw)
+
+    client.send_command = counted
+    try:
+        yield n
+    finally:
+        vars(client).pop("send_command", None)
+
+
+def test_batch_plan_py4j_calls_do_not_grow_with_batch(spark, idx):
+    """Building a topk_batch plan costs the same number of Py4J calls
+    for 10 queries over 20 terms as for 3000 queries over 400 terms —
+    the term filter, k and offset never become per-value plan calls."""
+    from wikitfidf_spark.index.query import Query
+
+    terms = [r["term"] for r in idx.dictionary.orderBy("term").limit(400).collect()]
+
+    def batch(n):
+        return [
+            Query(i, [terms[i % 400], terms[(7 * i + 1) % 400]], k=1 + i % 5,
+                  offset=i % 3)
+            for i in range(n)
+        ]
+
+    idx.topk_batch(batch(10))  # first use resolves JVM classes
+    calls = {}
+    for n in (10, 3000):
+        with _py4j_calls(spark) as c:
+            idx.topk_batch(batch(n))
+        calls[n] = c[0]
+    assert calls[3000] == calls[10], calls
+
+
+def test_simple_query_string_leading_apostrophe(idx):
+    """A token that starts with an apostrophe ('tis, '90s) is an
+    ordinary word, not an unterminated quote; an unterminated double
+    quote fails with a clear message."""
+    from wikitfidf_spark.index.query import Query
+
+    got = idx.simple_query_string("'arg_cfg arg_ctx", k=5).collect()
+    want = idx.search("'arg_cfg arg_ctx", k=5).collect()
+    key = lambda rows: sorted((r["rank"], r["doc_id"], r["score_q"]) for r in rows)
+    assert key(got) == key(want) and got
+    idx.simple_query_string("'tis '90s", k=5).collect()  # no parser crash
+    got = idx.simple_query_string("arg_cfg -'arg_ctx", k=5).collect()
+    want = idx.topk_batch([Query(0, ["arg_cfg"], "OR", 5, exclude=("arg_ctx",))]).collect()
+    assert key(got) == key(want)
+    with pytest.raises(ValueError, match="unterminated quoted phrase"):
+        idx.simple_query_string('"arg_cfg arg_ctx')
+
+
+def test_function_score_rejects_non_integral_factor(idx):
+    """A fractional or non-numeric factor column raises instead of
+    being silently truncated by a cast to long."""
+    orig = idx.docmeta
+    try:
+        idx.docmeta = orig.withColumn("half_len", F.col("doc_len") * 0.5)
+        with pytest.raises(ValueError, match="integral"):
+            idx.function_score_topk(["arg_cfg"], factor="half_len")
+        with pytest.raises(ValueError, match="integral"):
+            idx.function_score_topk_batch([(0, ["arg_cfg"])], factor="topic")
+        with pytest.raises(ValueError, match="integral"):
+            idx.function_score_topk(["arg_cfg"], factor="no_such_column")
+    finally:
+        idx.docmeta = orig

@@ -125,6 +125,61 @@ def test_postings_term_lookup_prunes_row_groups(spark, tmp_path_factory):
     assert e2.count("EqualTo(term,arg_cfg_get)") >= 2  # structure AND scores scans
 
 
+def _pushed_term_in(e: str) -> list[tuple[str, int]]:
+    """(file name, number of values) of every parquet scan in a
+    formatted plan whose pushed filters hold an ``In(term, [...])``."""
+    out, loc = [], None
+    for line in e.splitlines():
+        if line.startswith("Location:"):
+            loc = os.path.basename(line.rstrip("]").split()[-1])
+        elif line.startswith("PushedFilters:") and "In(term, [" in line:
+            vals = line.split("In(term, [", 1)[1].split("]", 1)[0]
+            out.append((loc, len(vals.split(","))))
+    return out
+
+
+def test_batch_term_filter_pushes_into_every_scan(spark, tmp_path_factory):
+    """A batch's term list enters the plan as ONE parsed IN expression
+    (quoted literals, byte literals for values with quotes or
+    backslashes); constant folding must leave the same pushed
+    ``In(term, [...])`` filter on every posting scan: the combined scan
+    in the fused state, the structure AND scores scans after an
+    exact-mode add, and the positions scan of a phrase batch."""
+    from wikitfidf_spark.index.build import add_documents
+    from wikitfidf_spark.index.positions import build_positions
+    from wikitfidf_spark.index.query import PhraseQuery, Query
+
+    d = str(tmp_path_factory.mktemp("idx_inplan"))
+    docs = make_code_files(spark, n_docs=330, seed=42)
+    split = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(11)) == 0
+    build_index(
+        spark, docs.filter(~split), d, IndexConfig(n_shards=2, n_salts=2), resume=False
+    )
+    build_positions(spark, docs.filter(~split), d)
+    idx = InvertedIndex(spark, d)
+    terms = [r["term"] for r in idx.dictionary.orderBy("term").limit(150).collect()]
+    terms.append("no'such\\term")
+    queries = [Query(i, terms[i:i + 3]) for i in range(0, len(terms), 3)]
+    n = len(terms)
+    phrases = [PhraseQuery(i, [terms[i], terms[(i + 1) % n]]) for i in range(0, n, 2)]
+
+    assert idx.combined is not None  # fused: ONE combined scan
+    assert _pushed_term_in(explain_str(idx.topk_batch(queries))) == [
+        ("structure_g0.parquet", n)
+    ]
+    scans = _pushed_term_in(explain_str(idx.phrase_topk_batch(phrases)))
+    assert ("structure_g0.parquet", n) in scans
+    assert any(f.startswith("positions") and c == n for f, c in scans), scans
+
+    add_documents(spark, docs.filter(split), d)  # splits scores back out
+    idx2 = InvertedIndex(spark, d)
+    assert idx2.combined is None
+    scans = _pushed_term_in(explain_str(idx2.topk_batch(queries)))
+    assert {c for _, c in scans} == {n}
+    assert any(f.startswith("structure") for f, _ in scans), scans
+    assert any(f.startswith("scores") for f, _ in scans), scans
+
+
 def test_score_refresh_plan_is_shuffle_free(spark, tmp_path_factory):
     """The incremental-update cornerstone: score_postings_df must be a
     pure map over the structure scan — a broadcast dictionary join and

@@ -35,8 +35,9 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from ..operators.scoring import QUANT, round_half_up
 from . import codec
@@ -378,6 +379,51 @@ def _check_unique_qids(qids: "Iterable[int]") -> None:
         (dups if qid in seen else seen).add(qid)
     if dups:
         raise ValueError(f"duplicate query_id(s) in batch: {sorted(dups)}")
+
+
+def _sql_lit(v: "str | int") -> str:
+    """One value as Spark SQL literal text.  Integers are bigint
+    literals.  A string holding ``'``, ``\\`` or ``$`` (the parser
+    unescapes backslashes unless ``spark.sql.parser.escapedStringLiterals``
+    is set, and substitutes ``${...}`` variables) goes in as its UTF-8
+    bytes, so every value round-trips under any parser setting; any
+    other string is a plain quoted literal."""
+    if not isinstance(v, str):
+        return f"{int(v)}L"
+    if "'" in v or "\\" in v or "$" in v:
+        return f"CAST(X'{v.encode('utf-8').hex()}' AS STRING)"
+    return f"'{v}'"
+
+
+def _in_values(col: str, values: "Iterable[str | int]") -> Column:
+    """``col IN (values)`` as ONE parsed expression: one Py4J call
+    however many values, where ``Column.isin`` pays several round trips
+    per literal.  Constant folding leaves the same ``In`` filter
+    ``isin`` builds, so it pushes into parquet scans the same way."""
+    lits = [_sql_lit(v) for v in values]
+    if not lits:
+        return F.lit(False)
+    return F.expr(f"`{col}` IN ({', '.join(lits)})")
+
+
+def _k_off_labeler(kmap: "dict[int, tuple[int, int]]"):
+    """query_id → (k, offset) as a function that adds each result
+    row's ``k`` and ``off`` int columns to a per-shard kernel's output
+    (one searchsorted over the sorted query ids), so the global merge
+    filters on columns instead of a per-query plan literal or join."""
+    qk = np.array(sorted((q, k, o) for q, (k, o) in kmap.items()), dtype=np.int64)
+    qids = qk[:, 0]
+    ks, offs = qk[:, 1].astype(np.int32), qk[:, 2].astype(np.int32)
+
+    def label(out: pd.DataFrame) -> pd.DataFrame:
+        i = np.searchsorted(qids, out["query_id"].to_numpy(dtype=np.int64))
+        return out.assign(k=ks[i], off=offs[i])
+
+    return label
+
+
+#: per-shard kernel output feeding :meth:`InvertedIndex._rank_and_limit`
+_LOCAL_SCHEMA = "query_id int, doc_id long, score_q long, k int, off int"
 
 
 def wildcard_regex(pattern: str) -> tuple[str, str]:
@@ -770,6 +816,7 @@ class InvertedIndex:
         # projected away BEFORE the shuffle — the scorers never read
         # them (~40% less bytes moved).
         rows = self._posting_rows(all_terms)
+        label = _k_off_labeler({q.query_id: (q.k, q.offset) for q in queries})
 
         def _wand_body(pdf: pd.DataFrame, allowed_u: "np.ndarray | None") -> pd.DataFrame:
             # one group = one doc-partitioned shard -> scores complete here
@@ -808,38 +855,35 @@ class InvertedIndex:
                     rows_q, k, mode, allowed_u, excluded, boosts, msm, after
                 ):
                     out.append((qid, doc, score))
-            return pd.DataFrame(out, columns=["query_id", "doc_id", "score_q"])
+            return label(pd.DataFrame(out, columns=["query_id", "doc_id", "score_q"]))
 
         def per_shard_wand(key, pdf: pd.DataFrame) -> pd.DataFrame:
             return _wand_body(pdf, None)
 
         def per_shard_taat(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            return _taat_kernel(pdf, qspec, None)
+            return label(_taat_kernel(pdf, qspec, None))
 
         # cogrouped filtered variants: apdf holds this shard's allowed
         # doc ids with their native int64 dtype (a null-padded union
         # would route them through float64 and corrupt xxhash-range ids)
         def per_shard_taat_filtered(key, pdf: pd.DataFrame, apdf: pd.DataFrame) -> pd.DataFrame:
-            return _taat_kernel(pdf, qspec, np.unique(apdf["doc_id"].to_numpy()))
+            return label(_taat_kernel(pdf, qspec, np.unique(apdf["doc_id"].to_numpy())))
 
         def per_shard_wand_filtered(key, pdf: pd.DataFrame, apdf: pd.DataFrame) -> pd.DataFrame:
             return _wand_body(pdf, np.unique(apdf["doc_id"].to_numpy()))
 
-        out_schema = "query_id int, doc_id long, score_q long"
         if predicate is not None:
             allowed = self.docmeta.filter(predicate).select("shard", "doc_id")
             fn = per_shard_taat_filtered if strategy == "taat" else per_shard_wand_filtered
             local = (
                 rows.groupBy("shard")
                 .cogroup(allowed.groupBy("shard"))
-                .applyInPandas(fn, out_schema)
+                .applyInPandas(fn, _LOCAL_SCHEMA)
             )
         else:
             per_shard = per_shard_taat if strategy == "taat" else per_shard_wand
-            local = rows.groupBy("shard").applyInPandas(per_shard, out_schema)
-        return self._rank_and_limit(
-            local, {q.query_id: (q.k, q.offset) for q in queries}
-        )
+            local = rows.groupBy("shard").applyInPandas(per_shard, _LOCAL_SCHEMA)
+        return self._rank_and_limit(local)
 
     def topk(
         self,
@@ -924,7 +968,7 @@ class InvertedIndex:
         combined-file scan in the fused state, else structure+scores
         scans unioned with null padding (matched back up per
         (term, sub_shard) by _merged_lists inside the shard group)."""
-        term_filter = F.col("term").isin(all_terms)
+        term_filter = _in_values("term", all_terms)
         if self.combined is not None:
             return self.combined.filter(term_filter).select(
                 "shard", "term", "sub_shard", "n_docs", "docs_payload",
@@ -941,40 +985,16 @@ class InvertedIndex:
         )
         return s_rows.unionByName(c_rows, allowMissingColumns=True)
 
-    def _rank_and_limit(self, local: DataFrame, kmap: dict) -> DataFrame:
+    @staticmethod
+    def _rank_and_limit(local: DataFrame) -> DataFrame:
         """Global merge: per-query window top-k over the ≤ shards*(k+off)
-        shard-local results.  ``kmap`` values are k or (k, offset);
-        ranks are absolute, the offset window filters
-        offset < rank <= offset + k."""
+        shard-local results.  Each row carries its query's ``k`` and
+        ``off`` (:func:`_k_off_labeler`); ranks are absolute, the offset
+        window filters off < rank <= off + k."""
         w = Window.partitionBy("query_id").orderBy(F.desc("score_q"), F.asc("doc_id"))
-        rows = [
-            (qid, *(v if isinstance(v, tuple) else (v, 0)))
-            for qid, v in kmap.items()
-        ]
-        ranked = local.withColumn("rank", F.row_number().over(w))
-        if len(rows) <= 2000:
-            # literal query_id->k/offset maps: a pure projection the
-            # window stage absorbs — saves the per-call createDataFrame
-            # round-trip and broadcast exchange the join path pays.
-            # (A qid missing from the map compares null -> filtered,
-            # same as the inner join; local only ever holds batch qids.)
-            k_expr = F.create_map(
-                *[F.lit(x) for qid, k, _ in rows for x in (qid, k)]
-            )[F.col("query_id")]
-            if any(off for _, _, off in rows):
-                off_expr = F.create_map(
-                    *[F.lit(x) for qid, _, off in rows for x in (qid, off)]
-                )[F.col("query_id")]
-            else:
-                off_expr = F.lit(0)
-            out = ranked.filter(
-                (F.col("rank") > off_expr) & (F.col("rank") <= off_expr + k_expr)
-            )
-        else:
-            kdf = self.spark.createDataFrame(rows, "query_id int, k int, off int")
-            out = ranked.join(F.broadcast(kdf), "query_id").filter(
-                (F.col("rank") > F.col("off")) & (F.col("rank") <= F.col("off") + F.col("k"))
-            )
+        out = local.withColumn("rank", F.row_number().over(w)).filter(
+            (F.col("rank") > F.col("off")) & (F.col("rank") <= F.col("off") + F.col("k"))
+        )
         return out.select(
             "query_id", "doc_id", "score_q",
             (F.col("score_q").cast("double") / F.lit(float(QUANT))).alias("score"),
@@ -1041,10 +1061,11 @@ class InvertedIndex:
 
         all_terms = sorted({t for q in phrases for t in q.terms})
         pos_rows = read_positions(self.spark, self.index_dir, rel).filter(
-            F.col("term").isin(all_terms)
+            _in_values("term", all_terms)
         )
         rows = self._posting_rows(all_terms)
         qspec = [(q.query_id, list(q.terms), q.k, q.slop) for q in phrases]
+        label = _k_off_labeler({q.query_id: (q.k, 0) for q in phrases})
 
         def per_shard_phrase(key, pdf: pd.DataFrame, ppdf: pd.DataFrame) -> pd.DataFrame:
             # shard-level work is paid ONCE for the batch: postings are
@@ -1065,16 +1086,17 @@ class InvertedIndex:
                 out.append(_taat_eval(
                     decoded, [(qid, terms, "AND", k, (), None, None, 0, None)], allowed,
                 ))
-            if not out:
-                return pd.DataFrame(columns=["query_id", "doc_id", "score_q"])
-            return pd.concat(out, ignore_index=True)
+            return label(
+                pd.concat(out, ignore_index=True) if out
+                else pd.DataFrame(columns=["query_id", "doc_id", "score_q"])
+            )
 
         local = (
             rows.groupBy("shard")
             .cogroup(pos_rows.groupBy("shard"))
-            .applyInPandas(per_shard_phrase, "query_id int, doc_id long, score_q long")
+            .applyInPandas(per_shard_phrase, _LOCAL_SCHEMA)
         )
-        return self._rank_and_limit(local, {q.query_id: q.k for q in phrases})
+        return self._rank_and_limit(local)
 
     def snippets(
         self,
@@ -1225,14 +1247,14 @@ class InvertedIndex:
         (query_id, src_doc_id, doc_id, score_q, score, rank).
 
         Term extraction batches too: the doc-major tf artifact is
-        scanned ONCE with an ``isin`` pushdown for all sources, joined
+        scanned ONCE with an ``IN`` pushdown for all sources, joined
         to the broadcast dictionary, and the per-doc top-``m`` terms
         come back in one window + one collect (≤ m·|docs| rows — query
         construction is driver-side by definition).  Serving is one
         :meth:`topk_batch`; each query's own source doc is excluded
-        structurally (ask k+1, drop the source row, re-rank — identical
-        results to a per-query ``doc_id != src`` predicate, without
-        per-query predicates)."""
+        inside the kernel (``Query.exclude_docs`` — identical results
+        to a per-query ``doc_id != src`` predicate, without per-query
+        predicates)."""
         from .build import _tombstones, index_paths
 
         if m < 1:
@@ -1246,7 +1268,7 @@ class InvertedIndex:
         uniq_ids = list(dict.fromkeys(doc_ids))
         meta = {
             r["doc_id"]: int(r["doc_len"])
-            for r in self.docmeta.filter(F.col("doc_id").isin(uniq_ids))
+            for r in self.docmeta.filter(_in_values("doc_id", uniq_ids))
             .select("doc_id", "doc_len").collect()
         }
         missing = [d for d in uniq_ids if d not in meta]
@@ -1255,34 +1277,14 @@ class InvertedIndex:
         p = index_paths(self.manifest)
         tf = self.spark.read.parquet(
             *[os.path.join(self.index_dir, t) for t in p["tf"]]
-        ).filter(F.col("doc_id").isin(uniq_ids))
+        ).filter(_in_values("doc_id", uniq_ids))
         tombs = _tombstones(self.spark, self.index_dir, self.manifest)
         if tombs is not None:  # docmeta said live, so this is belt+braces
             tf = tf.join(tombs.select("doc_id"), "doc_id", "left_anti")
         lens = self.spark.createDataFrame(
             [(d, meta[d]) for d in uniq_ids], "doc_id long, doc_len long"
         )
-        # During a bounded-staleness window the epoch dictionary lacks
-        # terms that exist only in un-refreshed deltas; an inner join
-        # would silently drop them from the ranking (a delta doc with
-        # only new terms would return NO results).  Same guard as
-        # tfidf_scores: left join + structure-derived live df — gated
-        # on the manifest so the common refreshed path stays one inner
-        # broadcast join with no extra scan.
-        if int(self.manifest.get("stale_deltas", 0)) > 0:
-            fallback_df = self.structure.groupBy("term").agg(
-                F.sum("n_docs").alias("df_live")
-            )
-            dicted = (
-                tf.join(F.broadcast(self.dictionary.select("term", "df")), "term", "left")
-                .join(F.broadcast(fallback_df), "term")
-                .withColumn("df", F.coalesce("df", "df_live"))
-            )
-        else:
-            dicted = tf.join(
-                F.broadcast(self.dictionary.select("term", "df")), "term"
-            )
-        scored = dicted.join(F.broadcast(lens), "doc_id").withColumn(
+        scored = self._join_term_df(tf, "df").join(F.broadcast(lens), "doc_id").withColumn(
             "tfidf",
             round_half_up(
                 (F.col("tf").cast("double") / F.col("doc_len").cast("double"))
@@ -1298,37 +1300,40 @@ class InvertedIndex:
             .orderBy("doc_id", "r").collect()
         ):
             top_terms.setdefault(r["doc_id"], []).append(r["term"])
-        queries, src_of = [], {}
+        queries = []
         for i, d in enumerate(doc_ids):
             terms = top_terms.get(d)
             if terms:  # a stopword-only doc yields no query
-                src_of[i] = d
                 # source exclusion rides the kernel (Query.exclude_docs):
                 # the shard cut never sees the source doc, so
                 # topk_batch's ranks are already final — no k+1 ask, no
                 # second rank window over the served rows
                 queries.append(Query(i, terms, "OR", k, exclude_docs=(d,)))
-        if not queries:
-            return (
-                self._empty_result()
-                .withColumn("src_doc_id", F.lit(None).cast("long"))
-                .select("query_id", "src_doc_id", "doc_id", "score_q", "score", "rank")
-            )
         res = self.topk_batch(queries, strategy=strategy, predicate=predicate)
-        if len(src_of) <= 2000:
-            # literal qid->source map: labeling is a projection, not a
-            # broadcast-join stage
-            src_expr = F.create_map(
-                *[F.lit(x) for qid, d in src_of.items() for x in (qid, d)]
-            )[F.col("query_id")].cast("long")
-            res = res.withColumn("src_doc_id", src_expr)
-        else:
-            src_df = self.spark.createDataFrame(
-                [(qid, d) for qid, d in src_of.items()], "query_id int, src_doc_id long"
-            )
-            res = res.join(F.broadcast(src_df), "query_id")
+        # query ids are input positions 0..n-1: the source label is one
+        # parsed array lookup, a projection whatever the batch size
+        src = F.expr(
+            f"element_at(array({', '.join(map(_sql_lit, doc_ids))}), query_id + 1)"
+        ).cast("long")
         return res.select(
-            "query_id", "src_doc_id", "doc_id", "score_q", "score", "rank"
+            "query_id", src.alias("src_doc_id"), "doc_id", "score_q", "score", "rank"
+        )
+
+    def _join_term_df(self, rows: DataFrame, name: str) -> DataFrame:
+        """Join each row's term df in as column ``name``.  While
+        deferred-refresh deltas are outstanding the epoch dictionary
+        lacks delta-only terms and an inner join would silently drop
+        them (a delta doc with only new terms would return NO results),
+        so the dictionary is left-joined and coalesced with the
+        structure-derived live df.  A refreshed index keeps one inner
+        broadcast join with no extra scan."""
+        dic = F.broadcast(self.dictionary.select("term", F.col("df").alias(name)))
+        if int(self.manifest.get("stale_deltas", 0)) == 0:
+            return rows.join(dic, "term")
+        live = self.structure.groupBy("term").agg(F.sum("n_docs").alias("_df_live"))
+        return (
+            rows.join(dic, "term", "left").join(F.broadcast(live), "term")
+            .withColumn(name, F.coalesce(name, "_df_live")).drop("_df_live")
         )
 
     # ---------- dictionary services ----------
@@ -1611,21 +1616,7 @@ class InvertedIndex:
                 "left_anti",
             )
         )
-        if int(self.manifest.get("stale_deltas", 0)) > 0:
-            fallback = self.structure.groupBy("term").agg(
-                F.sum("n_docs").alias("df_live")
-            )
-            bg = (
-                fg.join(F.broadcast(self.dictionary.select("term", "df")), "term", "left")
-                .join(F.broadcast(fallback), "term")
-                .withColumn("bg_df", F.coalesce("df", "df_live"))
-                .drop("df", "df_live")
-            )
-        else:
-            bg = fg.join(
-                F.broadcast(self.dictionary.select("term", F.col("df").alias("bg_df"))),
-                "term",
-            )
+        bg = self._join_term_df(fg, "bg_df")
         m_df = match.groupBy("query_id").agg(F.count(F.lit(1)).alias("m_cnt"))
         lift = (F.col("fg_df").cast("double") * F.lit(float(self.n_docs))) / (
             F.col("bg_df").cast("double") * F.col("m_cnt").cast("double")
@@ -1735,7 +1726,11 @@ class InvertedIndex:
 
         lex = shlex.shlex(text, posix=False)
         lex.whitespace_split = True
-        parts = list(lex)
+        lex.quotes = '"'  # apostrophes ('tis, '90s) are word characters
+        try:
+            parts = list(lex)
+        except ValueError:
+            raise ValueError(f"unterminated quoted phrase in {text!r}") from None
         phrases = [p for p in parts if p.startswith('"')]
         rest = [p for p in parts if not p.startswith('"')]
         if phrases:
@@ -2401,7 +2396,7 @@ class InvertedIndex:
         """(doc_id, term, tf, score_q) rows decoded from postings."""
         rows = self.postings
         if terms is not None:
-            rows = rows.filter(F.col("term").isin(list(terms)))
+            rows = rows.filter(_in_values("term", terms))
 
         def decode(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in pdf_iter:
@@ -2426,7 +2421,7 @@ class InvertedIndex:
         kernel's cost, so this is the right scan for them."""
         rows = self.combined if self.combined is not None else self.structure
         if terms is not None:
-            rows = rows.filter(F.col("term").isin(list(terms)))
+            rows = rows.filter(_in_values("term", terms))
         rows = rows.select(
             "term", "n_docs", "docs_payload", "block_firsts", "block_counts"
         )
@@ -2559,6 +2554,11 @@ class InvertedIndex:
         (equivalence-tested)."""
         if k < 1:
             raise ValueError(f"k must be >= 1, got {k}")
+        ftype = {f.name: f.dataType for f in self.docmeta.schema}.get(factor)
+        if not isinstance(ftype, IntegralType):
+            raise ValueError(
+                f"factor column {factor!r} must be an integral docmeta column, got {ftype}"
+            )
         _, scored = self._panel_scored_aggs(queries, mode)
         fac = self.docmeta.select(
             "doc_id", F.col(factor).cast("long").alias("_factor")

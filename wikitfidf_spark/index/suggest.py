@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .build import _save_manifest, index_paths, load_manifest
+from .query import _in_values
 
 
 def _deletes_py(s: str, max_dist: int) -> set[str]:
@@ -145,7 +146,7 @@ def suggest_indexed(
     qkeys = sorted(_deletes_py(query_term, max_dist))
     tbl = _open_suggest_table(spark, index_dir, max_dist)
     return (
-        tbl.filter(F.col("key").isin(qkeys))
+        tbl.filter(_in_values("key", qkeys))
         .select("term", "df").distinct()
         .withColumn("dist", F.levenshtein(F.col("term"), F.lit(query_term)))
         .filter(F.col("dist") <= F.lit(max_dist))
