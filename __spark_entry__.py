@@ -33,7 +33,7 @@ from wikitfidf_spark.streaming import jobs as stream_jobs
 
 FLAGGED = ["slow", "error", "legacy"]          # badwords-analogue list
 STOP_TERMS = ("the", "and", "for", "with")     # stopword-hook probe ('the' is in-vocab)
-BM25_OR_TERMS = ["join", "hash", "dup"]        # hot+hot+rare: exercises WAND
+BM25_OR_TERMS = ["join", "hash", "dup"]        # hot+hot+rare disjunction
 BM25_AND_TERMS = ["dup", "join"]               # rare ∧ hot conjunction
 PHRASE_TERMS = ["part", "filter"]              # adjacent pair present at every SF
 TFIDF_TERM = "dup"                             # degenerate single-term mode
@@ -287,7 +287,7 @@ def q_topn_recent(spark, sf_dir):
 
 def q_bm25_or_topk(spark, sf_dir):
     """North-rule disjunctive BM25 top-k (relational formulation; the
-    index/WAND path is rank-identical — q_index_wand_topk)."""
+    index engine is rank-identical — q_index_wand_topk)."""
     sc = _bm25_scores_df(spark, sf_dir, BM25_OR_TERMS)
     agg = sc.groupBy("doc_id").agg(F.sum("score_q").alias("score_q"))
     return agg.orderBy(F.desc("score_q"), F.asc("doc_id")).limit(TOPK)
@@ -366,25 +366,20 @@ def _cached_index(spark, sf_dir):
 
 
 def q_index_wand_topk(spark, sf_dir):
-    """The actual engine, DAAT path: BM25_OR_TERMS via block-max WAND.
-    Oracle = the same SQL as q_bm25_or_topk — rank-identity is the
-    whole point."""
+    """The actual engine: BM25_OR_TERMS via the per-shard top-k kernel
+    (the entry name predates the single kernel).  Oracle = the same SQL
+    as q_bm25_or_topk — rank-identity is the whole point."""
     from wikitfidf_spark.index.query import Query
 
     idx = _cached_index(spark, sf_dir)
-    out = idx.topk_batch([Query(0, BM25_OR_TERMS, "OR", TOPK)], strategy="wand")
+    out = idx.topk_batch([Query(0, BM25_OR_TERMS, "OR", TOPK)])
     return out.select("doc_id", "score_q")
 
 
 def q_index_taat_topk(spark, sf_dir):
-    """The engine's TAAT path (decode-once vectorized scoring) against
-    the identical SQL oracle — both physical strategies must be
-    rank-identical."""
-    from wikitfidf_spark.index.query import Query
-
-    idx = _cached_index(spark, sf_dir)
-    out = idx.topk_batch([Query(0, BM25_OR_TERMS, "OR", TOPK)], strategy="taat")
-    return out.select("doc_id", "score_q")
+    """The same engine call as q_index_wand_topk, registered under the
+    kernel's name against the identical SQL oracle."""
+    return q_index_wand_topk(spark, sf_dir)
 
 
 def q_index_wildcard_topk(spark, sf_dir):
@@ -524,8 +519,8 @@ def q_index_hist_batch(spark, sf_dir):
 
 
 def q_index_filtered_topk(spark, sf_dir):
-    """Metadata-filtered BM25 top-k through the ENGINE's cogrouped TAAT
-    path (allowed docmeta ids co-shuffled by shard, vectorized mask):
+    """Metadata-filtered BM25 top-k through the ENGINE's cogrouped
+    kernel (allowed docmeta ids co-shuffled by shard, vectorized mask):
     same terms as the unfiltered flagship, restricted to docs whose
     topic is 'en' — the filter+rank shape real search serving needs.
     Scores of surviving docs are identical to the unfiltered engine's
@@ -539,10 +534,9 @@ def q_index_filtered_topk(spark, sf_dir):
 
 
 def q_index_filtered_wand_topk(spark, sf_dir):
-    """Metadata-filtered BM25 top-k through the ENGINE's block-max WAND
-    path: the allowed docmeta ids cogroup with the posting shards and
-    WAND snaps its pivot targets to the next allowed doc — selective
-    filters ADD skip distance instead of costing a post-filter.  OR
+    """Metadata-filtered BM25 top-k through the ENGINE: the allowed
+    docmeta ids cogroup with the posting shards and mask each shard's
+    postings before its local cut — no post-filter over results.  OR
     mode over the flagship terms restricted to topic 'zh' (matching
     the registered oracle); the oracle checks rank AND score against
     the relational SQL formulation."""
@@ -550,9 +544,7 @@ def q_index_filtered_wand_topk(spark, sf_dir):
 
     idx = _cached_index(spark, sf_dir)
     out = idx.topk_batch(
-        [Query(0, BM25_OR_TERMS, "OR", TOPK)],
-        strategy="wand",
-        predicate="topic = 'zh'",
+        [Query(0, BM25_OR_TERMS, "OR", TOPK)], predicate="topic = 'zh'"
     )
     return out.select("doc_id", "score_q")
 
@@ -565,10 +557,10 @@ MLT_M = 8                                      # more-like-this query terms
 def q_index_mlt(spark, sf_dir):
     """More-like-this: the min-doc_id document's 8 strongest terms by
     reference TF-IDF (round4, ties term-asc) become a BM25 OR query
-    served by the engine with the source doc excluded via the filtered
-    WAND path.  Term extraction is a predicate-pushdown point lookup on
-    the doc-major tf artifact — the term-major postings are never
-    scanned for it."""
+    served by the engine with the source doc excluded inside the
+    per-shard kernel.  Term extraction is a predicate-pushdown point
+    lookup on the doc-major tf artifact — the term-major postings are
+    never scanned for it."""
     docs = _t(spark, sf_dir, "documents")
     src = int(docs.agg(F.min("doc_id")).collect()[0][0])
     idx = _cached_index(spark, sf_dir)
@@ -578,7 +570,7 @@ def q_index_mlt(spark, sf_dir):
 
 def q_index_snippets(spark, sf_dir):
     """Result-page snippet generation — the serving feature after
-    top-k: each WAND hit joined back to its source text and cut to the
+    top-k: each engine hit joined back to its source text and cut to the
     SNIPPET_WINDOW tokens starting SNIPPET_BEFORE before the earliest
     query-term occurrence.  Extraction is pure JVM codegen
     (regexp_extract_all / array_position / slice / array_join); the ≤k
@@ -624,19 +616,19 @@ def _cached_incremental_index(spark, sf_dir):
 
 
 def q_index_incremental_topk(spark, sf_dir):
-    """WAND top-k over an index assembled via the bounded-staleness
+    """Engine top-k over an index assembled via the bounded-staleness
     ingest path (base build + deferred-refresh delta + refresh); the
     oracle is the full-corpus BM25 SQL — convergence to exact global
     scores is the checked property."""
     from wikitfidf_spark.index.query import Query
 
     idx = _cached_incremental_index(spark, sf_dir)
-    out = idx.topk_batch([Query(0, BM25_OR_TERMS, "OR", TOPK)], strategy="wand")
+    out = idx.topk_batch([Query(0, BM25_OR_TERMS, "OR", TOPK)])
     return out.select("doc_id", "score_q")
 
 
 def q_index_merged_topk(spark, sf_dir):
-    """WAND top-k over an index assembled by ONE K-WAY MERGE of three
+    """Engine top-k over an index assembled by ONE K-WAY MERGE of three
     independently built per-partition indexes (doc_id % 3 splits the
     corpus) — the 100-TB build pattern: partition, build slices in
     parallel with zero coordination, fold every slice together in a
@@ -671,7 +663,7 @@ def q_index_merged_topk(spark, sf_dir):
         with open(done, "w") as f:
             f.write("ok")
     idx = InvertedIndex(spark, idx_dir)
-    out = idx.topk_batch([Query(0, BM25_OR_TERMS, "OR", TOPK)], strategy="wand")
+    out = idx.topk_batch([Query(0, BM25_OR_TERMS, "OR", TOPK)])
     return out.select("doc_id", "score_q")
 
 
@@ -679,7 +671,7 @@ DELETE_MOD = 10  # delete docs with doc_id % 10 == 0 (~10% of the corpus)
 
 
 def q_index_delete_topk(spark, sf_dir):
-    """WAND top-k after delete_documents: build over the full corpus,
+    """Engine top-k after delete_documents: build over the full corpus,
     tombstone ~10% of docs (doc_id % DELETE_MOD == 0 — deterministic in
     both engines), query; the oracle runs the same BM25 SQL over the
     corpus MINUS the deleted docs.  Exercises shard-scoped re-encode +
@@ -706,7 +698,7 @@ def q_index_delete_topk(spark, sf_dir):
         with open(done, "w") as f:
             f.write("ok")
     idx = InvertedIndex(spark, idx_dir)
-    out = idx.topk_batch([Query(0, BM25_OR_TERMS, "OR", TOPK)], strategy="wand")
+    out = idx.topk_batch([Query(0, BM25_OR_TERMS, "OR", TOPK)])
     return out.select("doc_id", "score_q")
 
 
@@ -803,17 +795,14 @@ BOOSTS = (1, 2, 4)                          # per-term boosts for index_boosted_
 
 
 def q_index_boosted_topk(spark, sf_dir):
-    """Per-term query boosts through the engine (WAND path): the
-    flagship terms weighted (1, 2, 4) — integer boosts scale each
-    term's quantized impacts AND its block-max upper bounds by the same
-    factor, so WAND's pruning stays admissible and scores stay exact
-    integers.  The weighted-field/query-weighting primitive."""
+    """Per-term query boosts through the engine: the flagship terms
+    weighted (1, 2, 4) — integer boosts scale each term's quantized
+    impacts, so scores stay exact integers.  The
+    weighted-field/query-weighting primitive."""
     from wikitfidf_spark.index.query import Query
 
     idx = _cached_index(spark, sf_dir)
-    out = idx.topk_batch(
-        [Query(0, BM25_OR_TERMS, "OR", TOPK, boosts=BOOSTS)], strategy="wand"
-    )
+    out = idx.topk_batch([Query(0, BM25_OR_TERMS, "OR", TOPK, boosts=BOOSTS)])
     return out.select("doc_id", "score_q")
 
 
@@ -826,9 +815,7 @@ def q_index_paged_topk(spark, sf_dir):
     from wikitfidf_spark.index.query import Query
 
     idx = _cached_index(spark, sf_dir)
-    out = idx.topk_batch(
-        [Query(0, BM25_OR_TERMS, "OR", TOPK, offset=PAGE_OFFSET)], strategy="taat"
-    )
+    out = idx.topk_batch([Query(0, BM25_OR_TERMS, "OR", TOPK, offset=PAGE_OFFSET)])
     return out.select("doc_id", "score_q", "rank")
 
 
@@ -845,9 +832,7 @@ def q_index_cursor_topk(spark, sf_dir):
     idx = _cached_index(spark, sf_dir)
     p1 = idx.topk(BM25_OR_TERMS, k=TOPK).orderBy("rank").collect()
     cursor = (p1[-1]["score_q"], p1[-1]["doc_id"])
-    out = idx.topk_batch(
-        [Query(0, BM25_OR_TERMS, "OR", TOPK, search_after=cursor)], strategy="wand"
-    )
+    out = idx.topk_batch([Query(0, BM25_OR_TERMS, "OR", TOPK, search_after=cursor)])
     return out.select("doc_id", "score_q", "rank")
 
 
@@ -861,9 +846,7 @@ def q_index_not_topk(spark, sf_dir):
     from wikitfidf_spark.index.query import Query
 
     idx = _cached_index(spark, sf_dir)
-    out = idx.topk_batch(
-        [Query(0, BM25_OR_TERMS, "OR", TOPK, exclude=NOT_TERMS)], strategy="wand"
-    )
+    out = idx.topk_batch([Query(0, BM25_OR_TERMS, "OR", TOPK, exclude=NOT_TERMS)])
     return out.select("doc_id", "score_q")
 
 
@@ -1255,8 +1238,8 @@ def q_rollup_orders(spark, sf_dir):
 #: restriction of a checked query, or one stage of a checked pipeline.
 FOLDED_QUERIES = frozenset({
     "tfidf_single_term",       # restriction of tfidf_topn_per_doc (same formula)
-    "index_taat_topk",         # second strategy, oracle identical to index_wand_topk
-    "index_filtered_topk",     # cogroup-mask strategy; WAND variant keeps the row
+    "index_taat_topk",         # same engine call, oracle identical to index_wand_topk
+    "index_filtered_topk",     # filtered engine call; index_filtered_wand_topk keeps the row
     "index_fuzzy_suggest",     # scan path; shares _SUGGEST_ORACLE with the indexed row
     "embedding_near_dup",      # exact all-pairs anchor of embedding_near_dup_lsh
     "minhash_candidates",      # the candidate stage inside jaccard_pairs' plan
@@ -2631,5 +2614,5 @@ def folded_oracle_sql() -> dict[str, str]:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: build the posting-list index over sf0.001 documents and
-    answer the hot+rare disjunctive BM25 top-k via block-max WAND."""
+    answer the hot+rare disjunctive BM25 top-k."""
     return q_index_wand_topk(spark, "/root/testdata/sf0.001")

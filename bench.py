@@ -7,7 +7,7 @@ JSON line: {"metric", "value" (total sec), "unit", "queries", "sf", ...}.
 Beyond the sf-dir queries it measures the engine's north-rule metrics on
 a deterministic synthetic code corpus (FIXTURES.md F1 bench scale):
 index-build wall time (+ postings/sec, skew ratio) and batched BM25
-top-k throughput (queries/sec; TAAT default strategy).  Scaling-efficiency
+top-k throughput (queries/sec).  Scaling-efficiency
 evidence (same job at two parallelism levels) lives in bench_scaling.py
 → BENCH.md.
 
@@ -102,7 +102,7 @@ def main() -> None:
     for name in HEADLINE:
         timings[name] = round(_st.median(rep_log[name]), 3)
 
-    # ---- north-rule metrics: index build + WAND q/s on the bench corpus
+    # ---- north-rule metrics: index build + top-k q/s on the bench corpus
     idx_dir = f"/tmp/wikitfidf_bench_idx_{n_docs}"
     shutil.rmtree(idx_dir, ignore_errors=True)
     corpus = make_code_files(spark, n_docs=n_docs, seed=42).cache()
@@ -236,7 +236,7 @@ def main() -> None:
 
     # ---- mixed serving workload (round-4 ask #4): 100 queries over 5
     # families — batched top-k, phrase, facets, dictionary suggest,
-    # more-like-this — so serving regressions in the non-WAND paths
+    # more-like-this — so serving regressions outside plain top-k
     # are visible, with the same warm-up/median/stability protocol.
     # Counts: 60 batched top-k + 10 each of the other four.  Every
     # family runs through its batch API (phrase_topk_batch /
@@ -266,13 +266,13 @@ def main() -> None:
     hot = _vocab(2000, 43)[:10]
     mlt_ids = [r["doc_id"] for r in
                idx.docmeta.select("doc_id").orderBy("doc_id").limit(10).collect()]
-    wand_qs = make_queries(60)
+    topk_qs = make_queries(60)
 
     def mixed_pass() -> dict[str, float]:
         fam: dict[str, float] = {}
         t0 = time.time()
-        idx.topk_batch(wand_qs).count()
-        fam["wand60"] = time.time() - t0
+        idx.topk_batch(topk_qs).count()
+        fam["topk60"] = time.time() - t0
         t0 = time.time()
         idx.phrase_topk_batch(
             [PhraseQuery(i, p, 10) for i, p in enumerate(phrases)]
@@ -305,7 +305,7 @@ def main() -> None:
     extras["mixed"] = {
         "families_sec": fam_med,
         "families_qps": {
-            k: round((60 if k == "wand60" else 10) / v, 1) for k, v in fam_med.items()
+            k: round((60 if k == "topk60" else 10) / v, 1) for k, v in fam_med.items()
         },
         "qps": round(100 / timings["mixed_100q"], 2),
         "pass_totals_sec": [round(tot1, 3), round(tot2, 3)],

@@ -306,7 +306,7 @@ No real multi-node cluster exists in this sandbox, so per driver
 instructions the two-cluster-size criterion is evidenced by running the
 SAME `spark-submit --py-files` job (tools/submit_job.py: deterministic
 {s['n_docs']}-doc code corpus -> posting-list index build -> {s['n_queries']}-query
-BM25 top-k batch, TAAT strategy) at two parallelism levels in fresh JVMs:
+BM25 top-k batch) at two parallelism levels in fresh JVMs:
 `local[{s['n_cores']}]` (N) vs `local[{s['n4_cores']}]` (4N).
 
 | level | build sec | postings/sec | query sec | queries/sec |

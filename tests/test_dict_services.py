@@ -450,18 +450,15 @@ def _py_not_topk(py_stats, terms, exclude, k, mode="OR"):
     return sorted(out.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
 
 
-@pytest.mark.parametrize("strategy", ["taat", "wand"])
 @pytest.mark.parametrize("mode", ["OR", "AND"])
-def test_not_queries_match_oracle(idx, py_stats, strategy, mode):
+def test_not_queries_match_oracle(idx, py_stats, mode):
     from wikitfidf_spark.index.query import Query
 
     terms, exclude = ["arg_ctx77", "arg_cfg"], ("arg_ctx",)
     want = _py_not_topk(py_stats, terms, exclude, 10, mode)
     got = [
         (r["doc_id"], r["score_q"])
-        for r in idx.topk_batch(
-            [Query(0, terms, mode, 10, exclude=exclude)], strategy=strategy
-        ).collect()
+        for r in idx.topk_batch([Query(0, terms, mode, 10, exclude=exclude)]).collect()
     ]
     assert got == want and len(got) > 0
 
@@ -503,22 +500,19 @@ def test_not_overlap_raises(idx):
 # ---------------- pagination (offset) ----------------
 
 
-@pytest.mark.parametrize("strategy", ["taat", "wand"])
-def test_pagination_pages_tile_the_ranking(idx, strategy):
+def test_pagination_pages_tile_the_ranking(idx):
     from wikitfidf_spark.index.query import Query
 
     terms = ["arg_ctx77", "arg_cfg"]
-    full = idx.topk_batch([Query(0, terms, "OR", 30)], strategy=strategy).collect()
+    full = idx.topk_batch([Query(0, terms, "OR", 30)]).collect()
     pages = []
     for off in (0, 10, 20):
-        pages += idx.topk_batch(
-            [Query(0, terms, "OR", 10, offset=off)], strategy=strategy
-        ).collect()
+        pages += idx.topk_batch([Query(0, terms, "OR", 10, offset=off)]).collect()
     tile = sorted((r["rank"], r["doc_id"], r["score_q"]) for r in pages)
     want = sorted((r["rank"], r["doc_id"], r["score_q"]) for r in full)
     assert tile == want and len(want) == 30
     # absolute ranks: page 2 starts at rank 11
-    p2 = idx.topk_batch([Query(0, terms, "OR", 10, offset=10)], strategy=strategy).collect()
+    p2 = idx.topk_batch([Query(0, terms, "OR", 10, offset=10)]).collect()
     assert min(r["rank"] for r in p2) == 11
 
 
@@ -532,38 +526,23 @@ def test_pagination_negative_offset_raises(idx):
 # ---------------- cursor pagination (search_after) ----------------
 
 
-@pytest.mark.parametrize("strategy", ["taat", "wand"])
-def test_search_after_tiles_like_offset(idx, strategy):
+def test_search_after_tiles_like_offset(idx):
     """Walking pages by cursor yields EXACTLY the offset path's pages
     (same docs, same scores; cursor ranks are page-relative)."""
     from wikitfidf_spark.index.query import Query
 
     terms = ["arg_ctx77", "arg_cfg"]
-    full = idx.topk_batch([Query(0, terms, "OR", 30)], strategy=strategy).collect()
+    full = idx.topk_batch([Query(0, terms, "OR", 30)]).collect()
     assert len(full) == 30
     by_rank = sorted(full, key=lambda r: r["rank"])
     cursor, walked = None, []
     for _ in range(3):
-        page = idx.topk_batch(
-            [Query(0, terms, "OR", 10, search_after=cursor)], strategy=strategy
-        ).collect()
+        page = idx.topk_batch([Query(0, terms, "OR", 10, search_after=cursor)]).collect()
         page = sorted(page, key=lambda r: r["rank"])
         assert [r["rank"] for r in page] == list(range(1, 11))  # page-relative
         walked += [(r["doc_id"], r["score_q"]) for r in page]
         cursor = (page[-1]["score_q"], page[-1]["doc_id"])
     assert walked == [(r["doc_id"], r["score_q"]) for r in by_rank]
-
-
-def test_search_after_cross_strategy_identical(idx):
-    from wikitfidf_spark.index.query import Query
-
-    terms = ["arg_ctx77", "arg_cfg"]
-    first = idx.topk(terms, k=5).collect()
-    cur = (first[-1]["score_q"], first[-1]["doc_id"])
-    a = idx.topk_batch([Query(0, terms, "OR", 5, search_after=cur)], strategy="taat").collect()
-    b = idx.topk_batch([Query(0, terms, "OR", 5, search_after=cur)], strategy="wand").collect()
-    key = lambda rows: sorted((r["rank"], r["doc_id"], r["score_q"]) for r in rows)
-    assert key(a) == key(b) and len(a) == 5
 
 
 def test_search_after_rejects_offset_combo(idx):
@@ -597,17 +576,14 @@ def _py_boosted_topk(py_stats, terms, boosts, k):
     return sorted(out.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
 
 
-@pytest.mark.parametrize("strategy", ["taat", "wand"])
-def test_boosted_topk_matches_oracle(idx, py_stats, strategy):
+def test_boosted_topk_matches_oracle(idx, py_stats):
     from wikitfidf_spark.index.query import Query
 
     terms, boosts = ["arg_ctx77", "arg_cfg"], (1, 3)
     want = _py_boosted_topk(py_stats, terms, boosts, 10)
     got = [
         (r["doc_id"], r["score_q"])
-        for r in idx.topk_batch(
-            [Query(0, terms, "OR", 10, boosts=boosts)], strategy=strategy
-        ).collect()
+        for r in idx.topk_batch([Query(0, terms, "OR", 10, boosts=boosts)]).collect()
     ]
     assert got == want and len(got) == 10
 
@@ -741,8 +717,7 @@ def test_snippets_empty_terms_raises(idx, corpus):
         idx.snippets(corpus, [], k=5)
 
 
-@pytest.mark.parametrize("strategy", ["taat", "wand"])
-def test_exclude_docs_per_query(idx, strategy):
+def test_exclude_docs_per_query(idx):
     """Query.exclude_docs drops exactly those doc ids from ONE query's
     result with ranks re-closed (the in-kernel mechanism more_like_this
     uses to exclude its source doc), while a sibling query in the same
@@ -751,14 +726,13 @@ def test_exclude_docs_per_query(idx, strategy):
 
     top = [r["term"] for r in idx.dictionary.orderBy(F.desc("df")).limit(1).collect()]
     base = sorted(
-        idx.topk_batch([Query(0, top, "OR", 6)], strategy=strategy).collect(),
+        idx.topk_batch([Query(0, top, "OR", 6)]).collect(),
         key=lambda r: r["rank"],
     )
     assert len(base) >= 3
     drop = (base[0]["doc_id"], base[2]["doc_id"])
     got = idx.topk_batch(
-        [Query(0, top, "OR", 4, exclude_docs=drop), Query(1, top, "OR", 3)],
-        strategy=strategy,
+        [Query(0, top, "OR", 4, exclude_docs=drop), Query(1, top, "OR", 3)]
     ).collect()
     q0 = sorted((r for r in got if r["query_id"] == 0), key=lambda r: r["rank"])
     q1 = sorted((r for r in got if r["query_id"] == 1), key=lambda r: r["rank"])
@@ -865,9 +839,8 @@ def _py_msm_topk(py_stats, terms, k, msm):
     return sorted(out.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
 
 
-@pytest.mark.parametrize("strategy", ["taat", "wand"])
 @pytest.mark.parametrize("msm", [2, 3])
-def test_min_should_match_matches_oracle(idx, py_stats, strategy, msm):
+def test_min_should_match_matches_oracle(idx, py_stats, msm):
     from wikitfidf_spark.index.query import Query
 
     # triple chosen so the fixture has docs at every match width
@@ -879,7 +852,7 @@ def test_min_should_match_matches_oracle(idx, py_stats, strategy, msm):
         (r["doc_id"], r["score_q"])
         for r in sorted(
             idx.topk_batch(
-                [Query(0, terms, "OR", 10, min_should_match=msm)], strategy=strategy
+                [Query(0, terms, "OR", 10, min_should_match=msm)]
             ).collect(),
             key=lambda r: r["rank"],
         )
@@ -887,16 +860,13 @@ def test_min_should_match_matches_oracle(idx, py_stats, strategy, msm):
     assert got == want
 
 
-@pytest.mark.parametrize("strategy", ["taat", "wand"])
-def test_msm_full_width_equals_and(idx, strategy):
+def test_msm_full_width_equals_and(idx):
     """msm == n_terms selects the AND doc set with identical scores."""
     from wikitfidf_spark.index.query import Query
 
     terms = ["arg_ctx77", "arg_cfg"]
-    via_msm = idx.topk_batch(
-        [Query(0, terms, "OR", 10, min_should_match=2)], strategy=strategy
-    ).collect()
-    via_and = idx.topk_batch([Query(0, terms, "AND", 10)], strategy=strategy).collect()
+    via_msm = idx.topk_batch([Query(0, terms, "OR", 10, min_should_match=2)]).collect()
+    via_and = idx.topk_batch([Query(0, terms, "AND", 10)]).collect()
     key = lambda rows: [(r["doc_id"], r["score_q"], r["rank"]) for r in sorted(rows, key=lambda r: r["rank"])]
     assert key(via_msm) == key(via_and)
 
@@ -1474,10 +1444,8 @@ def _rows_by_qid(rows):
     return out
 
 
-@pytest.mark.parametrize("n_queries,strategy", [
-    (2003, "taat"), (13, "taat"), (13, "wand"),
-])
-def test_topk_batch_any_size_equals_one_at_a_time(idx, n_queries, strategy):
+@pytest.mark.parametrize("n_queries", [2003, 13])
+def test_topk_batch_any_size_equals_one_at_a_time(idx, n_queries):
     """Per-query k and offset ride the kernel's output rows, for any
     batch size: a batch above the size where the global merge once
     switched from plan literals to a broadcast join (2000 queries) and
@@ -1491,7 +1459,7 @@ def test_topk_batch_any_size_equals_one_at_a_time(idx, n_queries, strategy):
     assert all(alone[:-1]) and not alone[-1]
     qids = [3 * i - 3000 for i in range(n_queries)]
     got = _rows_by_qid(idx.topk_batch(
-        [Query(q, **tpl[i % len(tpl)]) for i, q in enumerate(qids)], strategy=strategy,
+        [Query(q, **tpl[i % len(tpl)]) for i, q in enumerate(qids)]
     ).collect())
     for i, q in enumerate(qids):
         assert got.get(q, []) == alone[i % len(tpl)], (q, tpl[i % len(tpl)])
@@ -1506,11 +1474,11 @@ def test_more_like_this_batch_src_label_any_size(idx, n_sources):
     srcs = [ids[(i * 3) % len(ids)] for i in range(n_sources)]
     alone = {
         d: [(r["doc_id"], r["score_q"], r["rank"]) for r in sorted(
-            idx.more_like_this(d, m=6, k=4, strategy="taat").collect(),
+            idx.more_like_this(d, m=6, k=4).collect(),
             key=lambda r: r["rank"])]
         for d in ids
     }
-    batch = idx.more_like_this_batch(srcs, m=6, k=4, strategy="taat").collect()
+    batch = idx.more_like_this_batch(srcs, m=6, k=4).collect()
     assert all(r["src_doc_id"] == srcs[r["query_id"]] for r in batch)
     got = _rows_by_qid(batch)
     for qid, d in enumerate(srcs):

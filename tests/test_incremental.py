@@ -296,6 +296,46 @@ def test_stale_window_did_you_mean_keeps_delta_only_terms(spark, tmp_path):
     assert corrected is None and fixes == []  # the term is live — no correction
 
 
+def test_stale_window_significant_terms_uses_live_background(spark, tmp_path):
+    """significant_terms during a deferred-refresh window counts fg_df
+    over the live tf generations (delta docs included), so bg_df and N
+    must be live too: fg_df never exceeds bg_df, and every lift equals
+    (fg_df * N) / (bg_df * m) recomputed from pure-Python counts over
+    the live corpus."""
+    from collections import Counter
+
+    from wikitfidf_spark.tokenize import tokenize_py
+
+    docs = make_code_files(spark, n_docs=120, seed=42)
+    split = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(4)) == 0
+    d = str(tmp_path / "idx_sig_stale")
+    build_index(spark, docs.filter(~split), d, CFG, resume=False)
+    add_documents(spark, docs.filter(split), d, refresh_scores=False)
+    assert load_manifest(d)["stale_deltas"] == 1
+
+    tfs = {
+        r["doc_id"]: set(tokenize_py(r["content"]))
+        for r in docs.withColumn("doc_id", F.xxhash64("repo", "path", "commit"))
+        .select("doc_id", "content").collect()
+    }
+    n = len(tfs)
+    dfc = Counter(t for ts in tfs.values() for t in ts)
+    hot = sorted(dfc, key=lambda t: (-dfc[t], t))
+    panels = [(0, hot[:1]), (1, hot[5:7])]
+    idx = InvertedIndex(spark, d)
+    rows = idx.significant_terms_batch(panels, n=50, min_fg_df=1).collect()
+    assert rows
+    for qid, terms in panels:
+        match = [ts for ts in tfs.values() if ts & set(terms)]
+        fg = Counter(t for ts in match for t in ts)
+        got = [r for r in rows if r["query_id"] == qid]
+        assert got, qid
+        for r in got:
+            assert r["fg_df"] <= r["bg_df"], r
+            assert (r["fg_df"], r["bg_df"]) == (fg[r["term"]], dfc[r["term"]]), r
+            assert r["lift"] == (fg[r["term"]] * n) / (dfc[r["term"]] * len(match)), r
+
+
 def test_index_report_tracks_lifecycle(spark, tmp_path):
     """index_report (manifest+filesystem only, no Spark) reflects each
     lifecycle stage: fresh build -> deferred add (generation + stale

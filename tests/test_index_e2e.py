@@ -1,4 +1,4 @@
-"""Golden end-to-end: synthetic corpus → index build → WAND/relational
+"""Golden end-to-end: synthetic corpus → index build → engine/relational
 queries vs a transparent pure-Python BM25 oracle (SURVEY.md §5 c/d/e/f):
 rank-identity, degenerate TF-IDF mode, sha256 invariance, resume."""
 
@@ -86,27 +86,12 @@ def test_wand_rank_identity(spark, built, oracle):
         assert by_q.get(q.query_id, []) == _oracle_topk(oracle, q.terms, q.k, q.mode), q
 
 
-def test_taat_equals_wand(spark, built, oracle):
-    """Both physical strategies are exact: vectorized TAAT and
-    block-max WAND must return identical (doc, score, rank) sets."""
-    idx = InvertedIndex(spark, IDX_DIR)
-    _, _, dfc, _, _ = oracle
-    hot = sorted(dfc, key=lambda t: (-dfc[t], t))[:3]
-    qs = QUERIES + [Query(5, hot, "OR", 10)]
-    norm = lambda rows: sorted(
-        (r["query_id"], r["doc_id"], r["score_q"], r["rank"]) for r in rows
-    )
-    assert norm(idx.topk_batch(qs, strategy="taat").collect()) == norm(
-        idx.topk_batch(qs, strategy="wand").collect()
-    )
-
-
 def test_relational_equals_wand(spark, built, oracle):
     idx = InvertedIndex(spark, IDX_DIR)
     for q in QUERIES[:3]:
-        wand = [(r["doc_id"], r["score_q"]) for r in idx.topk(q.terms, q.k, q.mode).orderBy(F.desc("score_q"), "doc_id").collect()]
+        engine = [(r["doc_id"], r["score_q"]) for r in idx.topk(q.terms, q.k, q.mode).orderBy(F.desc("score_q"), "doc_id").collect()]
         rel = [(r["doc_id"], r["score_q"]) for r in idx.topk_relational(q.terms, q.k, q.mode).collect()]
-        assert wand == rel, q
+        assert engine == rel, q
 
 
 def test_filtered_topk_global_scores_restricted_candidates(spark, built, corpus, oracle):
@@ -139,9 +124,8 @@ def test_filtered_topk_global_scores_restricted_candidates(spark, built, corpus,
 
 
 def test_filtered_engine_paths_equal_relational(spark, built, oracle):
-    """All three filtered paths must agree: cogrouped TAAT (allowed ids
-    co-shuffled by shard, vectorized np.isin mask), cogrouped WAND
-    (pivot targets snapped to the next allowed doc), and the relational
+    """Both filtered paths must agree: the cogrouped kernel (allowed ids
+    co-shuffled by shard, vectorized np.isin mask) and the relational
     semi-join mirror — for every query and mode."""
     idx = InvertedIndex(spark, IDX_DIR)
     _, _, dfc, _, _ = oracle
@@ -153,16 +137,14 @@ def test_filtered_engine_paths_equal_relational(spark, built, oracle):
         (r["query_id"], r["doc_id"], r["score_q"]) for r in rows
     )
     taat = norm(idx.topk_batch(qs, predicate=pred).collect())
-    wand = norm(idx.topk_batch(qs, strategy="wand", predicate=pred).collect())
     rel = sorted(
         (q.query_id, r["doc_id"], r["score_q"])
         for q in qs
         for r in idx.topk_filtered(q.terms, q.k, q.mode, pred).collect()
     )
     assert taat == rel and len(taat) > 0
-    assert wand == rel
     # an unsatisfiable predicate must yield empty, not error
-    assert idx.topk_batch(qs[:1], strategy="wand", predicate="topic = 'nope'").count() == 0
+    assert idx.topk_batch(qs[:1], predicate="topic = 'nope'").count() == 0
 
 
 def test_degenerate_tfidf_mode(spark, built, oracle):
@@ -272,8 +254,6 @@ def test_invalid_query_args_raise(spark, built):
         idx.topk_batch([Query(0, ["x"], "and", 5)]).collect()
     with _pytest.raises(ValueError, match="k must be"):
         idx.topk_batch([Query(0, ["x"], "OR", 0)]).collect()
-    with _pytest.raises(ValueError, match="strategy"):
-        idx.topk_batch([Query(0, ["x"], "OR", 5)], strategy="vectorized")
     # an empty term list in a mixed batch would silently yield no rows
     # for that qid — indistinguishable from "no matches"
     with _pytest.raises(ValueError, match="at least one term"):
@@ -308,9 +288,8 @@ def test_snippets(spark, built, corpus, oracle):
         start = max(0, first - before)
         exp_snip = " ".join(toks[start:start + window])
         assert got[doc] == (score, rank, exp_snip), doc
-    # filtered + TAAT variant composes; window bound holds
-    f = idx.snippets(corpus, hot, 5, strategy="taat", predicate="topic = 'go'",
-                     window=4).collect()
+    # filtered variant composes; window bound holds
+    f = idx.snippets(corpus, hot, 5, predicate="topic = 'go'", window=4).collect()
     assert 0 < len(f) <= 5
     assert all(len(r["snippet"].split(" ")) <= 4 for r in f)
 
@@ -377,14 +356,13 @@ def test_more_like_this(spark, built, oracle):
 def test_randomized_feature_differential(spark, built, oracle, corpus):
     """End-to-end randomized differential over the FULL query feature
     surface (mode x exclude x boosts x offset x min_should_match
-    x batch-level metadata predicate):
-    TAAT and WAND must be
-    row-identical to each other AND to a transparent pure-Python BM25
-    oracle, per seeded batch.  Complements test_wand_randomized (kernel
-    level) by driving the whole serve path — shard cogroup, sub-shard
-    merge, membership-only exclude decode, pagination windows, and the
-    filtered cogroup paths (TAAT vectorized mask / WAND pivot
-    snapping; scores of surviving docs untouched by construction)."""
+    x batch-level metadata predicate): the engine must be
+    row-identical to a transparent pure-Python BM25 oracle, per seeded
+    batch.  Complements test_kernel_randomized (kernel level) by
+    driving the whole serve path — shard cogroup, sub-shard merge,
+    membership-only exclude decode, pagination windows, and the
+    filtered cogroup path (vectorized mask; scores of surviving docs
+    untouched by construction)."""
     import dataclasses
     import random
 
@@ -477,11 +455,8 @@ def test_randomized_feature_differential(spark, built, oracle, corpus):
                     q = dataclasses.replace(q, search_after=(cs, cd))
             queries.append(q)
         expected = sorted(r for q in queries for r in py_oracle(q, pred_lang))
-        for strategy in ("taat", "wand"):
-            got = sorted(
-                (r["query_id"], r["doc_id"], r["score_q"], r["rank"])
-                for r in idx.topk_batch(
-                    queries, strategy=strategy, predicate=predicate
-                ).collect()
-            )
-            assert got == expected, (batch_no, strategy, predicate)
+        got = sorted(
+            (r["query_id"], r["doc_id"], r["score_q"], r["rank"])
+            for r in idx.topk_batch(queries, predicate=predicate).collect()
+        )
+        assert got == expected, (batch_no, predicate)

@@ -11,6 +11,7 @@ per-row Python in JVM-path queries.
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -178,6 +179,52 @@ def test_batch_term_filter_pushes_into_every_scan(spark, tmp_path_factory):
     assert {c for _, c in scans} == {n}
     assert any(f.startswith("structure") for f, _ in scans), scans
     assert any(f.startswith("scores") for f, _ in scans), scans
+
+
+def _read_fields(e: str) -> dict[str, set[str]]:
+    """file name -> column names of that parquet scan's ReadSchema, for
+    every scan in a formatted plan."""
+    out, loc = {}, None
+    for line in e.splitlines():
+        if line.startswith("Location:"):
+            loc = os.path.basename(line.rstrip("]").split()[-1])
+        elif line.startswith("ReadSchema:"):
+            out[loc] = set(re.findall(r"(\w+):", line.split("struct<", 1)[1]))
+    return out
+
+
+def test_serving_scan_reads_only_decoded_columns(spark, tmp_path_factory):
+    """The top-k kernel decodes doc ids and impact scores only, so the
+    posting scans feeding it read exactly those columns plus the group
+    keys: no tf/doclen streams and no block-max sidecars cross the
+    exchange.  Checked on the fused combined scan and on the
+    structure + scores scans after an exact-mode add."""
+    from wikitfidf_spark.index.build import add_documents
+    from wikitfidf_spark.index.query import Query
+
+    keys = {"shard", "term", "sub_shard"}
+    struct = {"n_docs", "docs_payload", "block_firsts", "block_counts"}
+    d = str(tmp_path_factory.mktemp("idx_readschema"))
+    docs = make_code_files(spark, n_docs=330, seed=42)
+    split = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(11)) == 0
+    build_index(
+        spark, docs.filter(~split), d, IndexConfig(n_shards=2, n_salts=2), resume=False
+    )
+    queries = [Query(0, ["arg_cfg_get", "arg_ctx"]), Query(1, ["arg_cfg"], "AND")]
+    idx = InvertedIndex(spark, d)
+    assert idx.combined is not None
+    assert _read_fields(explain_str(idx.topk_batch(queries))) == {
+        "structure_g0.parquet": keys | struct | {"scores_payload"}
+    }
+
+    add_documents(spark, docs.filter(split), d)  # splits scores back out
+    idx2 = InvertedIndex(spark, d)
+    assert idx2.combined is None
+    scans = _read_fields(explain_str(idx2.topk_batch(queries)))
+    assert {f.split("_")[0] for f in scans} == {"structure", "scores"}, scans
+    for f, cols in scans.items():
+        assert cols == (keys | struct if f.startswith("structure")
+                        else keys | {"scores_payload"}), (f, cols)
 
 
 def test_score_refresh_plan_is_shuffle_free(spark, tmp_path_factory):

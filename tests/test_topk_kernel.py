@@ -1,13 +1,15 @@
-"""WAND algorithm unit tests against a brute-force scorer, exercising
-block boundaries, pruning, sub-shard lists, and tie-breaks."""
+"""Per-shard top-k kernel unit tests against a brute-force scorer,
+exercising block boundaries, sub-shard lists, min-should-match and
+tie-breaks."""
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from wikitfidf_spark.index import codec
-from wikitfidf_spark.index.query import wand_top_k
+from wikitfidf_spark.index.query import _taat_kernel
 
 
 def _make_row(docs, scores, block_size=4):
@@ -35,6 +37,18 @@ def _make_row(docs, scores, block_size=4):
     }
 
 
+def _kernel_top_k(rows, k, mode="OR", msm=0):
+    """Run ``_taat_kernel`` for one query over every term in ``rows``
+    (term -> fused posting rows, one per sub-shard list) and return
+    [(doc_id, score_q)] in rank order."""
+    pdf = pd.DataFrame([
+        {"shard": 0, "term": t, "sub_shard": i, **r}
+        for t, lists in rows.items() for i, r in enumerate(lists)
+    ])
+    out = _taat_kernel(pdf, [(0, list(rows), mode, k, (), None, None, msm, None)], None)
+    return list(zip(out["doc_id"].tolist(), out["score_q"].tolist()))
+
+
 def _brute(term_lists, k, mode, msm=0):
     # term_lists: term -> [(doc, score)]
     scores = {}
@@ -53,7 +67,7 @@ def _brute(term_lists, k, mode, msm=0):
 
 @pytest.mark.parametrize("mode", ["OR", "AND"])
 @pytest.mark.parametrize("seed", [0, 1, 2, 3])
-def test_wand_randomized(mode, seed):
+def test_kernel_randomized(mode, seed):
     rng = np.random.RandomState(seed)
     term_lists = {}
     rows = {}
@@ -65,15 +79,14 @@ def test_wand_randomized(mode, seed):
         term_lists[t] = list(zip(docs.tolist(), scores.tolist()))
         rows[t] = [_make_row(docs, scores, block_size=int(rng.choice([2, 4, 64])))]
     for k in (1, 5, 50):
-        assert wand_top_k(rows, k, mode) == _brute(term_lists, k, mode), (mode, seed, k)
+        assert _kernel_top_k(rows, k, mode) == _brute(term_lists, k, mode), (mode, seed, k)
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2, 3])
 @pytest.mark.parametrize("msm", [2, 3, 5])
-def test_wand_min_should_match_randomized(seed, msm):
+def test_kernel_min_should_match_randomized(seed, msm):
     """msm-constrained OR vs brute force: only docs matching >= msm
-    distinct terms qualify; scores stay full OR sums; heap pruning must
-    not drop a qualifying doc."""
+    distinct terms qualify; scores stay full OR sums."""
     rng = np.random.RandomState(100 + seed)
     term_lists = {}
     rows = {}
@@ -85,11 +98,11 @@ def test_wand_min_should_match_randomized(seed, msm):
         term_lists[t] = list(zip(docs.tolist(), scores.tolist()))
         rows[t] = [_make_row(docs, scores, block_size=int(rng.choice([2, 4, 64])))]
     for k in (1, 5, 50):
-        got = wand_top_k(rows, k, "OR", msm=msm)
+        got = _kernel_top_k(rows, k, "OR", msm=msm)
         assert got == _brute(term_lists, k, "OR", msm=msm), (seed, msm, k)
 
 
-def test_wand_msm_equals_and_at_full_width():
+def test_kernel_msm_equals_and_at_full_width():
     """msm == n_terms in OR mode selects exactly the AND doc set (and
     scores agree, since AND docs score over every term anyway)."""
     rng = np.random.RandomState(7)
@@ -99,10 +112,10 @@ def test_wand_msm_equals_and_at_full_width():
         scores = rng.randint(1, 10**6, size=120)
         term_lists[t] = list(zip(docs.tolist(), scores.tolist()))
         rows[t] = [_make_row(docs, scores)]
-    assert wand_top_k(rows, 25, "OR", msm=3) == wand_top_k(rows, 25, "AND")
+    assert _kernel_top_k(rows, 25, "OR", msm=3) == _kernel_top_k(rows, 25, "AND")
 
 
-def test_wand_sub_shards_merge():
+def test_kernel_sub_shards_merge():
     """A term split into disjoint sub-lists must behave as one list."""
     rng = np.random.RandomState(9)
     docs = np.sort(rng.choice(5000, size=300, replace=False)).astype(np.int64)
@@ -113,12 +126,12 @@ def test_wand_sub_shards_merge():
         _make_row(docs[1::2], scores[1::2]),
     ]}
     for k in (3, 20):
-        assert wand_top_k(whole, k, "OR") == wand_top_k(split, k, "OR")
+        assert _kernel_top_k(whole, k, "OR") == _kernel_top_k(split, k, "OR")
 
 
 def test_tie_break_smallest_doc_wins():
     rows = {"t": [_make_row([5, 1, 9], [7, 7, 7])]}
-    assert wand_top_k(rows, 2, "OR") == [(1, 7), (5, 7)]
+    assert _kernel_top_k(rows, 2, "OR") == [(1, 7), (5, 7)]
 
 
 def test_and_requires_all_terms():
@@ -126,7 +139,7 @@ def test_and_requires_all_terms():
         "a": [_make_row([1, 2, 3], [10, 10, 10])],
         "b": [_make_row([2, 3, 4], [5, 5, 5])],
     }
-    assert wand_top_k(rows, 10, "AND") == [(2, 15), (3, 15)]
+    assert _kernel_top_k(rows, 10, "AND") == [(2, 15), (3, 15)]
 
 
 def test_merged_lists_pairs_union_halves():

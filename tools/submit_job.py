@@ -1,7 +1,6 @@
 """spark-submit entry point for the north-rule job: synthetic code
-corpus → posting-list index build → batched BM25 top-k (the default
-TAAT strategy; pass queries through InvertedIndex.topk_batch's
-``strategy`` to exercise block-max WAND instead).
+corpus → posting-list index build → batched BM25 top-k through
+InvertedIndex.topk_batch.
 
 Run (the packaging the north_rule requires — no repo on the PYTHONPATH,
 the library ships as a --py-files zip):

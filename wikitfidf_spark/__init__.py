@@ -3,7 +3,7 @@
 Re-expresses the semantics of negapedia/wikitfidf (reference at
 /root/reference, Go + Cython, single node) as an idiomatic Spark
 DataFrame pipeline, generalized into a posting-list inverted index with
-BM25 block-max-WAND top-k querying per BASELINE.json:north_rule.
+batched BM25 top-k querying per BASELINE.json:north_rule.
 
 Layout
 ------
@@ -16,7 +16,7 @@ Layout
                    similarity, text stats, filters)
 - ``index/``       posting-list codec, sharded index build (resumable,
                    skew-salted), and the BM25 query engine (relational
-                   path + block-max WAND fast path)
+                   path + vectorized per-shard top-k kernel)
 """
 
 __version__ = "0.1.0"

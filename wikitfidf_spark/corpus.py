@@ -180,7 +180,7 @@ def with_sha256(docs: DataFrame, text_col: str = "content") -> DataFrame:
 
 def bench_query_mix(n: int = 100, seed: int = 17, vocab_terms: int = 2000, vocab_seed: int = 43) -> list:
     """Deterministic BM25 query mix over the synthetic vocabulary: a
-    head-heavy third (hot terms exercise block-max WAND pruning), rare
+    head-heavy third (hot terms with long posting lists), rare
     conjuncts, 1-3 term AND/OR.  Shared by bench.py and the
     spark-submit scaling job so all harnesses measure the same load."""
     from wikitfidf_spark.index.query import Query

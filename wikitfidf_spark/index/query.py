@@ -1,14 +1,14 @@
 """BM25 top-k query engine over the sharded posting-list index.
 
-Two physical strategies, both rank-identical (tests assert it):
+Two formulations, both rank-identical (tests assert it):
 
-- **wand** (the fast path): per-shard block-max WAND (Ding & Suel,
-  SIGIR 2011) inside ``applyInPandas`` — a bounded min-heap per shard,
-  lazy per-block posting decode with block skipping, integer quantized
-  scores (bit-deterministic, see operators/scoring.py).  Because the
-  index is document-partitioned, each shard's scores are complete, so
-  the global answer is a k-row merge (``orderBy ... limit k`` =
-  TakeOrderedAndProject over ≤ shards*k rows).
+- **serving**: one term-at-a-time (TAAT) kernel per shard inside
+  ``applyInPandas`` — decode each queried posting list once per
+  shard, then score every query of the batch vectorized in numpy
+  (np.unique + add.at + lexsort top-k) over integer quantized scores
+  (bit-deterministic, see operators/scoring.py).  Because the index is
+  document-partitioned, each shard's scores are complete, so the
+  global answer is a merge of ≤ shards*k rows per query.
 - **relational** (the oracle-checkable path): decode postings to
   (doc_id, term, tf, score_q) rows with ``mapInPandas``, then plain
   DataFrame agg + top-k.  Also serves the degenerate TF-IDF mode
@@ -25,7 +25,6 @@ rank-identity requirement.
 
 from __future__ import annotations
 
-import heapq
 import json
 import math
 import os
@@ -44,306 +43,11 @@ from . import codec
 from .build import load_manifest
 
 
-class _List:
-    """Cursor over one encoded posting list with lazy block decode."""
-
-    __slots__ = (
-        "firsts", "lasts", "counts", "maxes", "doc_offs", "score_offs",
-        "docs_payload", "scores_payload", "starts", "n", "ub",
-        "_blk", "_pos", "_docs", "_scores", "_exhausted",
-    )
-
-    def __init__(self, row) -> None:
-        self.firsts = np.asarray(row["block_firsts"], dtype=np.int64)
-        self.lasts = np.asarray(row["block_lasts"], dtype=np.int64)
-        self.counts = np.asarray(row["block_counts"], dtype=np.int64)
-        self.maxes = np.asarray(row["block_max_score"], dtype=np.int64)
-        self.doc_offs = np.asarray(row["block_doc_offs"], dtype=np.int64)
-        self.score_offs = np.asarray(row["block_score_offs"], dtype=np.int64)
-        self.docs_payload = row["docs_payload"]
-        self.scores_payload = row["scores_payload"]
-        self.n = int(row["n_docs"])
-        self.ub = int(self.maxes.max()) if len(self.maxes) else 0
-        self._blk = -1
-        self._pos = 0
-        self._docs = None
-        self._scores = None
-        self._exhausted = self.n == 0
-        if not self._exhausted:
-            self._load_block(0)
-
-    def _load_block(self, i: int) -> None:
-        self._blk = i
-        self._pos = 0
-        self._docs = codec.decode_block_docs(
-            self.docs_payload, self.firsts, self.counts, self.doc_offs, i
-        )
-        self._scores = None  # decoded only if the block is actually scored
-
-    @property
-    def exhausted(self) -> bool:
-        return self._exhausted
-
-    @property
-    def cur_doc(self) -> int:
-        return int(self._docs[self._pos])
-
-    @property
-    def cur_block_max(self) -> int:
-        return int(self.maxes[self._blk])
-
-    def cur_score(self) -> int:
-        if self._scores is None:
-            self._scores = codec.decode_block_stream(
-                self.scores_payload, self.counts, self.score_offs, self._blk
-            ).astype(np.int64)
-        return int(self._scores[self._pos])
-
-    def advance(self) -> None:
-        self._pos += 1
-        if self._pos >= len(self._docs):
-            if self._blk + 1 < len(self.counts):
-                self._load_block(self._blk + 1)
-            else:
-                self._exhausted = True
-
-    def next_geq(self, target: int) -> None:
-        """Advance to the first doc >= target (block skip via lasts)."""
-        if self._exhausted:
-            return
-        if target <= self.cur_doc:
-            return
-        if target > int(self.lasts[self._blk]):
-            nxt = int(np.searchsorted(self.lasts, target, side="left"))
-            if nxt >= len(self.lasts):
-                self._exhausted = True
-                return
-            self._load_block(nxt)
-        self._pos += int(np.searchsorted(self._docs[self._pos:], target, side="left"))
-        if self._pos >= len(self._docs):  # defensive; lasts bound should prevent
-            self.advance()
-
-    def block_boundary(self) -> int:
-        """Last doc of the current block (for block-max skip targets)."""
-        return int(self.lasts[self._blk])
-
-
-class _TermCursor:
-    """Groups the sub-shard lists of one term (disjoint doc sets).
-    ``boost`` scales this term's impacts (and, critically, its upper
-    bounds — WAND's pruning stays admissible because every bound is
-    scaled by the same integer)."""
-
-    __slots__ = ("lists", "ub", "boost")
-
-    def __init__(self, lists: list[_List], boost: int = 1) -> None:
-        self.lists = lists
-        self.boost = boost
-        self.ub = max((l.ub for l in lists), default=0) * boost
-
-    @property
-    def exhausted(self) -> bool:
-        return all(l.exhausted for l in self.lists)
-
-    @property
-    def cur_doc(self) -> int:
-        return min(l.cur_doc for l in self.lists if not l.exhausted)
-
-    def cur_block_max(self) -> int:
-        return max(l.cur_block_max for l in self.lists if not l.exhausted) * self.boost
-
-    def next_geq(self, target: int) -> None:
-        for l in self.lists:
-            if not l.exhausted:
-                l.next_geq(target)
-
-    def score_and_advance_if_at(self, doc: int) -> int | None:
-        """If positioned at ``doc``, return its score and advance."""
-        s = None
-        for l in self.lists:
-            if not l.exhausted and l.cur_doc == doc:
-                s = l.cur_score() * self.boost  # sub-lists disjoint: ≤1 hit
-                l.advance()
-        return s
-
-
-def wand_top_k(
-    term_rows: dict[str, list], k: int, mode: str = "OR",
-    allowed: "np.ndarray | None" = None,
-    excluded: "np.ndarray | None" = None,
-    boosts: dict | None = None,
-    msm: int = 0,
-    after: "tuple[int, int] | None" = None,
-) -> list[tuple[int, int]]:
-    """Block-max WAND (OR) / skipping intersection (AND) over one shard.
-
-    ``term_rows``: term -> list of encoded posting rows (sub-shards).
-    ``allowed``: optional SORTED int64 array of permitted doc_ids
-    (metadata filtering).  Block-max upper bounds hold for any doc
-    subset, so the pruning logic is unchanged — the filter only snaps
-    candidate targets forward to the next allowed doc, which ADDS skip
-    distance (selective filters make WAND faster, not slower).
-    ``excluded``: optional SORTED int64 array of forbidden doc_ids
-    (must_not terms, pre-decoded by the caller): a pivot/intersection
-    candidate in it is skipped past — scores of surviving docs are
-    untouched.  ``msm`` (OR mode only): a doc must match at least this
-    many DISTINCT query terms to qualify — score pruning stays
-    admissible (the upper bound still dominates every candidate's true
-    score; non-qualifying docs are simply never offered to the heap),
-    and once fewer than ``msm`` live cursors remain no future doc can
-    qualify, so evaluation stops early.  ``after``: cursor pagination —
-    only docs strictly after ``(score_q, doc_id)`` in (score desc,
-    doc asc) order are offered to the heap; score pruning stays
-    admissible (upper bounds dominate every candidate regardless of
-    the cursor, non-qualifying docs are simply never offered — same
-    argument as msm).  Returns [(doc_id, score_q)] sorted by
-    (score desc, doc asc), ≤ k.
-    """
-    if allowed is not None and not len(allowed):
-        return []
-    if excluded is not None and not len(excluded):
-        excluded = None
-
-    def is_excluded(doc: int) -> bool:
-        i = int(np.searchsorted(excluded, doc))
-        return i < len(excluded) and int(excluded[i]) == doc
-    cursors = [
-        _TermCursor(
-            [_List(r) for r in rows],
-            int(boosts.get(t, 1)) if boosts else 1,
-        )
-        for t, rows in term_rows.items()
-    ]
-    cursors = [c for c in cursors if not c.exhausted]
-    n_terms = len(term_rows)
-    heap: list[tuple[int, int]] = []  # (score_q, -doc_id) min-heap
-
-    def offer(doc: int, score: int) -> None:
-        if after is not None and (
-            score > after[0] or (score == after[0] and doc <= after[1])
-        ):
-            return  # at or before the cursor — belongs to an earlier page
-        item = (score, -doc)
-        if len(heap) < k:
-            heapq.heappush(heap, item)
-        elif item > heap[0]:
-            heapq.heapreplace(heap, item)
-
-    def next_allowed(doc: int) -> int | None:
-        """Smallest allowed doc >= ``doc`` (None when the filter is
-        exhausted — no future doc can match)."""
-        i = int(np.searchsorted(allowed, doc))
-        return int(allowed[i]) if i < len(allowed) else None
-
-    if mode == "AND":
-        if len(cursors) < n_terms or n_terms == 0:
-            return []  # some term has no postings in this shard -> no doc can match
-        while all(not c.exhausted for c in cursors):
-            target = max(c.cur_doc for c in cursors)
-            if allowed is not None:
-                # snap to the next allowed doc: any candidate the
-                # intersection lands on is in the filter by construction
-                target_a = next_allowed(target)
-                if target_a is None:
-                    break
-                target = target_a
-            for c in cursors:
-                c.next_geq(target)
-            if any(c.exhausted for c in cursors):
-                break
-            if all(c.cur_doc == target for c in cursors):
-                if excluded is not None and is_excluded(target):
-                    for c in cursors:
-                        c.next_geq(target + 1)
-                    continue
-                total = 0
-                for c in cursors:
-                    s = c.score_and_advance_if_at(target)
-                    total += s or 0
-                offer(target, total)
-        out = sorted(heap, key=lambda t: (-t[0], -t[1]))
-        return [(-d, s) for s, d in out]
-
-    # ---- OR: block-max WAND (Ding & Suel 2011)
-    while True:
-        live = [c for c in cursors if not c.exhausted]
-        if not live or (msm and len(live) < msm):
-            break
-        live.sort(key=lambda c: c.cur_doc)
-        theta = heap[0][0] if len(heap) >= k else 0
-        full = len(heap) >= k
-        acc = 0
-        pivot_idx = -1
-        for i, c in enumerate(live):
-            acc += c.ub
-            if not full or acc >= theta:
-                pivot_idx = i
-                break
-        if pivot_idx < 0:
-            break  # sum of all upper bounds can't reach theta
-        pivot_doc = live[pivot_idx].cur_doc
-        # extend the pivot across lists tied at pivot_doc: they all
-        # contribute to its score and must join the block-UB check
-        while pivot_idx + 1 < len(live) and live[pivot_idx + 1].cur_doc == pivot_doc:
-            pivot_idx += 1
-        if live[0].cur_doc == pivot_doc:
-            if allowed is not None:
-                na = next_allowed(pivot_doc)
-                if na is None:
-                    break  # docs only grow: nothing allowed remains
-                if na != pivot_doc:
-                    # pivot fails the filter — jump every list at or
-                    # before it straight to the next allowed doc
-                    for c in live[: pivot_idx + 1]:
-                        c.next_geq(na)
-                    continue
-            if excluded is not None and is_excluded(pivot_doc):
-                for c in live[: pivot_idx + 1]:
-                    c.next_geq(pivot_doc + 1)
-                continue
-            if full:
-                # block-max refinement over every list at pivot_doc
-                block_ub = sum(c.cur_block_max() for c in live[: pivot_idx + 1])
-                if block_ub < theta:
-                    # pivot_doc (and everything up to the shallowest
-                    # block boundary, capped by the next list's cursor,
-                    # which only lists 0..pivot can contain) can't win
-                    boundary = min(
-                        l.block_boundary()
-                        for c in live[: pivot_idx + 1]
-                        for l in c.lists
-                        if not l.exhausted
-                    )
-                    d_next = boundary + 1
-                    if pivot_idx + 1 < len(live):
-                        d_next = min(d_next, live[pivot_idx + 1].cur_doc)
-                    d_next = max(d_next, pivot_doc + 1)  # always progress
-                    for c in live[: pivot_idx + 1]:
-                        c.next_geq(d_next)
-                    continue
-            total = 0
-            matched = 0
-            for c in live[: pivot_idx + 1]:
-                s = c.score_and_advance_if_at(pivot_doc)
-                if s is not None:
-                    matched += 1
-                    total += s
-            if not msm or matched >= msm:
-                offer(pivot_doc, total)
-        else:
-            for c in live[:pivot_idx]:
-                c.next_geq(pivot_doc)
-    out = sorted(heap, key=lambda t: (-t[0], -t[1]))
-    return [(-d, s) for s, d in out]
-
-
 #: structure-half vs score-half column split for the unioned
-#: two-file scan (the fused combined file carries all of them)
-_STRUCT_COLS = (
-    "n_docs", "docs_payload",
-    "block_firsts", "block_lasts", "block_counts", "block_doc_offs",
-)
-_SCORE_COLS = ("scores_payload", "block_max_score", "block_score_offs")
+#: two-file scan (the fused combined file carries all of them): the
+#: columns :func:`codec.decode_docs_scores` reads, and nothing more
+_STRUCT_COLS = ("n_docs", "docs_payload", "block_firsts", "block_counts")
+_SCORE_COLS = ("scores_payload",)
 
 
 def _merged_lists(pdf: pd.DataFrame) -> list[dict]:
@@ -478,9 +182,8 @@ def _decode_shard(
     and pass each query's mask to :func:`_taat_eval` instead, so a
     term shared by many queries is decoded exactly once per shard.
     ``membership_only`` terms (exclude-only: never scored by any query
-    in the batch) skip the score varint stream entirely — same reason
-    the WAND path uses the membership-only decode for its must_not
-    masks; their entries carry ``scores=None``."""
+    in the batch) skip the score varint stream entirely: a must_not
+    mask needs doc ids only.  Their entries carry ``scores=None``."""
     decoded: dict[str, list[tuple[np.ndarray, np.ndarray]]] = {}
     for r in _merged_lists(pdf):
         if membership_only and r["term"] in membership_only:
@@ -701,40 +404,30 @@ class InvertedIndex:
             *[os.path.join(index_dir, d) for d in p["docmeta"]]
         )
 
-    # ---------- batched top-k (TAAT default / WAND) ----------
+    # ---------- batched top-k ----------
 
     def topk_batch(
         self,
         queries: Sequence[Query],
-        strategy: str = "taat",
         predicate: str | None = None,
     ) -> DataFrame:
         """One Spark job for all queries → (query_id, doc_id, score_q,
         score, rank); the global merge is a window top-k over
-        ≤ n_shards*k rows per query.  Both strategies are exact and
-        rank-identical (integer score sums, (score desc, doc asc) ties):
-
-        - "taat" (default): decode every queried posting list ONCE per
-          shard, then score each query vectorized (np.unique + add.at +
-          lexsort).  Batched query mixes share hot terms, so
-          decode-once amortizes across the batch; all inner work is
-          numpy (term-at-a-time evaluation).
-        - "wand": document-at-a-time block-max WAND with lazy block
-          decode — fewer decoded blocks per query, Python-loop
-          constant; wins for few queries over very long lists.
+        ≤ n_shards*k rows per query.  Each shard decodes every queried
+        posting list ONCE, then scores each query vectorized
+        (np.unique + add.at + lexsort; term-at-a-time evaluation).
+        Batched query mixes share hot terms, so decode-once amortizes
+        across the batch.  Exact: integer score sums, (score desc,
+        doc asc) ties.
 
         ``predicate``: a SQL expression over docmeta columns
         restricting every query in the batch to matching docs.  The
         allowed ids are COGROUPED with the posting rows on shard
         (docmeta records each doc's shard, so the filter ids co-shuffle
         with exactly the postings that can contain them — no broadcast,
-        no O(corpus) join).  TAAT applies them as a vectorized mask
-        before the per-shard cut; WAND snaps its pivot targets to the
-        next allowed doc (selective filters ADD skip distance).  Scores
-        of surviving docs are untouched either way.
+        no O(corpus) join) and applied as a vectorized mask before the
+        per-shard cut.  Scores of surviving docs are untouched.
         """
-        if strategy not in ("taat", "wand"):
-            raise ValueError(f"unknown strategy {strategy!r}: use 'taat' or 'wand'")
         _check_unique_qids(q.query_id for q in queries)
         for q in queries:
             if not q.terms:
@@ -812,53 +505,11 @@ class InvertedIndex:
         # matched per (term, sub_shard) inside the per-shard group:
         # filters still push into both parquet scans, the one shuffle on
         # shard is unchanged, and the broadcast-build + join-probe cost
-        # the join paid per batch disappears.  tfs/dls streams are
-        # projected away BEFORE the shuffle — the scorers never read
-        # them (~40% less bytes moved).
+        # the join paid per batch disappears.  Only the columns the
+        # kernel decodes are scanned: tfs/dls streams and block-max
+        # sidecars are projected away BEFORE the shuffle.
         rows = self._posting_rows(all_terms)
         label = _k_off_labeler({q.query_id: (q.k, q.offset) for q in queries})
-
-        def _wand_body(pdf: pd.DataFrame, allowed_u: "np.ndarray | None") -> pd.DataFrame:
-            # one group = one doc-partitioned shard -> scores complete here
-            by_term: dict[str, list] = {}
-            for r in _merged_lists(pdf):
-                by_term.setdefault(r["term"], []).append(r)
-            excl_cache: dict[tuple, "np.ndarray | None"] = {}
-
-            def excl_docs(exclude: tuple) -> "np.ndarray | None":
-                if exclude not in excl_cache:
-                    parts = [
-                        codec.decode_doc_ids(r)  # membership only — no score decode
-                        for t in exclude if t in by_term for r in by_term[t]
-                    ]
-                    excl_cache[exclude] = (
-                        np.unique(np.concatenate(parts)) if parts else None
-                    )
-                return excl_cache[exclude]
-
-            out = []
-            for qid, terms, mode, k, exclude, boosts, excl_doc_ids, msm, after in qspec:
-                rows_q = {t: by_term[t] for t in terms if t in by_term}
-                if not rows_q:
-                    continue
-                if mode == "AND" and len(rows_q) < len(set(terms)):
-                    continue
-                if msm and len(rows_q) < msm:
-                    continue  # a doc here can match at most len(rows_q) terms
-                excluded = excl_docs(exclude) if exclude else None
-                if excl_doc_ids is not None:
-                    excluded = (
-                        excl_doc_ids if excluded is None
-                        else np.union1d(excluded, excl_doc_ids)
-                    )
-                for doc, score in wand_top_k(
-                    rows_q, k, mode, allowed_u, excluded, boosts, msm, after
-                ):
-                    out.append((qid, doc, score))
-            return label(pd.DataFrame(out, columns=["query_id", "doc_id", "score_q"]))
-
-        def per_shard_wand(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            return _wand_body(pdf, None)
 
         def per_shard_taat(key, pdf: pd.DataFrame) -> pd.DataFrame:
             return label(_taat_kernel(pdf, qspec, None))
@@ -869,20 +520,15 @@ class InvertedIndex:
         def per_shard_taat_filtered(key, pdf: pd.DataFrame, apdf: pd.DataFrame) -> pd.DataFrame:
             return label(_taat_kernel(pdf, qspec, np.unique(apdf["doc_id"].to_numpy())))
 
-        def per_shard_wand_filtered(key, pdf: pd.DataFrame, apdf: pd.DataFrame) -> pd.DataFrame:
-            return _wand_body(pdf, np.unique(apdf["doc_id"].to_numpy()))
-
         if predicate is not None:
             allowed = self.docmeta.filter(predicate).select("shard", "doc_id")
-            fn = per_shard_taat_filtered if strategy == "taat" else per_shard_wand_filtered
             local = (
                 rows.groupBy("shard")
                 .cogroup(allowed.groupBy("shard"))
-                .applyInPandas(fn, _LOCAL_SCHEMA)
+                .applyInPandas(per_shard_taat_filtered, _LOCAL_SCHEMA)
             )
         else:
-            per_shard = per_shard_taat if strategy == "taat" else per_shard_wand
-            local = rows.groupBy("shard").applyInPandas(per_shard, _LOCAL_SCHEMA)
+            local = rows.groupBy("shard").applyInPandas(per_shard_taat, _LOCAL_SCHEMA)
         return self._rank_and_limit(local)
 
     def topk(
@@ -915,7 +561,6 @@ class InvertedIndex:
         text: str,
         k: int = 10,
         mode: str = "OR",
-        strategy: str = "taat",
         min_should_match: int = 0,
     ) -> DataFrame:
         """Free-text top-k: ``analyze`` the query through the index's
@@ -935,7 +580,6 @@ class InvertedIndex:
             return self._empty_result().drop("query_id")
         return self.topk_batch(
             [Query(0, terms, mode, k, min_should_match=min_should_match)],
-            strategy=strategy,
         ).drop("query_id")
 
     def analyze_ordered(self, text: str) -> list[str]:
@@ -967,22 +611,17 @@ class InvertedIndex:
         """Term-pruned posting rows for the per-shard scorers: ONE
         combined-file scan in the fused state, else structure+scores
         scans unioned with null padding (matched back up per
-        (term, sub_shard) by _merged_lists inside the shard group)."""
+        (term, sub_shard) by _merged_lists inside the shard group).
+        Only the key columns and the ones
+        :func:`codec.decode_docs_scores` reads are projected."""
         term_filter = _in_values("term", all_terms)
+        keys = ["shard", "term", "sub_shard"]
         if self.combined is not None:
             return self.combined.filter(term_filter).select(
-                "shard", "term", "sub_shard", "n_docs", "docs_payload",
-                "block_firsts", "block_lasts", "block_counts", "block_doc_offs",
-                "scores_payload", "block_max_score", "block_score_offs",
+                *keys, *_STRUCT_COLS, *_SCORE_COLS
             )
-        s_rows = self.structure.filter(term_filter).select(
-            "shard", "term", "sub_shard", "n_docs", "docs_payload",
-            "block_firsts", "block_lasts", "block_counts", "block_doc_offs",
-        )
-        c_rows = self.scores.filter(term_filter).select(
-            "shard", "term", "sub_shard",
-            "scores_payload", "block_max_score", "block_score_offs",
-        )
+        s_rows = self.structure.filter(term_filter).select(*keys, *_STRUCT_COLS)
+        c_rows = self.scores.filter(term_filter).select(*keys, *_SCORE_COLS)
         return s_rows.unionByName(c_rows, allowMissingColumns=True)
 
     @staticmethod
@@ -1108,14 +747,13 @@ class InvertedIndex:
         before: int = 3,
         text_col: str = "content",
         id_col: str = "doc_id",
-        strategy: str = "wand",
         predicate: str | None = None,
     ) -> DataFrame:
-        """Result-page snippets: BM25 top-k (any engine strategy, with
-        optional metadata ``predicate``), each hit joined back to its
-        source text and cut to a deterministic token window — the
-        ``window`` tokens starting ``before`` tokens ahead of the
-        EARLIEST occurrence of any query term (1-clamped).
+        """Result-page snippets: BM25 top-k (with optional metadata
+        ``predicate``), each hit joined back to its source text and cut
+        to a deterministic token window — the ``window`` tokens
+        starting ``before`` tokens ahead of the EARLIEST occurrence of
+        any query term (1-clamped).
 
         The extraction is entirely JVM-side codegen (tokenize =
         regexp_extract_all, locate = array_position, cut = slice +
@@ -1138,7 +776,6 @@ class InvertedIndex:
             before=before,
             text_col=text_col,
             id_col=id_col,
-            strategy=strategy,
             predicate=predicate,
         ).drop("query_id")
 
@@ -1150,7 +787,6 @@ class InvertedIndex:
         before: int = 3,
         text_col: str = "content",
         id_col: str = "doc_id",
-        strategy: str = "wand",
         predicate: str | None = None,
     ) -> DataFrame:
         """Result-page snippets for a QUERY batch in one job →
@@ -1177,7 +813,7 @@ class InvertedIndex:
                     "declares no natural-key id_cols to derive it from"
                 )
             docs = docs.withColumn(id_col, F.xxhash64(*cfg.id_cols))
-        hits = self.topk_batch(queries, strategy=strategy, predicate=predicate).select(
+        hits = self.topk_batch(queries, predicate=predicate).select(
             "query_id", "doc_id", "score_q", "rank"
         )
         qt = self.spark.createDataFrame(
@@ -1210,7 +846,6 @@ class InvertedIndex:
         doc_id: int,
         m: int = 8,
         k: int = 10,
-        strategy: str = "wand",
         predicate: str | None = None,
     ) -> DataFrame:
         """Find documents similar to ``doc_id``: extract its ``m``
@@ -1229,9 +864,7 @@ class InvertedIndex:
         driver-side objects by definition), then the standard batched
         engine serves the top-k."""
         return (
-            self.more_like_this_batch(
-                [doc_id], m=m, k=k, strategy=strategy, predicate=predicate
-            )
+            self.more_like_this_batch([doc_id], m=m, k=k, predicate=predicate)
             .drop("query_id", "src_doc_id")
         )
 
@@ -1240,7 +873,6 @@ class InvertedIndex:
         doc_ids: Sequence[int],
         m: int = 8,
         k: int = 10,
-        strategy: str = "wand",
         predicate: str | None = None,
     ) -> DataFrame:
         """More-like-this for a batch of source docs in ONE pipeline →
@@ -1309,7 +941,7 @@ class InvertedIndex:
                 # topk_batch's ranks are already final — no k+1 ask, no
                 # second rank window over the served rows
                 queries.append(Query(i, terms, "OR", k, exclude_docs=(d,)))
-        res = self.topk_batch(queries, strategy=strategy, predicate=predicate)
+        res = self.topk_batch(queries, predicate=predicate)
         # query ids are input positions 0..n-1: the source label is one
         # parsed array lookup, a projection whatever the batch size
         src = F.expr(
@@ -1560,9 +1192,10 @@ class InvertedIndex:
         to the match set → fg_df per term; the (match-vocab-sized) fg
         table joins the dictionary for bg_df; the match count rides a
         broadcast one-row agg, never a collect.  During a bounded-
-        staleness window bg_df falls back to structure-derived live df
-        (same guard as more_like_this) so delta-only terms stay
-        scored.  Delegates to :meth:`significant_terms_batch` with
+        staleness window the foreground counts live docs (delta
+        generations included), so bg_df is the structure-derived live
+        df and N the live doc count: both sides are measured on the
+        same corpus snapshot and ``fg_df <= bg_df`` holds.  Delegates to :meth:`significant_terms_batch` with
         one panel — one code path for the lift semantics."""
         if not list(terms):
             raise ValueError("needs at least one term")
@@ -1616,9 +1249,17 @@ class InvertedIndex:
                 "left_anti",
             )
         )
-        bg = self._join_term_df(fg, "bg_df")
+        if int(self.manifest.get("stale_deltas", 0)) > 0:
+            # the epoch dictionary df and total_docs lag the live tf
+            # generations fg_df counts over
+            live = self.structure.groupBy("term").agg(F.sum("n_docs").alias("bg_df"))
+            bg = fg.join(F.broadcast(live), "term")
+            n_docs = int(self.manifest["metrics"]["live_total_docs"])
+        else:
+            bg = self._join_term_df(fg, "bg_df")
+            n_docs = self.n_docs
         m_df = match.groupBy("query_id").agg(F.count(F.lit(1)).alias("m_cnt"))
-        lift = (F.col("fg_df").cast("double") * F.lit(float(self.n_docs))) / (
+        lift = (F.col("fg_df").cast("double") * F.lit(float(n_docs))) / (
             F.col("bg_df").cast("double") * F.col("m_cnt").cast("double")
         )
         w = Window.partitionBy("query_id").orderBy(
@@ -1637,7 +1278,6 @@ class InvertedIndex:
         self,
         queries: Sequence[Query],
         qrels: DataFrame,
-        strategy: str = "taat",
     ) -> DataFrame:
         """Search-quality evaluation (Elasticsearch ``_rank_eval``):
         serve the query batch, score each ranking against a relevance-
@@ -1657,9 +1297,7 @@ class InvertedIndex:
         (benchmark-sized) qrels broadcast-join the ≤ Σk hit rows;
         per-query metrics are one partial agg.  Queries absent from
         ``qrels`` produce no row (nothing to grade against)."""
-        hits = self.topk_batch(queries, strategy=strategy).select(
-            "query_id", "doc_id", "rank"
-        )
+        hits = self.topk_batch(queries).select("query_id", "doc_id", "rank")
         kdf = self.spark.createDataFrame(
             [(int(q.query_id), int(q.k)) for q in queries], "query_id int, k int"
         )
@@ -1698,7 +1336,6 @@ class InvertedIndex:
         text: str,
         k: int = 10,
         mode: str = "OR",
-        strategy: str = "taat",
         max_expansions: int = 32,
         slop: int = 0,
     ) -> DataFrame:
@@ -1767,7 +1404,6 @@ class InvertedIndex:
             return self._empty_result().drop("query_id")
         return self.topk_batch(
             [Query(0, terms, mode, k, exclude=tuple(exclude))],
-            strategy=strategy,
         ).drop("query_id")
 
     def did_you_mean(
@@ -2187,7 +1823,6 @@ class InvertedIndex:
         *,
         id_col: str = "vec_id",
         vec_col: str = "embedding",
-        strategy: str = "taat",
     ) -> DataFrame:
         """Hybrid retrieval with reciprocal-rank fusion: BM25 top-``m``
         candidates from the index, joined to their embeddings and
@@ -2212,7 +1847,7 @@ class InvertedIndex:
         qn2 = int(np.floor(q * q * DOT_QUANT + 0.5).astype(np.int64).sum())
         if qn2 <= 0:
             raise ValueError("query_vec must be non-zero")
-        cand = self.topk_batch([Query(0, list(terms), "OR", m)], strategy=strategy).select(
+        cand = self.topk_batch([Query(0, list(terms), "OR", m)]).select(
             "doc_id",
             F.col("score_q").alias("bm25_q"),
             F.col("rank").alias("rank_bm25"),
@@ -2284,7 +1919,6 @@ class InvertedIndex:
         *,
         id_col: str = "vec_id",
         vec_col: str = "embedding",
-        strategy: str = "taat",
     ) -> DataFrame:
         """Hybrid RRF retrieval for a batch of (query_id, terms,
         query_vec) queries in ONE pipeline → (query_id, doc_id, bm25_q,
@@ -2318,7 +1952,6 @@ class InvertedIndex:
             qnorm[qid] = math.sqrt(float(qn2))
         cand = self.topk_batch(
             [Query(qid, terms, "OR", m) for qid, terms, _ in queries],
-            strategy=strategy,
         ).select(
             "query_id",
             "doc_id",
@@ -2413,8 +2046,8 @@ class InvertedIndex:
 
     def decoded_docs(self, terms: Sequence[str] | None = None) -> DataFrame:
         """(term, doc_id) membership-only decode: skips the tf AND
-        score varint streams entirely (the codec shortcut the WAND
-        must_not masks use) and — in the un-fused state — never touches
+        score varint streams entirely (the codec shortcut the must_not
+        masks use) and — in the un-fused state — never touches
         the scores artifact at all: the structure side alone carries
         doc membership.  The facet/histogram/stats match sets only
         need doc ids, and the Python-side varint decode IS the
@@ -2439,9 +2072,10 @@ class InvertedIndex:
     def topk_relational(
         self, terms: Sequence[str], k: int = 10, mode: str = "OR"
     ) -> DataFrame:
-        """Same answer as WAND via plain DataFrame ops (the correctness
-        mirror; also the ANSI-SQL-expressible formulation).  Degenerate
-        unfiltered case of :meth:`topk_filtered` — one scoring body."""
+        """Same answer as :meth:`topk_batch` via plain DataFrame ops
+        (the correctness mirror; also the ANSI-SQL-expressible
+        formulation).  Degenerate unfiltered case of
+        :meth:`topk_filtered` — one scoring body."""
         return self.topk_filtered(terms, k, mode, "true")
 
     def topk_filtered(

@@ -21,8 +21,8 @@ and float addition is order-dependent — a distributed sum is not
 rank-stable.  We therefore quantize each per-term score to an int64
 (``floor(score*1e6 + 0.5)``) *before* summing; integer addition is
 associative, so document scores are bit-identical across Spark, DuckDB,
-the pure-Python oracle, and the WAND fast path, at any parallelism.
-This is the impact-ordered-index idea from the IR literature applied as
+the pure-Python oracle, and the per-shard top-k kernel, at any
+parallelism.  This is the impact-ordered-index idea from the IR literature applied as
 a determinism device.
 """
 
