@@ -21,6 +21,11 @@ from wikitfidf_spark.tokenize import tokenize_py
 
 IDX_DIR = "/tmp/wikitfidf_test_idx_dictsvc"
 
+# The serving kernel each query-feature oracle test runs, kept as the
+# last part of the test id. Term-at-a-time is the only kernel since the
+# document-at-a-time WAND path was removed.
+serving_kernels = pytest.mark.parametrize("kernel", ["taat"])
+
 
 @pytest.fixture(scope="module")
 def idx(spark, corpus):
@@ -450,8 +455,9 @@ def _py_not_topk(py_stats, terms, exclude, k, mode="OR"):
     return sorted(out.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
 
 
+@serving_kernels
 @pytest.mark.parametrize("mode", ["OR", "AND"])
-def test_not_queries_match_oracle(idx, py_stats, mode):
+def test_not_queries_match_oracle(idx, py_stats, kernel, mode):
     from wikitfidf_spark.index.query import Query
 
     terms, exclude = ["arg_ctx77", "arg_cfg"], ("arg_ctx",)
@@ -500,7 +506,8 @@ def test_not_overlap_raises(idx):
 # ---------------- pagination (offset) ----------------
 
 
-def test_pagination_pages_tile_the_ranking(idx):
+@serving_kernels
+def test_pagination_pages_tile_the_ranking(idx, kernel):
     from wikitfidf_spark.index.query import Query
 
     terms = ["arg_ctx77", "arg_cfg"]
@@ -526,7 +533,8 @@ def test_pagination_negative_offset_raises(idx):
 # ---------------- cursor pagination (search_after) ----------------
 
 
-def test_search_after_tiles_like_offset(idx):
+@serving_kernels
+def test_search_after_tiles_like_offset(idx, kernel):
     """Walking pages by cursor yields EXACTLY the offset path's pages
     (same docs, same scores; cursor ranks are page-relative)."""
     from wikitfidf_spark.index.query import Query
@@ -576,7 +584,8 @@ def _py_boosted_topk(py_stats, terms, boosts, k):
     return sorted(out.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
 
 
-def test_boosted_topk_matches_oracle(idx, py_stats):
+@serving_kernels
+def test_boosted_topk_matches_oracle(idx, py_stats, kernel):
     from wikitfidf_spark.index.query import Query
 
     terms, boosts = ["arg_ctx77", "arg_cfg"], (1, 3)
@@ -717,7 +726,8 @@ def test_snippets_empty_terms_raises(idx, corpus):
         idx.snippets(corpus, [], k=5)
 
 
-def test_exclude_docs_per_query(idx):
+@serving_kernels
+def test_exclude_docs_per_query(idx, kernel):
     """Query.exclude_docs drops exactly those doc ids from ONE query's
     result with ranks re-closed (the in-kernel mechanism more_like_this
     uses to exclude its source doc), while a sibling query in the same
@@ -839,8 +849,9 @@ def _py_msm_topk(py_stats, terms, k, msm):
     return sorted(out.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
 
 
+@serving_kernels
 @pytest.mark.parametrize("msm", [2, 3])
-def test_min_should_match_matches_oracle(idx, py_stats, msm):
+def test_min_should_match_matches_oracle(idx, py_stats, kernel, msm):
     from wikitfidf_spark.index.query import Query
 
     # triple chosen so the fixture has docs at every match width
@@ -860,7 +871,8 @@ def test_min_should_match_matches_oracle(idx, py_stats, msm):
     assert got == want
 
 
-def test_msm_full_width_equals_and(idx):
+@serving_kernels
+def test_msm_full_width_equals_and(idx, kernel):
     """msm == n_terms selects the AND doc set with identical scores."""
     from wikitfidf_spark.index.query import Query
 
@@ -1444,8 +1456,9 @@ def _rows_by_qid(rows):
     return out
 
 
+@serving_kernels
 @pytest.mark.parametrize("n_queries", [2003, 13])
-def test_topk_batch_any_size_equals_one_at_a_time(idx, n_queries):
+def test_topk_batch_any_size_equals_one_at_a_time(idx, kernel, n_queries):
     """Per-query k and offset ride the kernel's output rows, for any
     batch size: a batch above the size where the global merge once
     switched from plan literals to a broadcast join (2000 queries) and
