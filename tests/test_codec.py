@@ -90,3 +90,53 @@ def test_signed_unsigned_order_preserving():
     u = codec.to_unsigned(xs)
     assert np.array_equal(np.argsort(u), np.arange(len(xs)))
     assert np.array_equal(codec.to_signed(u), xs)
+
+
+def _rows_frame(rng, block_size):
+    """Random posting rows (several per term, as sub-shard lists arrive)
+    including single-posting lists and doc ids at the int64 edges."""
+    import pandas as pd
+
+    rows = []
+    for i in range(40):
+        n = 1 if i % 5 == 0 else int(rng.randint(2, 400))
+        docs = rng.randint(-(2**63), 2**63 - 1, size=n, dtype=np.int64)
+        if i % 3 == 0:
+            docs[0] = -(2**63)
+        if i % 4 == 0:
+            docs[-1] = 2**63 - 1
+        docs = np.unique(docs)
+        row = _encode_row(docs, np.ones(len(docs), np.int64),
+                          rng.randint(0, 10**9, size=len(docs)), block_size)
+        rows.append({"term": f"t{rng.randint(0, 12)}", **row})
+    return pd.DataFrame(rows)
+
+
+@pytest.mark.parametrize("block_size", [1, 2, 128])
+def test_decode_rows_equals_per_row(block_size):
+    rng = np.random.RandomState(block_size)
+    frame = _rows_frame(rng, block_size)
+    docs, scores, spans = codec.decode_docs_scores_rows(frame)
+    rows = frame.to_dict("records")
+    assert sorted(spans) == sorted({r["term"] for r in rows})
+    pos = 0
+    for term in sorted(spans):
+        # a term's rows, in input order, fill its span back to back
+        parts = [codec.decode_docs_scores(r) for r in rows if r["term"] == term]
+        lo, hi = spans[term]
+        assert lo == pos
+        assert np.array_equal(docs[lo:hi], np.concatenate([d for d, _ in parts]))
+        assert np.array_equal(scores[lo:hi], np.concatenate([s for _, s in parts]))
+        pos = hi
+    assert pos == len(docs) == len(scores)
+
+
+@pytest.mark.parametrize("stream", ["docs_payload", "scores_payload"])
+@pytest.mark.parametrize("row", [0, 7, -1])
+def test_decode_rows_truncated_payload_raises(stream, row):
+    """A row missing its last byte (mid-stream, where the next row's
+    bytes would otherwise complete it, or at the end) is rejected."""
+    frame = _rows_frame(np.random.RandomState(5), 128)
+    frame.at[frame.index[row], stream] = frame[stream].iloc[row][:-1]
+    with pytest.raises(ValueError):
+        codec.decode_docs_scores_rows(frame)

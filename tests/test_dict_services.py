@@ -718,6 +718,18 @@ def test_batch_duplicate_query_ids_rejected(idx):
         suggest_indexed_batch(idx.spark, idx.index_dir, [(4, "argcfg"), (4, "argctx")])
 
 
+def test_batch_query_id_outside_int32_rejected(idx):
+    """query_id is an int32 column: 2**32 + 1 would wrap to 1 and merge
+    with Query(1, ...)'s rows, so ids outside int32 are rejected."""
+    from wikitfidf_spark.index.query import Query
+
+    for bad in (2**32 + 1, 2**31, -(2**31) - 1):
+        with pytest.raises(ValueError, match=f"query_id {bad} is outside int32"):
+            idx.topk_batch([Query(1, ["arg_cfg"], "OR", 5), Query(bad, ["arg_ctx77"], "OR", 3)])
+    edge = idx.topk_batch([Query(2**31 - 1, ["arg_cfg"], "OR", 2), Query(-(2**31), ["arg_cfg"], "OR", 2)])
+    assert sorted({r["query_id"] for r in edge.collect()}) == [-(2**31), 2**31 - 1]
+
+
 def test_snippets_empty_terms_raises(idx, corpus):
     """analyze() of a stopword-only query returns [] — snippets must
     fail with a clean ValueError, not a WRONG_NUM_COLUMNS pyspark

@@ -8,7 +8,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from wikitfidf_spark.index import codec
+from wikitfidf_spark.index import codec, query
 from wikitfidf_spark.index.query import _taat_kernel
 
 
@@ -49,18 +49,22 @@ def _kernel_top_k(rows, k, mode="OR", msm=0):
     return list(zip(out["doc_id"].tolist(), out["score_q"].tolist()))
 
 
-def _brute(term_lists, k, mode, msm=0):
-    # term_lists: term -> [(doc, score)]
+def _brute(term_lists, k, mode, msm=0, boosts=None, banned=(), after=None, allowed=None):
+    # term_lists: term -> [(doc, score)]; banned: docs a must-not term
+    # or exclude_docs drops; after: search_after (score, doc) cursor;
+    # allowed: the only docs that may match (None = all)
     scores = {}
     present = {}
     for t, lst in term_lists.items():
         for d, s in lst:
-            scores[d] = scores.get(d, 0) + s
+            scores[d] = scores.get(d, 0) + s * (boosts or {}).get(t, 1)
             present.setdefault(d, set()).add(t)
     n = len(term_lists)
     items = [
         (d, s) for d, s in scores.items()
         if (mode == "OR" or len(present[d]) == n) and len(present[d]) >= msm
+        and d not in banned and (allowed is None or d in allowed)
+        and (after is None or s < after[0] or (s == after[0] and d > after[1]))
     ]
     return sorted(items, key=lambda t: (-t[1], t[0]))[:k]
 
@@ -168,7 +172,7 @@ def test_merged_lists_pairs_union_halves():
     c = _make_row([9], [1]); c.pop("tfs_payload")
     rows.append({"shard": 0, "term": "c", "sub_shard": 0, **half(c, struct_cols)})
     got = _merged_lists(pd.DataFrame(rows))
-    by_term = {r["term"]: r for r in got}
+    by_term = {r["term"]: r for r in got.to_dict("records")}
     assert set(by_term) == {"a", "b"}  # orphan c dropped
     for t, src in (("a", full), ("b", b)):
         r = by_term[t]
@@ -180,3 +184,89 @@ def test_merged_lists_pairs_union_halves():
     # all-fused fast path: identical content, passthrough
     fused_only = pd.DataFrame(rows[:1])
     assert len(_merged_lists(fused_only)) == 1
+
+
+def _random_batch(rng, term_lists, universe, n_queries):
+    """A batch mixing OR / AND / min_should_match, boosts (a few large
+    enough to overflow the one-key top-k sort), must-not terms,
+    exclude_docs, search_after and offset-widened k, as kernel qspec
+    tuples plus the brute-force arguments of each query."""
+    vocab = sorted(term_lists) + ["absent"]
+    spec, brute = [], []
+    for qid in range(n_queries):
+        terms = [vocab[i] for i in rng.randint(0, len(vocab), size=rng.randint(1, 5))]
+        uniq = sorted(set(terms))
+        mode = "AND" if rng.rand() < 0.3 else "OR"
+        msm = int(rng.randint(0, len(uniq) + 1)) if mode == "OR" and rng.rand() < 0.3 else 0
+        boosts = None
+        if rng.rand() < 0.3:
+            scale = 2**40 if rng.rand() < 0.1 else 1
+            boosts = {t: int(rng.randint(1, 6)) * scale for t in uniq}
+        rest = [t for t in vocab if t not in uniq]
+        exclude = tuple(rng.choice(rest, size=rng.randint(1, 3), replace=False)) \
+            if rng.rand() < 0.2 else ()
+        excl_docs = np.sort(rng.choice(universe, size=20, replace=False)) \
+            if rng.rand() < 0.2 else None
+        banned = {d for t in exclude for d, _ in term_lists.get(t, [])}
+        banned |= set(excl_docs.tolist()) if excl_docs is not None else set()
+        lists = {t: term_lists.get(t, []) for t in uniq}
+        k = int(rng.randint(1, 15)) + int(rng.randint(0, 10))  # k + offset
+        after = None
+        if rng.rand() < 0.15:
+            ranked = _brute(lists, 10**9, mode, msm, boosts, banned)
+            if ranked:
+                d, sc = ranked[int(rng.randint(0, len(ranked)))]
+                after = (int(sc), int(d))
+        spec.append((qid, terms, mode, k, exclude, boosts, excl_docs, msm, after))
+        brute.append((lists, k, mode, msm, boosts, banned, after))
+    return spec, brute
+
+
+def _by_query(out):
+    got = {}
+    for qid, d, sc in zip(out["query_id"].tolist(), out["doc_id"].tolist(),
+                          out["score_q"].tolist()):
+        got.setdefault(qid, []).append((d, sc))
+    return {q: sorted(v, key=lambda t: (-t[1], t[0])) for q, v in got.items()}
+
+
+@pytest.mark.parametrize("masking", ["none", "shard", "per_query"])
+def test_whole_batch_kernel_differential(monkeypatch, masking):
+    """One 320-query batch through the whole-batch kernel, split over
+    at least 3 scoring chunks, equals _brute run per query: with no
+    mask, a shard-wide allowed mask (predicate filter), and per-query
+    allowed sets (the phrase batch)."""
+    rng = np.random.RandomState(2024)
+    universe = np.unique(rng.randint(-(2**62), 2**62, size=700, dtype=np.int64))
+    term_lists, lists_rows = {}, []
+    for t in "abcdefgh":
+        docs = np.sort(rng.choice(universe, size=rng.randint(1, 350), replace=False))
+        scores = rng.randint(0, 10**6, size=len(docs))
+        term_lists[t] = list(zip(docs.tolist(), scores.tolist()))
+        # some terms arrive as two doc-disjoint sub-shard lists
+        parts = [slice(0, None)] if rng.rand() < 0.5 else [slice(0, None, 2), slice(1, None, 2)]
+        for i, sl in enumerate(parts):
+            if len(docs[sl]):
+                row = _make_row(docs[sl], scores[sl], block_size=int(rng.choice([1, 4, 128])))
+                lists_rows.append({"shard": 0, "term": t, "sub_shard": i, **row})
+    pdf = pd.DataFrame(lists_rows).sample(frac=1.0, random_state=1)
+    spec, brute = _random_batch(rng, term_lists, universe, 320)
+
+    chunk = 512
+    monkeypatch.setattr(query, "_CHUNK_POSTINGS", chunk)
+    gathered = sum(len(term_lists.get(t, [])) for _, terms, *_ in spec for t in set(terms))
+    assert gathered >= 3 * chunk
+
+    allowed_u, per_query = None, None
+    if masking == "shard":
+        allowed_u = np.sort(rng.choice(universe, size=450, replace=False))
+    elif masking == "per_query":
+        per_query = [np.sort(rng.choice(universe, size=rng.randint(0, 500), replace=False))
+                     for _ in spec]
+    got = _by_query(_taat_kernel(pdf, spec, allowed_u, per_query))
+    for i, (qid, *_rest) in enumerate(spec):
+        allowed = set(allowed_u.tolist()) if allowed_u is not None else (
+            set(per_query[i].tolist()) if per_query is not None else None)
+        lists, k, mode, msm, boosts, banned, after = brute[i]
+        want = _brute(lists, k, mode, msm, boosts, banned, after, allowed)
+        assert got.get(qid, []) == want, (masking, spec[i])

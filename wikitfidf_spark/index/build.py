@@ -49,7 +49,7 @@ Partitioning strategy (the 100 TB story):
 - The index is **document-partitioned**: ``shard = xxhash64(doc_id) %
   n_shards``.  Every shard holds the full postings of its documents for
   every term, so BM25 scores are complete shard-locally — top-k is
-  per-shard WAND + a k-row global merge, no cross-shard score assembly
+  a per-shard term-at-a-time top-k + a k-row global merge, no cross-shard score assembly
   (the standard "local index partitioning" of the distributed-IR
   literature).  xxhash64 spreads documents uniformly → no doc skew.
 - Within a shard, postings group by ``(term, sub_shard)``; hot terms

@@ -19,10 +19,14 @@ doc-partitioned shard):
 - tfs and quantized impact scores: plain varint streams, block-aligned
   via byte-offset sidecars.
 - sidecars (parquet arrays): block_firsts/block_lasts (absolute doc ids,
-  enables skipping), block_max_score (int64 quantized — integer WAND is
-  bit-deterministic), per-stream byte offsets.
+  enables skipping), block_max_score (int64 quantized, so a block-max
+  pruning bound compares exactly against integer score sums), per-stream
+  byte offsets.
 
 Everything is numpy array code — no per-element Python in encode/decode.
+The serving path decodes a shard's whole batch of rows at once
+(:func:`decode_docs_scores_rows`): one varint pass per stream over the
+joined payloads, not one per row.
 """
 
 from __future__ import annotations
@@ -87,23 +91,21 @@ def varint_decode(buf: bytes | memoryview, n: int) -> np.ndarray:
     if n == 0:
         return np.zeros(0, dtype=np.uint64)
     b = np.frombuffer(buf, dtype=np.uint8)
-    is_last = (b & 0x80) == 0
-    # which value each byte belongs to
-    val_idx = np.zeros(len(b), dtype=np.int64)
-    val_idx[1:] = np.cumsum(is_last[:-1])
-    # byte position within its value
-    ends = np.flatnonzero(is_last)
+    ends = np.flatnonzero(b < 0x80)  # last byte of each varint
+    if len(ends) != n or ends[-1] != len(b) - 1:
+        raise ValueError(f"expected {n} terminated varints in {len(b)} bytes")
     starts = np.empty_like(ends)
     starts[0] = 0
     starts[1:] = ends[:-1] + 1
-    byte_pos = np.arange(len(b), dtype=np.uint64) - starts[val_idx].astype(np.uint64)
-    vals = np.zeros(len(ends), dtype=np.uint64)
-    np.bitwise_or.at(
-        vals, val_idx, (b & np.uint64(0x7F)).astype(np.uint64) << (np.uint64(7) * byte_pos)
+    lens = ends - starts + 1
+    if lens.max() > 10:
+        raise ValueError("varint longer than 10 bytes")
+    # each byte's 7 payload bits shifted to its place in its varint,
+    # then OR-ed together per varint
+    shift = np.arange(len(b), dtype=np.uint64) - np.repeat(starts, lens).astype(np.uint64)
+    return np.bitwise_or.reduceat(
+        (b & 0x7F).astype(np.uint64) << (np.uint64(7) * shift), starts
     )
-    if len(vals) != n:
-        raise ValueError(f"expected {n} varints, decoded {len(vals)}")
-    return vals
 
 
 @dataclass
@@ -210,7 +212,8 @@ def decode_block_docs(
     block_doc_offs: np.ndarray,
     i: int,
 ) -> np.ndarray:
-    """Decode the doc_ids of block i only (the WAND skip path)."""
+    """Decode the doc_ids of block i only (a block-skipping reader's
+    random access into the delta stream)."""
     cnt = int(block_counts[i])
     off = int(block_doc_offs[i])
     end = int(block_doc_offs[i + 1]) if i + 1 < len(block_doc_offs) else None
@@ -231,19 +234,28 @@ def decode_block_stream(
     return varint_decode(memoryview(payload)[off:end], cnt)
 
 
-def _decode_doc_ids(enc_row) -> np.ndarray:
-    n = int(enc_row["n_docs"])
-    counts = np.asarray(enc_row["block_counts"], dtype=np.int64)
-    firsts = np.asarray(enc_row["block_firsts"], dtype=np.int64)
-    deltas = varint_decode(enc_row["docs_payload"], n)
-    # rebuild absolute ids: cumsum within each block from its first
+def _rebuild_doc_ids(
+    deltas: np.ndarray, counts: np.ndarray, firsts: np.ndarray
+) -> np.ndarray:
+    """Absolute doc ids from a delta stream of consecutive blocks
+    (``counts`` postings each, first ids ``firsts``): one cumsum over
+    all blocks, minus the running sum at each block start, plus the
+    block's base.  uint64 arithmetic wraps, so ids at the int64 edges
+    come back exact."""
     u = np.cumsum(deltas, dtype=np.uint64)
     starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-    base = to_unsigned(firsts)
-    # subtract the running sum at each block start, add block base
     block_of = np.repeat(np.arange(len(counts)), counts)
-    u = u - u[starts][block_of] + base[block_of]
+    u = u - u[starts][block_of] + to_unsigned(firsts)[block_of]
     return to_signed(u)
+
+
+def _decode_doc_ids(enc_row) -> np.ndarray:
+    n = int(enc_row["n_docs"])
+    return _rebuild_doc_ids(
+        varint_decode(enc_row["docs_payload"], n),
+        np.asarray(enc_row["block_counts"], dtype=np.int64),
+        np.asarray(enc_row["block_firsts"], dtype=np.int64),
+    )
 
 
 def decode_all(enc_row) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -270,3 +282,61 @@ def decode_docs_scores(enc_row) -> tuple[np.ndarray, np.ndarray]:
     docs = _decode_doc_ids(enc_row)
     scores = varint_decode(enc_row["scores_payload"], n).astype(np.int64)
     return docs, scores
+
+
+def _varint_decode_rows(payloads: list, counts: np.ndarray) -> np.ndarray:
+    """Decode the concatenation of several rows' varint streams in one
+    pass.  Each row must end on a varint terminator and hold exactly
+    its count of varints — otherwise a truncated row would silently
+    borrow bytes from the next one — so both are checked per row."""
+    lens = np.fromiter(map(len, payloads), dtype=np.int64, count=len(payloads))
+    b = np.frombuffer(b"".join(payloads), dtype=np.uint8)
+    byte_ends = np.cumsum(lens)
+    # varints ending before each row's end, and each row's last byte
+    ended = np.searchsorted(np.flatnonzero(b < 0x80), byte_ends)
+    if (b[byte_ends[lens > 0] - 1] >= 0x80).any() or not np.array_equal(
+        ended, np.cumsum(counts)
+    ):
+        raise ValueError("varint payload does not match its row's posting count")
+    return varint_decode(b, int(counts.sum()))
+
+
+def decode_docs_scores_rows(
+    rows,
+) -> tuple[np.ndarray, np.ndarray, dict[str, tuple[int, int]]]:
+    """Serving-path decode of a whole shard's posting rows at once
+    (``rows``: columns ``term``, ``n_docs``, ``docs_payload``,
+    ``block_firsts``, ``block_counts``, ``scores_payload``, e.g. a
+    pandas frame) → (docs, scores, spans).  The rows' payloads are
+    joined and each stream is varint-decoded once; doc ids are rebuilt
+    with one cumsum over every row's blocks.  Rows are laid out
+    term-sorted, so ``docs[lo:hi]`` / ``scores[lo:hi]`` for
+    ``spans[term] == (lo, hi)`` are that term's postings: one
+    doc-sorted run per (sub-shard) row.  Equal to concatenating
+    :func:`decode_docs_scores` over the rows in that order."""
+    terms = np.asarray(list(rows["term"]), dtype=object)
+    if not len(terms):
+        empty = np.zeros(0, dtype=np.int64)
+        return empty, empty, {}
+    order = np.argsort(terms, kind="stable")
+    terms = terms[order]
+
+    def column(name: str) -> list:
+        vals = list(rows[name])
+        return [vals[i] for i in order]
+
+    n = np.asarray(column("n_docs"), dtype=np.int64)
+    counts = np.concatenate(column("block_counts")).astype(np.int64)
+    if int(counts.sum()) != int(n.sum()):
+        raise ValueError("block_counts do not add up to n_docs")
+    firsts = np.concatenate(column("block_firsts")).astype(np.int64)
+    docs = _rebuild_doc_ids(_varint_decode_rows(column("docs_payload"), n), counts, firsts)
+    scores = _varint_decode_rows(column("scores_payload"), n).astype(np.int64)
+    ends = np.cumsum(n)
+    first = np.flatnonzero(np.concatenate(([True], terms[1:] != terms[:-1])))
+    last = np.append(first[1:], len(terms)) - 1
+    spans = {
+        t: (int(ends[f] - n[f]), int(ends[l]))
+        for t, f, l in zip(terms[first], first, last)
+    }
+    return docs, scores, spans

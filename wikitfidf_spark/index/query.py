@@ -3,12 +3,14 @@
 Two formulations, both rank-identical (tests assert it):
 
 - **serving**: one term-at-a-time (TAAT) kernel per shard inside
-  ``applyInPandas`` — decode each queried posting list once per
-  shard, then score every query of the batch vectorized in numpy
-  (np.unique + add.at + lexsort top-k) over integer quantized scores
-  (bit-deterministic, see operators/scoring.py).  Because the index is
-  document-partitioned, each shard's scores are complete, so the
-  global answer is a merge of ≤ shards*k rows per query.
+  ``applyInPandas`` (:func:`_taat_kernel`) — decode the shard's
+  queried posting rows in one pass, then score the whole query batch
+  in chunked vectorized passes (gather, stable sort on query·doc,
+  ``reduceat`` sums, one sort for every query's top k) over integer
+  quantized scores (bit-deterministic, see operators/scoring.py).
+  Because the index is document-partitioned, each shard's scores are
+  complete, so the global answer is a merge of ≤ shards*k rows per
+  query.
 - **relational** (the oracle-checkable path): decode postings to
   (doc_id, term, tf, score_q) rows with ``mapInPandas``, then plain
   DataFrame agg + top-k.  Also serves the degenerate TF-IDF mode
@@ -16,8 +18,9 @@ Two formulations, both rank-identical (tests assert it):
   tfidf = round4(tf/doc_len * log10(N/df)) per tfidf.go:100-103.
 
 Queries run **batched**: one Spark job scores an arbitrary list of
-queries (each shard task loops over the queries it has postings for) —
-this is what makes q/s scale instead of paying per-query job overhead.
+queries (each shard task scores every query of the batch in one kernel
+call) — this is what makes q/s scale instead of paying per-query job
+overhead.
 
 Tie-break everywhere: (score desc, doc_id asc) — SURVEY.md §7
 rank-identity requirement.
@@ -50,7 +53,7 @@ _STRUCT_COLS = ("n_docs", "docs_payload", "block_firsts", "block_counts")
 _SCORE_COLS = ("scores_payload",)
 
 
-def _merged_lists(pdf: pd.DataFrame) -> list[dict]:
+def _merged_lists(pdf: pd.DataFrame) -> pd.DataFrame:
     """Match a shard's structure half-rows with their score half-rows
     by (term, sub_shard); unpaired halves (can't happen in a consistent
     index) are dropped.  Rows from a fused combined-file scan already
@@ -61,7 +64,7 @@ def _merged_lists(pdf: pd.DataFrame) -> list[dict]:
     has_scores = pdf["scores_payload"].notna()
     fused = has_docs & has_scores
     if fused.all():
-        return pdf.to_dict("records")
+        return pdf
     keys = ["term", "sub_shard"]
     extra = [c for c in pdf.columns if c not in keys
              and c not in _STRUCT_COLS and c not in _SCORE_COLS]
@@ -69,17 +72,21 @@ def _merged_lists(pdf: pd.DataFrame) -> list[dict]:
                      keys + extra + list(_STRUCT_COLS)]
     c_half = pdf.loc[has_scores & ~has_docs, keys + list(_SCORE_COLS)]
     merged = s_half.merge(c_half, on=keys, how="inner")
-    return pdf.loc[fused].to_dict("records") + merged.to_dict("records")
+    return pd.concat([pdf.loc[fused], merged], ignore_index=True)
 
 
 def _check_unique_qids(qids: "Iterable[int]") -> None:
     """Batch APIs key per-query limits and the final rank window on
     query_id — duplicate ids would silently merge two queries' results
     into one interleaved list, so they are rejected up front like every
-    other malformed input."""
+    other malformed input.  So are ids outside int32, the result
+    schema's ``query_id`` type: a wrapped id would alias another
+    query's."""
     seen: set[int] = set()
     dups: set[int] = set()
     for qid in qids:
+        if not -(2**31) <= qid < 2**31:
+            raise ValueError(f"query_id {qid} is outside int32 [-2**31, 2**31 - 1]")
         (dups if qid in seen else seen).add(qid)
     if dups:
         raise ValueError(f"duplicate query_id(s) in batch: {sorted(dups)}")
@@ -157,140 +164,177 @@ def wildcard_regex(pattern: str) -> tuple[str, str]:
     return "^" + "".join(parts) + "$", pattern[:prefix_len]
 
 
+#: gathered (query, doc) postings scored per vectorized pass: large
+#: enough that numpy's per-call dispatch amortizes over the chunk, small
+#: enough that the chunk's sort and reductions stay cache-resident.  A
+#: dense queries × shard-docs accumulator instead grows with shard size.
+_CHUNK_POSTINGS = 1 << 14
+
+_KERNEL_COLS = ["query_id", "doc_id", "score_q"]
+
+
+def _lookup(sorted_vals: np.ndarray, vals) -> tuple[np.ndarray, np.ndarray]:
+    """(position in the sorted ``sorted_vals``, found there) of each of
+    ``vals``."""
+    vals = np.asarray(vals, dtype=np.int64)
+    pos = np.searchsorted(sorted_vals, vals)
+    if not len(sorted_vals):
+        return pos, np.zeros(len(vals), dtype=bool)
+    return pos, sorted_vals[np.minimum(pos, len(sorted_vals) - 1)] == vals
+
+
+def _run_starts(x: np.ndarray) -> np.ndarray:
+    """Index of the first element of each run of equal values in ``x``."""
+    return np.flatnonzero(np.concatenate(([True], x[1:] != x[:-1])))
+
+
 def _taat_kernel(
-    pdf: pd.DataFrame, qspec: list, allowed_u: "np.ndarray | None"
-) -> pd.DataFrame:
-    """One shard's term-at-a-time evaluation for a query batch: decode
-    each (term, sub_shard) list exactly once, mask to ``allowed_u`` if
-    given, then per query np.unique + add.at + lexsort top-k with exact
-    (score desc, doc asc) tie-break."""
-    scored = {t for _, terms, *_ in qspec for t in terms}
-    excl_only = {
-        t for _, _, _, _, exclude, *_ in qspec for t in exclude
-    } - scored
-    return _taat_eval(_decode_shard(pdf, allowed_u, excl_only or None), qspec)
-
-
-def _decode_shard(
     pdf: pd.DataFrame,
-    allowed_u: "np.ndarray | None" = None,
-    membership_only: "set[str] | None" = None,
-) -> dict[str, list[tuple[np.ndarray, np.ndarray]]]:
-    """Decode one shard's posting rows once — term → [(docs, scores)]
-    per sub-shard list — optionally masked to ``allowed_u``.  Callers
-    with PER-QUERY doc masks (the phrase batch) decode unmasked once
-    and pass each query's mask to :func:`_taat_eval` instead, so a
-    term shared by many queries is decoded exactly once per shard.
-    ``membership_only`` terms (exclude-only: never scored by any query
-    in the batch) skip the score varint stream entirely: a must_not
-    mask needs doc ids only.  Their entries carry ``scores=None``."""
-    decoded: dict[str, list[tuple[np.ndarray, np.ndarray]]] = {}
-    for r in _merged_lists(pdf):
-        if membership_only and r["term"] in membership_only:
-            docs, scores = codec.decode_doc_ids(r), None
-        else:
-            docs, scores = codec.decode_docs_scores(r)
-        if allowed_u is not None:
-            keep = np.isin(docs, allowed_u)
-            if not keep.all():
-                docs = docs[keep]
-                scores = scores[keep] if scores is not None else None
-            if not len(docs):
-                continue
-        decoded.setdefault(r["term"], []).append((docs, scores))
-    return decoded
-
-
-def _taat_eval(
-    decoded: dict[str, list[tuple[np.ndarray, np.ndarray]]],
     qspec: list,
     allowed_u: "np.ndarray | None" = None,
+    query_allowed: "Sequence[np.ndarray] | None" = None,
 ) -> pd.DataFrame:
-    """Evaluate a query batch against an already-decoded shard.  An
-    ``allowed_u`` mask here filters the concatenated (docs, scores)
-    per query — equivalent to masking each decoded list (membership
-    filtering commutes with concatenation; the AND count check runs
-    after either way), without re-decoding per mask."""
-    out_q, out_d, out_s = [], [], []
-    for qid, terms, mode, k, exclude, boosts, excl_docs, msm, after in qspec:
-        uniq_terms = sorted(set(terms))
-        present = [t for t in uniq_terms if t in decoded]
-        if not present:
+    """One shard's term-at-a-time evaluation of a whole query batch →
+    (query_id, doc_id, score_q) rows: each query's top k with exact
+    (score desc, doc asc) tie-break.
+
+    The shard's posting rows are decoded in one pass
+    (:func:`codec.decode_docs_scores_rows`) and masked to ``allowed_u``
+    if given.  The queries are then scored in chunks of about
+    ``_CHUNK_POSTINGS`` gathered postings.  A chunk gathers every
+    (query, dense doc, score × boost) cell of its queries' terms with
+    repeat/arange, stably sorts them on ``query·D + dense doc`` (each
+    list is doc-sorted, so the sort merges runs) and sums and counts
+    each (query, doc) with ``reduceat``.  The AND / min-should-match
+    count, must-not terms, ``exclude_docs``, ``search_after`` and
+    ``query_allowed`` (one allowed doc-id array per qspec entry: the
+    phrase batch's verified docs) are masks over those sums, and a
+    stable sort on (query, −score) puts each query's top k first,
+    ties doc-ascending."""
+    if not qspec:
+        return pd.DataFrame(columns=_KERNEL_COLS)
+    docs, scores, spans = codec.decode_docs_scores_rows(_merged_lists(pdf))
+    if allowed_u is not None:
+        keep = np.isin(docs, allowed_u)
+        kept = np.concatenate(([0], np.cumsum(keep)))
+        docs, scores = docs[keep], scores[keep]
+        spans = {
+            t: (int(kept[lo]), int(kept[hi]))
+            for t, (lo, hi) in spans.items() if kept[hi] > kept[lo]
+        }
+    uniq, dense = np.unique(docs, return_inverse=True)
+    n_docs = max(len(uniq), 1)
+
+    # flatten the batch: one entry per (query, distinct present term)
+    n_q = len(qspec)
+    qids = np.empty(n_q, dtype=np.int64)
+    ks = np.empty(n_q, dtype=np.int64)
+    need = np.empty(n_q, dtype=np.int64)
+    has_after = np.zeros(n_q, dtype=bool)
+    after_s = np.zeros(n_q, dtype=np.int64)
+    after_d = np.zeros(n_q, dtype=np.int64)
+    ent_q, ent_lo, ent_n, ent_b = [], [], [], []
+    drop, keep_keys = [], []
+    for i, (qid, terms, mode, k, exclude, boosts, excl_docs, msm, after) in enumerate(qspec):
+        qids[i], ks[i] = qid, k
+        uniq_terms = dict.fromkeys(terms)
+        # a doc here matches at most the present terms, so a query
+        # needing more (AND with a term absent, msm above) is skipped
+        need[i] = len(uniq_terms) if mode == "AND" else max(msm, 1)
+        present = [(t, spans[t]) for t in uniq_terms if t in spans]
+        if len(present) < need[i]:
             continue
-        if mode == "AND" and len(present) < len(uniq_terms):
-            continue
-        if msm and len(present) < msm:
-            continue  # a doc here can match at most len(present) terms
-        d_parts = [d for t in present for d, _ in decoded[t]]
-        if boosts:
-            s_parts = [
-                s * int(boosts.get(t, 1)) for t in present for _, s in decoded[t]
-            ]
-        else:
-            s_parts = [s for t in present for _, s in decoded[t]]
-        docs = np.concatenate(d_parts)
-        scores = np.concatenate(s_parts)
-        if allowed_u is not None:
-            keep = np.isin(docs, allowed_u)
-            if not keep.all():
-                docs, scores = docs[keep], scores[keep]
-            if not len(docs):
+        if query_allowed is not None:
+            pos, hit = _lookup(uniq, query_allowed[i])
+            if not hit.any():
                 continue
-        if exclude:
-            # docs containing ANY excluded term drop out; the excluded
-            # terms never contribute to scoring (they are decoded only
-            # for this membership mask)
-            excl_parts = [d for t in exclude if t in decoded for d, _ in decoded[t]]
-            if excl_parts:
-                keep = np.isin(docs, np.concatenate(excl_parts), invert=True)
-                docs, scores = docs[keep], scores[keep]
-                if not len(docs):
-                    continue
+            keep_keys.append(i * n_docs + pos[hit])
+        for t, (lo, hi) in present:
+            ent_q.append(i)
+            ent_lo.append(lo)
+            ent_n.append(hi - lo)
+            ent_b.append(boosts.get(t, 1) if boosts else 1)
+        # must-not terms and exclude_docs only mask; never scored
+        for t in exclude:
+            if t in spans:
+                lo, hi = spans[t]
+                drop.append(i * n_docs + dense[lo:hi])
         if excl_docs is not None:
-            keep = np.isin(docs, excl_docs, invert=True)
-            if not keep.all():
-                docs, scores = docs[keep], scores[keep]
-                if not len(docs):
-                    continue
-        u, inv, cnt = np.unique(docs, return_inverse=True, return_counts=True)
-        sums = np.zeros(len(u), dtype=np.int64)
-        np.add.at(sums, inv, scores)
-        if mode == "AND":
-            # sub-lists of one term are doc-disjoint, so count ==
-            # number of distinct matching terms
-            m = cnt == len(present)
-            u, sums = u[m], sums[m]
-        elif msm > 1:
-            # minimum-should-match: same distinct-term count, >= floor
-            m = cnt >= msm
-            u, sums = u[m], sums[m]
+            pos, hit = _lookup(uniq, excl_docs)
+            drop.append(i * n_docs + pos[hit])
         if after is not None:
-            # cursor pagination: only docs strictly after (score desc,
-            # doc asc) cursor qualify — the local cut stays k
-            a_s, a_d = after
-            m = (sums < a_s) | ((sums == a_s) & (u > a_d))
-            u, sums = u[m], sums[m]
-        if not len(u):
+            has_after[i], after_s[i], after_d[i] = True, *after
+    if not ent_q:
+        return pd.DataFrame(columns=_KERNEL_COLS)
+    ent_q = np.asarray(ent_q, dtype=np.int64)
+    ent_lo = np.asarray(ent_lo, dtype=np.int64)
+    ent_n = np.asarray(ent_n, dtype=np.int64)
+    ent_b = np.asarray(ent_b, dtype=np.int64)
+    boosted = bool((ent_b != 1).any())
+    drop = np.unique(np.concatenate(drop)) if drop else None
+    keep_keys = np.sort(np.concatenate(keep_keys)) if query_allowed is not None else None
+    cursors = bool(has_after.any())
+
+    # chunk boundaries fall between queries, one every ~_CHUNK_POSTINGS
+    ent_off = np.cumsum(ent_n) - ent_n
+    q_first = _run_starts(ent_q)
+    cuts = q_first[_run_starts(ent_off[q_first] // _CHUNK_POSTINGS)]
+    bounds = np.append(cuts, len(ent_q))
+    out_k, out_s = [], []
+    for a, b in zip(bounds[:-1], bounds[1:]):
+        n_e = ent_n[a:b]
+        total = int(n_e.sum())
+        idx = np.repeat(ent_lo[a:b] - (np.cumsum(n_e) - n_e), n_e) + np.arange(total)
+        key = np.repeat(ent_q[a:b] * n_docs, n_e) + dense[idx]
+        cell = scores[idx]
+        if boosted:
+            cell = cell * np.repeat(ent_b[a:b], n_e)
+        order = np.argsort(key, kind="stable")
+        key, cell = key[order], cell[order]
+        first = _run_starts(key)
+        sums = np.add.reduceat(cell, first)
+        key = key[first]
+        q = key // n_docs
+        # the count is the number of distinct matched terms: one
+        # term's sub-shard lists are doc-disjoint
+        m = np.diff(np.append(first, total)) >= need[q]
+        if drop is not None:
+            m &= ~_lookup(drop, key)[1]
+        if keep_keys is not None:
+            m &= _lookup(keep_keys, key)[1]
+        if cursors:
+            # search_after: only docs strictly after the cursor in
+            # (score desc, doc asc) order qualify
+            c_s, c_d = after_s[q], after_d[q]
+            m &= ~has_after[q] | (sums < c_s) | (
+                (sums == c_s) & (uniq[key % n_docs] > c_d)
+            )
+        key, sums, q = key[m], sums[m], q[m]
+        if not len(q):
             continue
-        if len(u) > k:
-            # top-k with exact (score desc, doc asc) tie-break: cut
-            # with argpartition on score, widen the cut to include all
-            # ties at the boundary, then sort
-            part = np.argpartition(-sums, k - 1)[:k]
-            thresh = sums[part].min()
-            cand = np.flatnonzero(sums >= thresh)
+        # sort on (query, −score, position): cells are (query,
+        # doc)-sorted, so score ties stay doc-ascending.  One unique
+        # int64 key when the chunk's grid fits in it (sums are >= 0:
+        # the codec stores scores unsigned and boosts are >= 1)
+        top, n_c = int(sums.max()), len(q)
+        if (int(q[-1] - q[0]) + 1) * (top + 1) * n_c < 2**63:
+            order = np.argsort(
+                ((q - q[0]) * (top + 1) + (top - sums)) * n_c + np.arange(n_c)
+            )
         else:
-            cand = np.arange(len(u))
-        order = np.lexsort((u[cand], -sums[cand]))[:k]
-        sel = cand[order]
-        out_q.append(np.full(len(sel), qid, dtype=np.int32))
-        out_d.append(u[sel])
-        out_s.append(sums[sel])
-    if not out_q:
-        return pd.DataFrame(columns=["query_id", "doc_id", "score_q"])
+            order = np.lexsort((-sums, q))
+        key, sums, q = key[order], sums[order], q[order]
+        first = _run_starts(q)
+        rank = np.arange(len(q)) - np.repeat(first, np.diff(np.append(first, len(q))))
+        m = rank < ks[q]
+        out_k.append(key[m])
+        out_s.append(sums[m])
+    if not out_k:
+        return pd.DataFrame(columns=_KERNEL_COLS)
+    key = np.concatenate(out_k)
     return pd.DataFrame({
-        "query_id": np.concatenate(out_q),
-        "doc_id": np.concatenate(out_d),
+        "query_id": qids[key // n_docs].astype(np.int32),
+        "doc_id": uniq[key % n_docs],
         "score_q": np.concatenate(out_s),
     })
 
@@ -414,11 +458,11 @@ class InvertedIndex:
         """One Spark job for all queries → (query_id, doc_id, score_q,
         score, rank); the global merge is a window top-k over
         ≤ n_shards*k rows per query.  Each shard decodes every queried
-        posting list ONCE, then scores each query vectorized
-        (np.unique + add.at + lexsort; term-at-a-time evaluation).
-        Batched query mixes share hot terms, so decode-once amortizes
-        across the batch.  Exact: integer score sums, (score desc,
-        doc asc) ties.
+        posting list ONCE, then scores the whole batch term-at-a-time
+        in chunked vectorized passes (:func:`_taat_kernel`).  Batched
+        query mixes share hot terms, so decode-once amortizes across
+        the batch.  Exact: integer score sums, (score desc, doc asc)
+        ties.
 
         ``predicate``: a SQL expression over docmeta columns
         restricting every query in the batch to matching docs.  The
@@ -707,28 +751,20 @@ class InvertedIndex:
         label = _k_off_labeler({q.query_id: (q.k, 0) for q in phrases})
 
         def per_shard_phrase(key, pdf: pd.DataFrame, ppdf: pd.DataFrame) -> pd.DataFrame:
-            # shard-level work is paid ONCE for the batch: postings are
-            # decoded once for the union of phrase terms (a term shared
-            # by many phrases is not re-decoded per phrase) and the
-            # positions rows are grouped by term once; each phrase then
-            # verifies adjacency over the shared grouping and scores
-            # against the shared decode with its own allowed mask.
-            decoded = _decode_shard(pdf)
+            # shard-level work is paid ONCE for the batch: the positions
+            # rows are grouped by term once, each phrase verifies
+            # adjacency over that grouping, and one kernel pass scores
+            # every phrase as an AND query over its verified docs
             pos_by_term: dict[str, list] = {}
             for r in ppdf.itertuples(index=False):
                 pos_by_term.setdefault(r.term, []).append((r.doc_id, r.poss))
-            out = []
+            spec, allowed = [], []
             for qid, terms, k, slop in qspec:
-                allowed = verify_phrase_grouped(pos_by_term, terms, slop)
-                if not len(allowed):
-                    continue
-                out.append(_taat_eval(
-                    decoded, [(qid, terms, "AND", k, (), None, None, 0, None)], allowed,
-                ))
-            return label(
-                pd.concat(out, ignore_index=True) if out
-                else pd.DataFrame(columns=["query_id", "doc_id", "score_q"])
-            )
+                docs = verify_phrase_grouped(pos_by_term, terms, slop)
+                if len(docs):
+                    spec.append((qid, terms, "AND", k, (), None, None, 0, None))
+                    allowed.append(docs)
+            return label(_taat_kernel(pdf, spec, query_allowed=allowed))
 
         local = (
             rows.groupBy("shard")
