@@ -20,15 +20,12 @@ def _encode_row(docs, tfs, scores, block_size):
     st = codec.encode_structure(
         d, t, np.ones(len(d), np.uint64), block_size, presorted=True
     )
-    scores_payload, maxes, score_offs = codec.encode_scores(s, st.block_counts)
+    scores_payload, maxes = codec.encode_scores(s, st.block_counts)
     return {
         "n_docs": st.n,
         "block_counts": st.block_counts,
         "block_firsts": st.block_firsts,
-        "block_lasts": st.block_lasts,
         "block_max_score": maxes,
-        "block_doc_offs": st.block_doc_offs,
-        "block_score_offs": score_offs,
         "docs_payload": st.docs_payload,
         "tfs_payload": st.tfs_payload,
         "scores_payload": scores_payload,
@@ -37,7 +34,7 @@ def _encode_row(docs, tfs, scores, block_size):
 
 def _roundtrip(docs, tfs, scores, block_size):
     row = _encode_row(docs, tfs, scores, block_size)
-    return row, codec.decode_all(row)
+    return row, codec.decode_rows({c: [v] for c, v in row.items()}, "docs", "tfs", "scores")
 
 
 def test_roundtrip_random():
@@ -63,19 +60,13 @@ def test_block_sidecars():
     srt = np.sort(docs)
     starts = np.arange(0, len(docs), 128)
     assert np.array_equal(enc["block_firsts"], srt[starts])
-    ends = np.minimum(starts + 128, len(docs)) - 1
-    assert np.array_equal(enc["block_lasts"], srt[ends])
+    assert np.array_equal(enc["block_counts"], np.diff(np.append(starts, len(docs))))
     # block max scores
     order = np.argsort(docs, kind="stable")
     s_sorted = scores[order]
     for i, a in enumerate(starts):
         b = min(a + 128, len(docs))
         assert enc["block_max_score"][i] == s_sorted[a:b].max()
-        bd = codec.decode_block_docs(
-            enc["docs_payload"], enc["block_firsts"], enc["block_counts"],
-            enc["block_doc_offs"], i,
-        )
-        assert np.array_equal(bd, srt[a:b])
 
 
 @settings(max_examples=50, deadline=None)
@@ -140,3 +131,21 @@ def test_decode_rows_truncated_payload_raises(stream, row):
     frame.at[frame.index[row], stream] = frame[stream].iloc[row][:-1]
     with pytest.raises(ValueError):
         codec.decode_docs_scores_rows(frame)
+
+
+def test_decode_rows_block_sidecar_mismatch_raises():
+    """Rows whose block_firsts and block_counts differ in length are
+    rejected even when the totals across rows agree: one row with an
+    extra first and the next one missing one used to decode into
+    shifted doc ids without an error."""
+    frame = _rows_frame(np.random.RandomState(11), 128)
+    a = _encode_row(np.array([1, 5, 9, 12]), np.ones(4), np.ones(4), 128)
+    b = _encode_row(np.array([100, 200, 300]), np.ones(3), np.ones(3), 128)
+    a["block_firsts"] = np.append(a["block_firsts"], 777)
+    b["block_firsts"] = b["block_firsts"][:0]
+    for rows in ([a, b], [*frame.drop(columns="term").to_dict("records"), a, b]):
+        cols = {c: [r[c] for r in rows] for c in a}
+        with pytest.raises(ValueError, match="block_firsts"):
+            codec.decode_rows(cols, "docs")
+        with pytest.raises(ValueError, match="block_firsts"):
+            codec.decode_docs_scores_rows({"term": ["t"] * len(rows), **cols})

@@ -199,7 +199,7 @@ def test_fused_scores_byte_identical_to_refresh_pass(spark, built):
     def rows(df):
         return sorted(
             (r["shard"], r["term"], r["sub_shard"], bytes(r["scores_payload"]),
-             tuple(r["block_max_score"]), tuple(r["block_score_offs"]))
+             tuple(r["block_max_score"]))
             for r in df.collect()
         )
     assert rows(_read_scores(spark, IDX_DIR, p)) == rows(remapped)

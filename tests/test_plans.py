@@ -197,8 +197,11 @@ def test_serving_scan_reads_only_decoded_columns(spark, tmp_path_factory):
     """The top-k kernel decodes doc ids and impact scores only, so the
     posting scans feeding it read exactly those columns plus the group
     keys: no tf/doclen streams and no block-max sidecars cross the
-    exchange.  Checked on the fused combined scan and on the
-    structure + scores scans after an exact-mode add."""
+    exchange.  ``decoded()`` and ``decoded_docs()`` likewise read only
+    the term and the streams they decode (plus the shard/list keys the
+    two-file state's owner filter and structure ⋈ scores join need).
+    Checked on the fused combined scan and on the structure + scores
+    scans after an exact-mode add."""
     from wikitfidf_spark.index.build import add_documents
     from wikitfidf_spark.index.query import Query
 
@@ -216,6 +219,13 @@ def test_serving_scan_reads_only_decoded_columns(spark, tmp_path_factory):
     assert _read_fields(explain_str(idx.topk_batch(queries))) == {
         "structure_g0.parquet": keys | struct | {"scores_payload"}
     }
+    terms = ["arg_cfg_get", "arg_ctx"]
+    assert _read_fields(explain_str(idx.decoded(terms))) == {
+        "structure_g0.parquet": {"term"} | struct | {"tfs_payload", "scores_payload"}
+    }
+    assert _read_fields(explain_str(idx.decoded_docs(terms))) == {
+        "structure_g0.parquet": {"term"} | struct
+    }
 
     add_documents(spark, docs.filter(split), d)  # splits scores back out
     idx2 = InvertedIndex(spark, d)
@@ -225,6 +235,15 @@ def test_serving_scan_reads_only_decoded_columns(spark, tmp_path_factory):
     for f, cols in scans.items():
         assert cols == (keys | struct if f.startswith("structure")
                         else keys | {"scores_payload"}), (f, cols)
+    scans = _read_fields(explain_str(idx2.decoded(terms)))
+    assert {f.split("_")[0] for f in scans} == {"structure", "scores"}, scans
+    for f, cols in scans.items():
+        assert cols == (keys | struct | {"tfs_payload"} if f.startswith("structure")
+                        else keys | {"scores_payload"}), (f, cols)
+    scans = _read_fields(explain_str(idx2.decoded_docs(terms)))
+    assert {f.split("_")[0] for f in scans} == {"structure"}, scans
+    for f, cols in scans.items():
+        assert cols == {"shard", "term"} | struct, (f, cols)
 
 
 def test_score_refresh_plan_is_shuffle_free(spark, tmp_path_factory):

@@ -22,15 +22,12 @@ def _make_row(docs, scores, block_size=4):
         d, np.ones(len(d), np.uint64), np.ones(len(d), np.uint64),
         block_size, presorted=True,
     )
-    scores_payload, maxes, score_offs = codec.encode_scores(s, st.block_counts)
+    scores_payload, maxes = codec.encode_scores(s, st.block_counts)
     return {
         "n_docs": st.n,
         "block_counts": st.block_counts,
         "block_firsts": st.block_firsts,
-        "block_lasts": st.block_lasts,
         "block_max_score": maxes,
-        "block_doc_offs": st.block_doc_offs,
-        "block_score_offs": score_offs,
         "docs_payload": st.docs_payload,
         "tfs_payload": st.tfs_payload,
         "scores_payload": scores_payload,
@@ -156,9 +153,8 @@ def test_merged_lists_pairs_union_halves():
 
     full = _make_row([1, 2, 3], [10, 20, 30])
     full.pop("tfs_payload")
-    struct_cols = ["n_docs", "docs_payload", "block_firsts",
-                   "block_lasts", "block_counts", "block_doc_offs"]
-    score_cols = ["scores_payload", "block_max_score", "block_score_offs"]
+    struct_cols = ["n_docs", "docs_payload", "block_firsts", "block_counts"]
+    score_cols = ["scores_payload", "block_max_score"]
 
     def half(row, keep):
         return {k: (v if k in keep else None) for k, v in row.items()}

@@ -7,7 +7,8 @@ BASELINE.json:north_rule):
   1. tf          (doc_id, term, tf)            codegen tokenize (or Arrow UDF)
   2. docmeta     (doc_id, repo, path, commit, topic, doc_len, content_sha256)
   3. dictionary  (term, df, cf)                salted two-phase agg
-  4. structure   (shard, term, sub_shard, docs/tfs/dls payloads + sidecars)
+  4. structure   (shard, term, sub_shard, docs/tfs/dls payloads + block
+                 firsts/counts)
   5. scores      (shard, term, sub_shard, scores payload + block-max)
 
 Postings are SPLIT into two artifacts along the incremental-update
@@ -90,15 +91,12 @@ from . import codec
 STRUCTURE_SCHEMA = (
     "shard int, term string, sub_shard int, n_docs long, cf long, "
     "docs_payload binary, tfs_payload binary, dls_payload binary, "
-    "block_firsts array<long>, block_lasts array<long>, block_counts array<int>, "
-    "block_doc_offs array<long>, block_tf_offs array<long>, block_dl_offs array<long>, "
-    "payload_bytes long"
+    "block_firsts array<long>, block_counts array<int>, payload_bytes long"
 )
 
 SCORES_SCHEMA = (
     "shard int, term string, sub_shard int, "
-    "scores_payload binary, block_max_score array<long>, block_score_offs array<long>, "
-    "scores_bytes long"
+    "scores_payload binary, block_max_score array<long>, scores_bytes long"
 )
 
 #: combined schema emitted when the score stream is computed inside the
@@ -107,7 +105,7 @@ SCORES_SCHEMA = (
 #: combined file serves as both artifacts until a refresh splits them
 COMBINED_SCHEMA = (
     STRUCTURE_SCHEMA
-    + ", scores_payload binary, block_max_score array<long>, block_score_offs array<long>, scores_bytes long"
+    + ", scores_payload binary, block_max_score array<long>, scores_bytes long"
 )
 
 _STRUCT_COLS = [c.split()[0] for c in STRUCTURE_SCHEMA.split(", ")]
@@ -115,7 +113,7 @@ _SCORE_COLS = [c.split()[0] for c in SCORES_SCHEMA.split(", ")]
 
 #: bumped when the on-disk layout changes incompatibly; manifests carry
 #: it so readers/resumers fail fast instead of misreading old dirs
-INDEX_FORMAT = 4
+INDEX_FORMAT = 5
 
 
 @dataclass
@@ -366,11 +364,7 @@ def encode_structure_df(
                     "tfs_payload": enc.tfs_payload,
                     "dls_payload": enc.dls_payload,
                     "block_firsts": enc.block_firsts.tolist(),
-                    "block_lasts": enc.block_lasts.tolist(),
                     "block_counts": enc.block_counts.tolist(),
-                    "block_doc_offs": enc.block_doc_offs.tolist(),
-                    "block_tf_offs": enc.block_tf_offs.tolist(),
-                    "block_dl_offs": enc.block_dl_offs.tolist(),
                     "payload_bytes": len(enc.docs_payload) + len(enc.tfs_payload) + len(enc.dls_payload),
                 }
                 if score_globals is not None:
@@ -381,11 +375,10 @@ def encode_structure_df(
                         tfs + k1 * (1.0 - b_p + b_p * (dls / avgdl_g))
                     )
                     scores_q = _np.floor(scores * quant + 0.5).astype(_np.int64)
-                    payload, maxes, offs = codec.encode_scores(scores_q, enc.block_counts)
+                    payload, maxes = codec.encode_scores(scores_q, enc.block_counts)
                     row.update(
                         scores_payload=payload,
                         block_max_score=maxes.tolist(),
-                        block_score_offs=offs.tolist(),
                         scores_bytes=len(payload),
                     )
                 out.append(row)
@@ -488,37 +481,30 @@ def score_postings_df(
     j = cols.join(stats.select("term", "df"), "term")
 
     def score_stream(batches) -> "pd.DataFrame":
+        # one multi-row decode per Arrow batch; the BM25 kernel runs
+        # over the whole batch with each row's idf repeated per posting
+        # (the same elementwise float64 expression as the fresh-build
+        # encode); only the score encode runs per row
         for pdf in batches:
             if not len(pdf):
                 continue
-            out = []
-            # plain zip over column arrays — iterrows costs ~100µs/row
-            # of Series construction, which dominates at millions of
-            # lists; the per-list work itself is vectorized numpy
-            for shard, term, sub, n_d, tfs_p, dls_p, counts, df_g in zip(
-                pdf["shard"].to_numpy(), pdf["term"], pdf["sub_shard"].to_numpy(),
-                pdf["n_docs"].to_numpy(), pdf["tfs_payload"], pdf["dls_payload"],
-                pdf["block_counts"], pdf["df"].to_numpy(),
-            ):
-                tfs, dls = codec.decode_tfs_dls(
-                    {"n_docs": int(n_d), "tfs_payload": tfs_p, "dls_payload": dls_p}
-                )
-                idf = _math.log(1.0 + (n_docs - int(df_g) + 0.5) / (int(df_g) + 0.5))
-                scores = idf * (tfs * (k1 + 1.0)) / (tfs + k1 * (1.0 - b + b * (dls / avgdl)))
-                scores_q = _np.floor(scores * quant + 0.5).astype(_np.int64)
-                payload, maxes, offs = codec.encode_scores(
-                    scores_q, _np.asarray(counts, dtype=_np.int64)
-                )
-                out.append({
-                    "shard": int(shard),
-                    "term": term,
-                    "sub_shard": int(sub),
-                    "scores_payload": payload,
-                    "block_max_score": maxes.tolist(),
-                    "block_score_offs": offs.tolist(),
-                    "scores_bytes": len(payload),
-                })
-            yield pd.DataFrame(out)
+            n = pdf["n_docs"].to_numpy()
+            tfs, dls = codec.decode_rows(pdf, "tfs", "dls")
+            idf = _np.repeat([
+                _math.log(1.0 + (n_docs - int(df_g) + 0.5) / (int(df_g) + 0.5))
+                for df_g in pdf["df"].to_numpy()
+            ], n)
+            scores = idf * (tfs * (k1 + 1.0)) / (tfs + k1 * (1.0 - b + b * (dls / avgdl)))
+            scores_q = _np.floor(scores * quant + 0.5).astype(_np.int64)
+            enc = [
+                codec.encode_scores(scores_q[e - c:e], counts)
+                for e, c, counts in zip(_np.cumsum(n), n, pdf["block_counts"])
+            ]
+            yield pdf[["shard", "term", "sub_shard"]].assign(
+                scores_payload=[p for p, _ in enc],
+                block_max_score=[m.tolist() for _, m in enc],
+                scores_bytes=[len(p) for p, _ in enc],
+            )
 
     return j.mapInPandas(score_stream, SCORES_SCHEMA)
 

@@ -48,7 +48,8 @@ from .build import load_manifest
 
 #: structure-half vs score-half column split for the unioned
 #: two-file scan (the fused combined file carries all of them): the
-#: columns :func:`codec.decode_docs_scores` reads, and nothing more
+#: columns a docs + scores :func:`codec.decode_rows` reads, and
+#: nothing more — no tfs/dls streams, no ``block_max_score``
 _STRUCT_COLS = ("n_docs", "docs_payload", "block_firsts", "block_counts")
 _SCORE_COLS = ("scores_payload",)
 
@@ -550,8 +551,8 @@ class InvertedIndex:
         # filters still push into both parquet scans, the one shuffle on
         # shard is unchanged, and the broadcast-build + join-probe cost
         # the join paid per batch disappears.  Only the columns the
-        # kernel decodes are scanned: tfs/dls streams and block-max
-        # sidecars are projected away BEFORE the shuffle.
+        # kernel decodes are scanned: the tfs/dls streams and
+        # block_max_score are projected away BEFORE the shuffle.
         rows = self._posting_rows(all_terms)
         label = _k_off_labeler({q.query_id: (q.k, q.offset) for q in queries})
 
@@ -656,8 +657,8 @@ class InvertedIndex:
         combined-file scan in the fused state, else structure+scores
         scans unioned with null padding (matched back up per
         (term, sub_shard) by _merged_lists inside the shard group).
-        Only the key columns and the ones
-        :func:`codec.decode_docs_scores` reads are projected."""
+        Only the key columns and the ones the kernel decodes are
+        projected."""
         term_filter = _in_values("term", all_terms)
         keys = ["shard", "term", "sub_shard"]
         if self.combined is not None:
@@ -1474,12 +1475,12 @@ class InvertedIndex:
         terms_src = self.dictionary.select("term")
         if int(self.manifest.get("stale_deltas", 0)) > 0:
             # epoch dictionary lacks delta-only terms; the structure
-            # scan is term-pruned by the isin below, so this stays
+            # scan is term-pruned by the IN filter below, so this stays
             # O(asked terms), not O(vocab)
             terms_src = terms_src.union(self.structure.select("term"))
         known = {
             r["term"]
-            for r in terms_src.filter(F.col("term").isin(uniq)).distinct().collect()
+            for r in terms_src.filter(_in_values("term", uniq)).distinct().collect()
         }
         unknown = [t for t in uniq if t not in known]
         if not unknown:
@@ -1860,90 +1861,11 @@ class InvertedIndex:
         id_col: str = "vec_id",
         vec_col: str = "embedding",
     ) -> DataFrame:
-        """Hybrid retrieval with reciprocal-rank fusion: BM25 top-``m``
-        candidates from the index, joined to their embeddings and
-        re-scored against ``query_vec`` by quantized cosine, fused as
-        ``rrf = 1/(rrf_k+rank_bm25) + 1/(rrf_k+rank_cos)`` (the
-        standard RRF; rank-based, so no score normalization between
-        the lexical and dense spaces is needed), top-``k`` by
-        (rrf desc, doc_id asc).
-
-        Scale shape: the candidate set is m-bounded (driver-known
-        tiny), so it is BROADCAST against the arbitrarily large
-        embedding table — the big side is never shuffled, and column
-        pruning keeps only (id, vector).  Cosine uses the same
-        floor(x·q·1e9+0.5) integer-quantized kernel as the ANN
-        operators (bit-deterministic at any parallelism, oracle-equal
-        in SQL), evaluated with zip_with/aggregate — pure JVM, no UDF.
-        Candidates with no embedding row keep their lexical rank and
-        contribute no dense term (cos is null, ranked last)."""
-        from ..operators.similarity import DOT_QUANT
-
-        q = np.asarray(list(query_vec), dtype=np.float64)
-        qn2 = int(np.floor(q * q * DOT_QUANT + 0.5).astype(np.int64).sum())
-        if qn2 <= 0:
-            raise ValueError("query_vec must be non-zero")
-        cand = self.topk_batch([Query(0, list(terms), "OR", m)]).select(
-            "doc_id",
-            F.col("score_q").alias("bm25_q"),
-            F.col("rank").alias("rank_bm25"),
-        )
-        qarr = F.array(*[F.lit(float(x)) for x in q])
-        emb = vecs.select(F.col(id_col).alias("doc_id"), F.col(vec_col).alias("_emb"))
-        joined = emb.join(F.broadcast(cand), "doc_id").select(
-            "doc_id",
-            F.aggregate(
-                F.zip_with(
-                    F.col("_emb"), qarr,
-                    lambda x, y: F.floor(
-                        x.cast("double") * y * F.lit(float(DOT_QUANT)) + F.lit(0.5)
-                    ).cast("long"),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, v: acc + v,
-            ).alias("dot_q"),
-            F.aggregate(
-                F.transform(
-                    F.col("_emb"),
-                    lambda x: F.floor(
-                        x.cast("double") * x.cast("double") * F.lit(float(DOT_QUANT)) + F.lit(0.5)
-                    ).cast("long"),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, v: acc + v,
-            ).alias("norm2_q"),
-        )
-        # nullif: a document embedding that quantizes to zero norm has
-        # no dense signal — treat it like a missing embedding row (cos
-        # null, ranked last) instead of dividing by zero (ANSI mode
-        # would fail the whole job; non-ANSI would emit Infinity and
-        # steal rank_cos 1)
-        scored = cand.join(joined, "doc_id", "left").withColumn(
-            "cos",
-            F.floor(
-                F.col("dot_q").cast("double")
-                / (F.sqrt(F.nullif(F.col("norm2_q"), F.lit(0)).cast("double"))
-                   * F.lit(math.sqrt(float(qn2))))
-                * F.lit(1e6) + F.lit(0.5)
-            ) / F.lit(1e6),
-        )
-        w = Window.orderBy(F.desc_nulls_last("cos"), F.asc("doc_id"))
-        fused = scored.withColumn("rank_cos", F.row_number().over(w)).withColumn(
-            "rrf_q",
-            F.floor(
-                (
-                    F.lit(1.0) / (F.lit(float(rrf_k)) + F.col("rank_bm25"))
-                    + F.when(F.col("cos").isNull(), F.lit(0.0)).otherwise(
-                        F.lit(1.0) / (F.lit(float(rrf_k)) + F.col("rank_cos"))
-                    )
-                ) * F.lit(1e9) + F.lit(0.5)
-            ).cast("long"),
-        )
-        return (
-            fused.select("doc_id", "bm25_q", "cos", "rrf_q")
-            .orderBy(F.desc("rrf_q"), F.asc("doc_id"))
-            .limit(k)
-        )
+        """One-query :meth:`hybrid_topk_batch` → (doc_id, bm25_q, cos,
+        rrf_q)."""
+        return self.hybrid_topk_batch(
+            [(0, terms, query_vec)], vecs, k, m, rrf_k, id_col=id_col, vec_col=vec_col
+        ).drop("query_id")
 
     def hybrid_topk_batch(
         self,
@@ -1956,11 +1878,21 @@ class InvertedIndex:
         id_col: str = "vec_id",
         vec_col: str = "embedding",
     ) -> DataFrame:
-        """Hybrid RRF retrieval for a batch of (query_id, terms,
-        query_vec) queries in ONE pipeline → (query_id, doc_id, bm25_q,
-        cos, rrf_q) — row-identical per query to :meth:`hybrid_topk`
-        (same candidate pool, same quantized-cosine arithmetic, same
-        (rrf desc, doc_id asc) cut).
+        """Hybrid retrieval with reciprocal-rank fusion for a batch of
+        (query_id, terms, query_vec) queries in ONE pipeline →
+        (query_id, doc_id, bm25_q, cos, rrf_q).  Per query: BM25
+        top-``m`` candidates from the index, joined to their embeddings
+        and re-scored against the query vector by quantized cosine,
+        fused as ``rrf = 1/(rrf_k+rank_bm25) + 1/(rrf_k+rank_cos)``
+        (the standard RRF; rank-based, so no score normalization
+        between the lexical and dense spaces is needed), top-``k`` by
+        (rrf desc, doc_id asc).  Cosine uses the same
+        floor(x·q·1e9+0.5) integer-quantized kernel as the ANN
+        operators (bit-deterministic at any parallelism, oracle-equal
+        in SQL), evaluated with zip_with/aggregate — pure JVM, no UDF.
+        Candidates with no embedding row, or one that quantizes to
+        zero norm, keep their lexical rank and contribute no dense
+        term (cos is null, ranked last).
 
         Plan: ONE :meth:`topk_batch` serves every query's BM25
         top-``m`` pool (the posting artifact is scanned once for the
@@ -1970,7 +1902,8 @@ class InvertedIndex:
         against the arbitrarily large embedding table exactly like the
         single-query plan (the dense side is never shuffled; a doc
         candidate for two queries re-scores once per query, as it
-        must).  Both rank windows partition by query_id, so per-batch
+        must; column pruning keeps only (id, vector)).  Both rank
+        windows partition by query_id, so per-batch
         fixed costs (two scans, the broadcast, the windows) are paid
         once for the whole batch instead of once per query."""
         from ..operators.similarity import DOT_QUANT
@@ -2026,8 +1959,9 @@ class InvertedIndex:
                 lambda acc, v: acc + v,
             ).alias("norm2_q"),
         )
-        # same zero-norm guard as the single-query plan: cos null, not
-        # a division failure / an Infinity stealing rank_cos 1
+        # nullif: a zero-norm embedding has no dense signal — cos null
+        # like a missing row, not a division failure (ANSI mode) or an
+        # Infinity stealing rank_cos 1
         scored = cand_q.join(joined, ["query_id", "doc_id"], "left").withColumn(
             "cos",
             F.floor(
@@ -2062,46 +1996,45 @@ class InvertedIndex:
     # ---------- relational (oracle-checkable) path ----------
 
     def decoded(self, terms: Sequence[str] | None = None) -> DataFrame:
-        """(doc_id, term, tf, score_q) rows decoded from postings."""
+        """(term, doc_id, tf, score_q) rows decoded from postings, one
+        :func:`codec.decode_rows` per Arrow batch; only the term and
+        the decoded columns are scanned."""
         rows = self.postings
         if terms is not None:
             rows = rows.filter(_in_values("term", terms))
+        rows = rows.select("term", *_STRUCT_COLS, "tfs_payload", *_SCORE_COLS)
 
         def decode(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in pdf_iter:
-                for r in pdf.to_dict("records"):
-                    docs, tfs, scores = codec.decode_all(r)
-                    yield pd.DataFrame({
-                        "term": r["term"],
-                        "doc_id": docs,
-                        "tf": tfs,
-                        "score_q": scores,
-                    })
+                docs, tfs, scores = codec.decode_rows(pdf, "docs", "tfs", "scores")
+                yield pd.DataFrame({
+                    "term": np.repeat(pdf["term"].to_numpy(), pdf["n_docs"].to_numpy()),
+                    "doc_id": docs,
+                    "tf": tfs,
+                    "score_q": scores,
+                })
 
         return rows.mapInPandas(decode, "term string, doc_id long, tf long, score_q long")
 
     def decoded_docs(self, terms: Sequence[str] | None = None) -> DataFrame:
         """(term, doc_id) membership-only decode: skips the tf AND
-        score varint streams entirely (the codec shortcut the must_not
-        masks use) and — in the un-fused state — never touches
-        the scores artifact at all: the structure side alone carries
-        doc membership.  The facet/histogram/stats match sets only
-        need doc ids, and the Python-side varint decode IS the
-        kernel's cost, so this is the right scan for them."""
+        score varint streams entirely and — in the un-fused state —
+        never touches the scores artifact at all: the structure side
+        alone carries doc membership.  The facet/histogram/stats match
+        sets only need doc ids, and the Python-side varint decode IS
+        the kernel's cost, so this is the right scan for them."""
         rows = self.combined if self.combined is not None else self.structure
         if terms is not None:
             rows = rows.filter(_in_values("term", terms))
-        rows = rows.select(
-            "term", "n_docs", "docs_payload", "block_firsts", "block_counts"
-        )
+        rows = rows.select("term", *_STRUCT_COLS)
 
         def decode(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in pdf_iter:
-                for r in pdf.to_dict("records"):
-                    yield pd.DataFrame({
-                        "term": r["term"],
-                        "doc_id": codec.decode_doc_ids(r),
-                    })
+                (docs,) = codec.decode_rows(pdf, "docs")
+                yield pd.DataFrame({
+                    "term": np.repeat(pdf["term"].to_numpy(), pdf["n_docs"].to_numpy()),
+                    "doc_id": docs,
+                })
 
         return rows.mapInPandas(decode, "term string, doc_id long")
 
@@ -2441,23 +2374,12 @@ class InvertedIndex:
         outstanding) the epoch dictionary lacks terms that exist only
         in the un-refreshed delta; an inner join would silently DROP
         their postings, breaking the stale-mode contract ("doc sets
-        exact, scores epoch-stale").  The left join + structure-derived
-        fallback df (each term's live posting count, exact by
-        construction) keeps every decoded row scored; after
-        refresh_scores both sides agree and the fallback is inert."""
-        d = self.decoded(terms)
-        # exact live df from the structure SIDECAR columns (sum of each
-        # list's n_docs) — column pruning keeps the payloads unread, so
-        # this costs a narrow scan, not a second decode pass
-        struct = self.structure
-        if terms is not None:
-            struct = struct.filter(F.col("term").isin(list(terms)))
-        fallback_df = struct.groupBy("term").agg(F.sum("n_docs").alias("df_live"))
-        joined = (
-            d.join(F.broadcast(self.dictionary.select("term", "df")), "term", "left")
-            .join(F.broadcast(fallback_df), "term")
-            .withColumn("df", F.coalesce("df", "df_live"))
-            .join(self.docmeta.select("doc_id", "doc_len"), "doc_id")
+        exact, scores epoch-stale").  :meth:`_join_term_df` falls back
+        to the structure-derived live df (each term's posting count,
+        exact by construction) there, and after refresh_scores joins
+        the dictionary alone."""
+        joined = self._join_term_df(self.decoded(terms), "df").join(
+            self.docmeta.select("doc_id", "doc_len"), "doc_id"
         )
         raw = (F.col("tf").cast("double") / F.col("doc_len").cast("double")) * F.log10(
             F.lit(float(self.n_docs)) / F.col("df").cast("double")
@@ -2474,8 +2396,8 @@ class InvertedIndex:
         n/avgdl (during a bounded-staleness window the recomputed
         float uses live df while ``score_q`` stays epoch-stale — the
         gap IS the staleness, made visible).  Plan: term-pruned
-        posting decode (``isin`` pushes
-        into both parquet scan halves), the bounded doc filter applied
+        posting decode (the ``IN`` filter pushes into both parquet
+        scan halves), the bounded doc filter applied
         right after decode, then broadcast joins against the O(|terms|)
         dictionary subset and the asked docs' docmeta rows — O(df of
         the asked terms), never O(corpus)."""
@@ -2488,24 +2410,24 @@ class InvertedIndex:
         cfg = _load_cfg(self.manifest, self.index_dir)
         uniq = sorted(set(terms))
         ids = sorted({int(x) for x in doc_ids})
-        d = self.decoded(uniq).filter(F.col("doc_id").isin(ids))
+        d = self.decoded(uniq).filter(_in_values("doc_id", ids))
         # df and idf ride as literal maps (≤ |terms| driver rows): idf
         # is computed with the SAME math.log + association the build
         # kernel used, so the float preimage is bit-reproducible — a
         # JVM-side F.log / different operation order can land 1 ulp off
         # and break floor(score*QUANT+0.5) == score_q at boundaries.
-        # Stale-window guard as in tfidf_scores: delta-only terms miss
-        # the epoch dictionary — fall back to the exact live df from
-        # the structure sidecar columns.
+        # Stale-window guard as in _join_term_df: delta-only terms miss
+        # the epoch dictionary — fall back to the exact live df, the
+        # sum of the structure's n_docs.
         live = {
             r["term"]: int(r["df_live"])
-            for r in self.structure.filter(F.col("term").isin(uniq))
+            for r in self.structure.filter(_in_values("term", uniq))
             .groupBy("term").agg(F.sum("n_docs").alias("df_live")).collect()
         }
         epoch = {
             r["term"]: int(r["df"])
             for r in self.dictionary.select("term", "df")
-            .filter(F.col("term").isin(uniq)).collect()
+            .filter(_in_values("term", uniq)).collect()
         }
         df_map = {t: epoch.get(t, n) for t, n in live.items()}
         if not df_map:
@@ -2524,7 +2446,7 @@ class InvertedIndex:
         idf_col = F.create_map(
             *[F.lit(x) for t, v in sorted(idf_map.items()) for x in (t, v)]
         )[F.col("term")]
-        meta = self.docmeta.select("doc_id", "doc_len").filter(F.col("doc_id").isin(ids))
+        meta = self.docmeta.select("doc_id", "doc_len").filter(_in_values("doc_id", ids))
         # association mirrors the build kernel exactly:
         # idf * (tf * (k1+1)) / (tf + k1 * (1-b + b * (doc_len/avgdl)))
         tf_d = F.col("tf").cast("double")
