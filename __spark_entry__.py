@@ -1768,6 +1768,7 @@ def _all_oracle_sql() -> dict[str, str]:
                    sum(v) AS sum_v, sum(v) / count(*) AS avg_v,
                    median(v) AS median_v
             FROM j
+            HAVING count(*) > 0
         """,
         # collapse batch: the single-panel collapse SQL with a VALUES
         # panel map fanning the shared sc CTE to both panels, and the

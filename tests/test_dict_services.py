@@ -1586,3 +1586,75 @@ def test_function_score_rejects_non_integral_factor(idx):
             idx.function_score_topk(["arg_cfg"], factor="no_such_column")
     finally:
         idx.docmeta = orig
+
+
+def test_facet_stats_no_match_panel_emits_no_row(idx):
+    """A panel whose terms match nothing yields no row in
+    facet_stats_batch, and the other panels equal facet_stats per
+    panel.  The DuckDB oracle for ``index_facet_stats`` agrees: with an
+    empty match set its aggregate emits no row either."""
+    import duckdb
+
+    import __spark_entry__ as entry
+
+    (t1,) = [
+        r["term"]
+        for r in idx.dictionary.orderBy(F.desc("df"), F.asc("term")).limit(1).collect()
+    ]
+    panels = [(0, [t1]), (1, ["zz_no_such_term"]), (2, [t1, "zz_no_such_term"])]
+    batch = {r["query_id"]: r for r in idx.facet_stats_batch(panels).collect()}
+    assert sorted(batch) == [0, 2]
+    cols = ("n_docs", "min_v", "max_v", "sum_v", "avg_v", "median_v")
+    for qid in (0, 2):
+        (single,) = idx.facet_stats(dict(panels)[qid]).collect()
+        assert tuple(single[c] for c in cols) == tuple(batch[qid][c] for c in cols)
+
+    sql = entry._all_oracle_sql()["index_facet_stats"]
+    con = duckdb.connect()
+    try:
+        con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+        con.execute("INSERT INTO documents VALUES (1, 'nothing queried lives here')")
+        assert con.execute(sql).fetchall() == []
+        con.execute(f"INSERT INTO documents VALUES (2, '{entry.BM25_OR_TERMS[0]} words')")
+        assert len(con.execute(sql).fetchall()) == 1
+    finally:
+        con.close()
+
+
+def test_malformed_requests_fail_loudly(idx):
+    """Malformed batch requests raise naming the field instead of being
+    cast or iterated silently: a bare string as ``terms``, non-integral
+    ``k``/``offset``/``min_should_match``, non-string terms, non-integer
+    query ids, and ``suggest_batch(n=0)``."""
+    from wikitfidf_spark.index.query import PhraseQuery, Query
+
+    with pytest.raises(TypeError, match="terms"):
+        idx.topk_batch([Query(0, "arg_cfg")])
+    with pytest.raises(TypeError, match="terms"):
+        idx.topk_batch([Query(0, ["arg_cfg", 7])])
+    with pytest.raises(TypeError, match="exclude"):
+        idx.topk_batch([Query(0, ["arg_cfg"], exclude=(None,))])
+    with pytest.raises(TypeError, match="terms"):
+        idx.phrase_topk_batch([PhraseQuery(0, "arg_cfg arg_ctx")])
+    for field, kw in (
+        ("k", {"k": 2.5}),
+        ("offset", {"offset": 1.5}),
+        ("min_should_match", {"min_should_match": 1.5}),
+    ):
+        with pytest.raises(ValueError, match=field):
+            idx.topk_batch([Query(0, ["arg_cfg", "arg_ctx"], **kw)])
+    with pytest.raises(ValueError, match="k"):
+        idx.phrase_topk_batch([PhraseQuery(0, ["arg_cfg", "arg_ctx"], k=2.5)])
+    with pytest.raises(TypeError, match="query_id"):
+        idx.topk_batch([Query("a", ["arg_cfg"]), Query(1, ["arg_ctx"])])
+    with pytest.raises(TypeError, match="query_id"):
+        idx.facet_counts_batch([(0.5, ["arg_cfg"])])
+    with pytest.raises(TypeError, match="query_id"):
+        idx.suggest_batch([("x", "arg_cfg")])
+    with pytest.raises(ValueError, match="n must be >= 1"):
+        idx.suggest_batch([(0, "arg_cfg")], n=0)
+    # integral numpy ids and k still serve
+    import numpy as _np
+
+    ok = idx.topk_batch([Query(_np.int64(3), ["arg_cfg"], "OR", _np.int32(2))]).collect()
+    assert {r["query_id"] for r in ok} == {3} and len(ok) == 2

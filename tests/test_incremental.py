@@ -53,7 +53,7 @@ def dirs(spark, tmp_path_factory):
     return full_dir, inc_dir, delta_docs
 
 
-def test_postings_byte_identical_after_compact(spark, dirs, tmp_path):
+def test_postings_byte_identical_after_compact(spark, dirs, tmp_path, check_index_files):
     """add_documents writes the delta as a new shard generation, so the
     physical layout differs from a fresh build until compaction; after
     ``compact`` the index must be byte-identical to the fresh build
@@ -68,6 +68,33 @@ def test_postings_byte_identical_after_compact(spark, dirs, tmp_path):
     shutil.copytree(inc_dir, cdir)
     compact(spark, cdir)
     assert _postings_rows(spark, full_dir) == _postings_rows(spark, cdir)
+    check_index_files(cdir)
+
+
+def test_build_and_add_write_zstd_one_shard_per_file(dirs, check_index_files):
+    """Build and add write every artifact as zstd parquet, and each
+    structure file holds one shard (the add's generation shards too)."""
+    full_dir, inc_dir, _ = dirs
+    assert check_index_files(full_dir) > 0
+    assert check_index_files(inc_dir) > 0
+
+
+def test_writer_ignores_session_codec(spark, tmp_path):
+    """The index writer sets zstd itself: a session whose default
+    parquet codec is snappy still writes zstd."""
+    import pyarrow.parquet as pq
+
+    from wikitfidf_spark.index.build import write_parquet
+
+    key = "spark.sql.parquet.compression.codec"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "snappy")
+    try:
+        write_parquet(spark.range(10).repartition(1), str(tmp_path / "w.parquet"))
+    finally:
+        spark.conf.set(key, old)
+    (f,) = (tmp_path / "w.parquet").glob("*.parquet")
+    assert pq.ParquetFile(str(f)).metadata.row_group(0).column(0).compression == "ZSTD"
 
 
 def test_metrics_and_paths_updated(spark, dirs):

@@ -95,12 +95,20 @@ def test_merge_touches_no_existing_shard(spark, dirs):
     assert ph["new_shards"] >= 1
 
 
-def test_merge_then_compact_byte_identical(spark, dirs, tmp_path):
+def test_merge_then_compact_byte_identical(spark, dirs, tmp_path, check_index_files):
     full_dir, _, _, merged_dir = dirs
     cdir = str(tmp_path / "merged_compacted")
     shutil.copytree(merged_dir, cdir)
     compact(spark, cdir)
     assert _postings_rows(spark, full_dir) == _postings_rows(spark, cdir)
+    check_index_files(cdir)
+
+
+def test_merge_writes_zstd_one_shard_per_file(dirs, check_index_files):
+    """The merged index (harvested tf/docmeta, generation structure,
+    refreshed scores) is zstd throughout, one shard per structure file."""
+    _, _, _, merged_dir = dirs
+    assert check_index_files(merged_dir) > 0
 
 
 def test_merge_deferred_then_refresh_converges(spark, dirs, tmp_path):
@@ -164,7 +172,7 @@ def test_merge_collision_raises(spark, dirs, tmp_path):
     _, a_dir, _, _ = dirs
     dup = str(tmp_path / "a_copy")
     shutil.copytree(a_dir, dup)
-    with pytest.raises(ValueError, match="doc_id collisions \(merge\)"):
+    with pytest.raises(ValueError, match=r"doc_id collisions \(merge\)"):
         merge_from_index(spark, dup, a_dir)
 
 

@@ -122,6 +122,14 @@ def built(spark, tmp_path_factory):
     return docs, d
 
 
+def test_positions_write_zstd_one_shard_per_file(built, check_index_files):
+    """build_positions writes zstd parquet with one shard per file, like
+    every other artifact the manifest references."""
+    _, d = built
+    assert check_index_files(d) > 0
+    assert load_manifest(d)["paths"]["positions"]
+
+
 def _phrase_docs_py(rows, terms):
     """Brute-force oracle: doc_ids whose token stream contains terms
     consecutively."""

@@ -327,6 +327,20 @@ def test_batch_serving_plans(spark, tmp_path_factory):
     assert e.count("BroadcastHashJoin") >= 1  # the term->panel map
     assert fb.count() > 0
 
+    # the per-shard kernels sit on exactly one exchange per input side:
+    # the shard placement, with no second hashpartitioning(shard)
+    from wikitfidf_spark.index.query import Query
+
+    qs = [Query(0, hot[:2]), Query(1, hot[2:])]
+    for df, kernel, sides in (
+        (idx.topk_batch(qs), "FlatMapGroupsInPandas", 1),
+        (idx.topk_batch(qs, predicate="doc_len > 10"), "FlatMapCoGroupsInPandas", 2),
+    ):
+        below = plan(df).split(kernel, 1)[1]
+        exchanges = [ln for ln in below.splitlines() if "Exchange " in ln]
+        assert len(exchanges) == sides, exchanges
+        assert all("REPARTITION_BY_NUM" in ln for ln in exchanges), exchanges
+
     ids = [r["doc_id"] for r in
            idx.docmeta.select("doc_id").orderBy("doc_id").limit(3).collect()]
     mb = idx.more_like_this_batch(ids, m=4, k=5)
@@ -408,3 +422,24 @@ def test_wildcard_and_collapse_plans(spark, tmp_path_factory):
     phb = plan(hb)
     assert "BatchEvalPython" not in phb
     assert "CartesianProduct" not in phb and "BroadcastNestedLoopJoin" not in phb
+
+
+def test_place_shards_gives_each_shard_its_own_partition(spark):
+    """Hash-partitioning on a small-int shard id collides (two shards in
+    one partition at 2 shards); place_shards puts shard s in partition
+    s mod P, and shards sharing a partition when shards > P keep
+    distinct group keys."""
+    from wikitfidf_spark.index.build import PLACE_KEY, place_shards
+
+    for n in (2, 4, 32):
+        ids = spark.range(n).select(F.col("id").cast("int").alias("shard"))
+        for p in (None, 4):
+            got = {
+                r["shard"]: (r["p"], r[PLACE_KEY])
+                for r in place_shards(ids, range(n), p)
+                .select("shard", PLACE_KEY, F.spark_partition_id().alias("p"))
+                .collect()
+            }
+            parts = n if p is None else min(p, n)
+            assert {s: q for s, (q, _) in got.items()} == {s: s % parts for s in range(n)}
+            assert len({k for _, k in got.values()}) == n

@@ -57,9 +57,10 @@ Partitioning strategy (the 100 TB story):
   (per-shard df above ``hot_df_threshold``) split into deterministic
   sub-lists so no single pandas group exceeds memory — this plus the
   salted dictionary agg is the explicit skew handling of north_rule.
-- Posting rows are written sorted by term inside each shard file →
+- Each shard is written as its own file (:func:`place_shards` gives
+  every shard its own partition), its posting rows sorted by term →
   parquet row-group min/max pruning serves term lookups without reading
-  whole shards.
+  whole shards.  Every artifact is zstd parquet (:func:`write_parquet`).
 
 Reference parity: the whole build is wikitfidf's Preprocess+Process
 chain (wikitfidf.go:99-224) collapsed into one DataFrame lineage; the
@@ -69,6 +70,7 @@ manifest replaces its filename conventions.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
@@ -114,6 +116,80 @@ _SCORE_COLS = [c.split()[0] for c in SCORES_SCHEMA.split(", ")]
 #: bumped when the on-disk layout changes incompatibly; manifests carry
 #: it so readers/resumers fail fast instead of misreading old dirs
 INDEX_FORMAT = 5
+
+
+def write_parquet(df: DataFrame, path: str) -> None:
+    """The one writer of every index artifact: overwrite ``path`` as
+    zstd parquet.  The codec is set here rather than taken from the
+    session's ``spark.sql.parquet.compression.codec``, so the bytes on
+    disk never depend on who opened the session.  Zstd's entropy stage
+    is what shrinks the hashed doc-id deltas and hex digests that
+    snappy stores almost raw.  The codec is per-file metadata, so
+    indexes written with any other codec still open."""
+    df.write.mode("overwrite").option("compression", "zstd").parquet(path)
+
+
+_M32 = 0xFFFFFFFF
+
+
+def _rotl32(x: int, r: int) -> int:
+    return ((x << r) | (x >> (32 - r))) & _M32
+
+
+def _spark_hash_int(v: int, seed: int = 42) -> int:
+    """Spark's ``hash()`` of one int column (Murmur3 x86_32
+    ``hashInt``, seed 42), as the signed 32-bit value hash
+    partitioning takes ``pmod`` of."""
+    k = _rotl32((v & _M32) * 0xCC9E2D51 & _M32, 15) * 0x1B873593 & _M32
+    h = (_rotl32(seed ^ k, 13) * 5 + 0xE6546B64) & _M32
+    h ^= 4
+    h = (h ^ (h >> 16)) * 0x85EBCA6B & _M32
+    h = (h ^ (h >> 13)) * 0xC2B2AE35 & _M32
+    h ^= h >> 16
+    return h - (1 << 32) if h >> 31 else h
+
+
+@functools.lru_cache(maxsize=None)
+def _place_keys(n_shards: int, n: int) -> tuple[int, ...]:
+    """``keys[i]`` = a distinct non-negative int whose Spark hash lands
+    in partition ``i mod n`` of ``n``, for ``i`` in ``0..n_shards-1``."""
+    need = -(-n_shards // n)
+    per: list[list[int]] = [[] for _ in range(n)]
+    k = full = 0
+    while full < n:
+        p = per[_spark_hash_int(k) % n]
+        if len(p) < need:
+            p.append(k)
+            full += len(p) == need
+        k += 1
+    return tuple(per[i % n][i // n] for i in range(n_shards))
+
+
+#: surrogate key column :func:`place_shards` adds, one value per shard
+PLACE_KEY = "_place"
+
+
+def place_shards(
+    df: DataFrame, shards: Iterable[int], n_partitions: int | None = None
+) -> DataFrame:
+    """Hash-repartition ``df`` (which has a ``shard`` column) so the
+    i-th smallest of ``shards`` lands in partition ``i mod P`` — shard
+    ``s`` in partition ``s mod P`` for the usual ids ``0..S-1``.  ``P``
+    is ``n_partitions`` capped at the shard count (default: one
+    partition per shard).  Hashing ``shard`` itself would collide: the
+    murmur3 of small ints puts both of two shards in one partition.  So
+    each shard maps, through a literal map, to its own surrogate key,
+    precomputed in Python to hash onto the shard's partition, and the
+    result keeps that key as column :data:`PLACE_KEY`.  Grouping on
+    that key alone is grouping on shard, and it is the exact key of
+    the exchange, so a per-shard ``groupBy``/``cogroup`` on it adds no
+    second exchange.  An explicit partition count is never coalesced
+    by AQE."""
+    order = sorted({int(s) for s in shards}) or [0]
+    n = max(1, min(n_partitions or len(order), len(order)))
+    keys = _place_keys(len(order), n)
+    lut = F.create_map(*[F.lit(x) for s, k in zip(order, keys) for x in (s, k)])
+    return df.withColumn(PLACE_KEY, lut[F.col("shard")].cast("int")).repartition(n, PLACE_KEY)
 
 
 @dataclass
@@ -246,9 +322,13 @@ def encode_structure_df(
     *,
     doclens: DataFrame | None = None,
     score_globals: tuple[int, float] | None = None,
+    shards: Iterable[int] | None = None,
 ) -> DataFrame:
     """The structure-encode plan: enrich tf with (doc_len, shard), sort
-    within shards, stream-encode per partition.
+    within shards, stream-encode per partition.  Each of ``shards`` (the
+    shard ids the rows carry; default the canonical ``0..n_shards-1``)
+    gets its own partition (:func:`place_shards`), so each shard's
+    encode is its own task and each written file holds one shard.
 
     ``meta=None`` (pass ``doclens``) is the CANONICAL-placement fast
     path (fresh builds, compaction): shard derives from
@@ -339,8 +419,8 @@ def encode_structure_df(
             dfs_a = pdf["df"].to_numpy() if score_globals is not None else None
             change = _np.empty(len(pdf), dtype=bool)
             change[0] = True
-            # a partition may hold several shard values (hash
-            # collisions) — group key is the full (shard, term, sub)
+            # a row whose shard is missing from ``shards`` shares a
+            # partition with others — group key is the full (shard, term, sub)
             change[1:] = (
                 (terms[1:] != terms[:-1])
                 | (subs[1:] != subs[:-1])
@@ -411,9 +491,9 @@ def encode_structure_df(
     if score_globals is not None:
         sel_cols.append("df")
     return (
-        enriched.select(*sel_cols)
-        .repartition(n_shards, "shard")
+        place_shards(enriched.select(*sel_cols), range(n_shards) if shards is None else shards)
         .sortWithinPartitions("shard", "term", "sub_shard", "doc_id")
+        .drop(PLACE_KEY)
         .mapInPandas(
             encode_stream,
             COMBINED_SCHEMA if score_globals is not None else STRUCTURE_SCHEMA,
@@ -438,7 +518,7 @@ def _write_dictionary(
         F.max("df").alias("max_df"),
         F.sum("df").alias("sum_df"),
     )
-    stats.write.mode("overwrite").parquet(abs_path)
+    write_parquet(stats, abs_path)
     row = obs.get
     n_terms = int(row["n_terms"] or 0)
     mean_df = (float(row["sum_df"]) / n_terms) if n_terms else 0.0
@@ -576,7 +656,7 @@ def build_index(
         tf = _tokenize(
             base.observe(obs_in, F.count(F.lit(1)).alias("docs")), cfg
         ).observe(obs, F.count(F.lit(1)).alias("rows"), F.sum("tf").alias("tok"))
-        tf.write.mode("overwrite").parquet(tf_path)
+        write_parquet(tf, tf_path)
         manifest["phases"]["tf"] = {
             "rows": int(obs.get["rows"]),
             "input_docs": int(obs_in.get["docs"]),
@@ -649,7 +729,7 @@ def build_index(
             )
             .drop("_dup")
         )
-        meta.write.mode("overwrite").parquet(meta_path)
+        write_parquet(meta, meta_path)
         row = obs.get
         return {"rows": int(row["n"] or 0), "dups": int(row["dups"] or 0),
                 "wall_sec": time.time() - t0}
@@ -674,7 +754,7 @@ def build_index(
 
     def _run_doclens() -> dict:
         t0 = time.time()
-        termstats.doc_lengths(tf).write.mode("overwrite").parquet(dl_path)
+        write_parquet(termstats.doc_lengths(tf), dl_path)
         return {"wall_sec": time.time() - t0}
 
     from concurrent.futures import ThreadPoolExecutor
@@ -754,7 +834,7 @@ def build_index(
                 F.sum("payload_bytes").alias("bytes"),
                 F.sum("scores_bytes").alias("sbytes"),
             )
-            combined.write.mode("overwrite").parquet(struct_path)
+            write_parquet(combined, struct_path)
             row = obs.get
             wall = time.time() - t0
             manifest["phases"]["structure"] = {
@@ -791,7 +871,7 @@ def build_index(
                     F.sum("scores_bytes").alias("scores_bytes"),
                 )
             )
-            lineage.write.mode("overwrite").parquet(lineage_path)
+            write_parquet(lineage, lineage_path)
             _save_manifest(index_dir, manifest)
         elif not manifest["phases"]["structure"].get("fused_scores") and not _phase_done(
             manifest, "scores", scores_path
@@ -805,7 +885,7 @@ def build_index(
             scores = score_postings_df(structure_r, stats, cfg, n_docs, avgdl).observe(
                 obs, F.count(F.lit(1)).alias("lists"), F.sum("scores_bytes").alias("bytes")
             )
-            scores.write.mode("overwrite").parquet(scores_path)
+            write_parquet(scores, scores_path)
             row = obs.get
             manifest["phases"]["scores"] = {
                 "rows": int(row["lists"] or 0), "wall_sec": time.time() - t0
@@ -825,7 +905,7 @@ def build_index(
                     "shard", "left",
                 )
             )
-            lineage.write.mode("overwrite").parquet(lineage_path)
+            write_parquet(lineage, lineage_path)
             m = manifest["metrics"]
             m["payload_bytes"] = int(m.get("structure_bytes", 0)) + int(m["scores_bytes"])
             wall_s = manifest["phases"]["structure"]["wall_sec"]
@@ -1043,7 +1123,7 @@ def _update_derived(
         # file) — no O(corpus) consolidation rewrite per delta
         meta_r = meta_all
     else:
-        meta_all.write.mode("overwrite").parquet(os.path.join(index_dir, meta_rel))
+        write_parquet(meta_all, os.path.join(index_dir, meta_rel))
         meta_r = spark.read.parquet(os.path.join(index_dir, meta_rel))
 
     stats_r, srow = _write_dictionary(
@@ -1073,9 +1153,9 @@ def _update_derived(
     # docmeta, not an O(corpus) join against the full table
     struct_delta = encode_structure_df(
         tf_enc, meta_enc if meta_enc is not None else meta_r, stats_r, cfg,
-        score_globals=(n_docs_all, avgdl) if fuse else None,
+        score_globals=(n_docs_all, avgdl) if fuse else None, shards=owned,
     ).observe(obs_s, F.count(F.lit(1)).alias("lists"))
-    struct_delta.write.mode("overwrite").parquet(os.path.join(index_dir, struct_rel))
+    write_parquet(struct_delta, os.path.join(index_dir, struct_rel))
     n_reencoded = int(obs_s.get["lists"] or 0)
 
     new_paths = {
@@ -1114,7 +1194,7 @@ def _update_derived(
         scores_df = score_postings_df(structure_all, stats_r, cfg, n_docs_all, avgdl).observe(
             obs_sc, F.sum("scores_bytes").alias("bytes")
         )
-        scores_df.write.mode("overwrite").parquet(os.path.join(index_dir, scores_rel))
+        write_parquet(scores_df, os.path.join(index_dir, scores_rel))
         scores_bytes = int(obs_sc.get["bytes"] or 0)
         manifest["metrics"]["score_refresh_shuffled"] = _score_refresh_shuffled(scores_df)
 
@@ -1131,7 +1211,7 @@ def _update_derived(
                 "shard", "left",
             )
         )
-    lineage.write.mode("overwrite").parquet(os.path.join(index_dir, lin_rel))
+    write_parquet(lineage, os.path.join(index_dir, lin_rel))
     lin = spark.read.parquet(os.path.join(index_dir, lin_rel)).agg(
         F.sum("n_postings").alias("p"), F.sum("structure_bytes").alias("sb")
     ).collect()[0]
@@ -1339,7 +1419,7 @@ def add_documents(
     # ---- delta phase 1+2: tokenize + meta for the new docs only
     tf_rel, meta_rel = f"tf_g{gen}.parquet", f"docmeta_g{gen}.parquet"
     tf_new = _tokenize(base, cfg)
-    tf_new.write.mode("overwrite").parquet(os.path.join(index_dir, tf_rel))
+    write_parquet(tf_new, os.path.join(index_dir, tf_rel))
     tf_new = spark.read.parquet(os.path.join(index_dir, tf_rel))
     doclens_new = termstats.doc_lengths(tf_new)
     # new docs land in a FRESH generation of shard ids: existing shards'
@@ -1356,7 +1436,7 @@ def add_documents(
             (F.lit(shard_base) + F.pmod(F.xxhash64("doc_id"), F.lit(g_shards))).cast("int"),
         )
     )
-    meta_new.write.mode("overwrite").parquet(os.path.join(index_dir, meta_rel))
+    write_parquet(meta_new, os.path.join(index_dir, meta_rel))
     meta_new = spark.read.parquet(os.path.join(index_dir, meta_rel))
 
     meta_old = _check_doc_clashes(
@@ -1488,13 +1568,13 @@ def _add_stale(
     obs_s = Observation()
     combined = encode_structure_df(
         tf_new, meta_new, stats_sc, cfg,
-        score_globals=(int(epoch["n_docs"]), float(epoch["avgdl"])),
+        score_globals=(int(epoch["n_docs"]), float(epoch["avgdl"])), shards=shards_new,
     ).observe(
         obs_s,
         F.count(F.lit(1)).alias("lists"),
         F.sum("scores_bytes").alias("sbytes"),
     )
-    combined.write.mode("overwrite").parquet(os.path.join(index_dir, struct_rel))
+    write_parquet(combined, os.path.join(index_dir, struct_rel))
     row = obs_s.get
     n_lists = int(row["lists"] or 0)
     delta_scores_bytes = int(row["sbytes"] or 0)
@@ -1657,12 +1737,15 @@ def merge_indexes(
     tf_rel, meta_rel = f"tf_g{gen}.parquet", f"docmeta_g{gen}.parquet"
     # harvest (one columnar copy): the dst stays self-contained — the
     # src dir can be deleted after the merge
-    src_tf.write.mode("overwrite").parquet(os.path.join(index_dir, tf_rel))
+    write_parquet(src_tf, os.path.join(index_dir, tf_rel))
     tf_new = spark.read.parquet(os.path.join(index_dir, tf_rel))
-    src_meta.withColumn(
-        "shard",
-        (F.lit(shard_base) + F.pmod(F.xxhash64("doc_id"), F.lit(g_shards))).cast("int"),
-    ).write.mode("overwrite").parquet(os.path.join(index_dir, meta_rel))
+    write_parquet(
+        src_meta.withColumn(
+            "shard",
+            (F.lit(shard_base) + F.pmod(F.xxhash64("doc_id"), F.lit(g_shards))).cast("int"),
+        ),
+        os.path.join(index_dir, meta_rel),
+    )
     meta_new = spark.read.parquet(os.path.join(index_dir, meta_rel))
 
     # a single well-formed src already guarantees unique doc_ids
@@ -1690,21 +1773,17 @@ def merge_indexes(
         for sm, sp in zip(src_manifests, all_src_paths)
     )
     if dst_pos_current and srcs_pos_current:
-        from .positions import _as_owner_map, read_positions
+        from .positions import _as_owner_map, read_positions, write_positions
 
         pos_rel = f"positions_g{gen}.parquet"
         src_pos = None
         for src_dir, src_paths in zip(src_dirs, all_src_paths):
             p_i = read_positions(spark, src_dir, src_paths["positions"])
             src_pos = p_i if src_pos is None else src_pos.unionByName(p_i)
-        (
-            src_pos
-            .drop("shard")
-            .join(meta_new.select("doc_id", "shard"), "doc_id")
-            .repartition(max(1, len(set(shards_new))), "shard")
-            .sortWithinPartitions("shard", "term", "doc_id")
-            .select("shard", "term", "doc_id", "poss")
-            .write.mode("overwrite").parquet(os.path.join(index_dir, pos_rel))
+        write_positions(
+            src_pos.drop("shard").join(meta_new.select("doc_id", "shard"), "doc_id"),
+            shards_new,
+            os.path.join(index_dir, pos_rel),
         )
         owned = _as_owner_map(paths["positions"], paths["structure"])
         owned.update({str(s): pos_rel for s in shards_new})
@@ -1772,7 +1851,7 @@ def refresh_scores(spark: SparkSession, index_dir: str) -> BuildResult:
     scores_df = score_postings_df(structure_all, stats_r, cfg, n_docs_all, avgdl).observe(
         obs_sc, F.sum("scores_bytes").alias("bytes")
     )
-    scores_df.write.mode("overwrite").parquet(os.path.join(index_dir, scores_rel))
+    write_parquet(scores_df, os.path.join(index_dir, scores_rel))
     scores_bytes = int(obs_sc.get["bytes"] or 0)
     manifest["metrics"]["score_refresh_shuffled"] = _score_refresh_shuffled(scores_df)
 
@@ -1789,7 +1868,7 @@ def refresh_scores(spark: SparkSession, index_dir: str) -> BuildResult:
             "shard", "left",
         )
     )
-    lineage.write.mode("overwrite").parquet(os.path.join(index_dir, lin_rel))
+    write_parquet(lineage, os.path.join(index_dir, lin_rel))
     lin = spark.read.parquet(os.path.join(index_dir, lin_rel)).agg(
         F.sum("n_postings").alias("p"), F.sum("structure_bytes").alias("sb")
     ).collect()[0]
@@ -1886,7 +1965,7 @@ def delete_documents(
     tomb_rel = f"tombstones_v{version}.parquet"
     tombs = _tombstones(spark, index_dir, manifest)
     all_tombs = ids if tombs is None else tombs.select("doc_id").unionByName(ids).distinct()
-    all_tombs.write.mode("overwrite").parquet(os.path.join(index_dir, tomb_rel))
+    write_parquet(all_tombs, os.path.join(index_dir, tomb_rel))
     all_tombs = spark.read.parquet(os.path.join(index_dir, tomb_rel))
 
     tf_all = spark.read.parquet(
@@ -2012,7 +2091,7 @@ def compact(spark: SparkSession, index_dir: str) -> BuildResult:
     if tombs is not None:
         tf_all = tf_all.join(tombs.select("doc_id"), "doc_id", "left_anti")
     tf_rel = f"tf_compact_v{version}.parquet"
-    tf_all.write.mode("overwrite").parquet(os.path.join(index_dir, tf_rel))
+    write_parquet(tf_all, os.path.join(index_dir, tf_rel))
     tf_live = spark.read.parquet(os.path.join(index_dir, tf_rel))
     # fold generation shards back to canonical hash placement — after
     # this the index is byte-identical to a fresh build over the live

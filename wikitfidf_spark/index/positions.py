@@ -8,12 +8,14 @@ doc_id) holding that doc's token positions for the term as a plain
 shards.
 
 Design notes (the 100 TB story):
-- Plain Parquet columns rather than the custom varint codec: parquet's
-  delta/bit-pack encodings already compress monotone position lists
-  well, and the phrase path reads positions for only the 2-3 queried
-  terms — a term-pruned, row-group-prunable scan, never a full-index
-  decode.  The custom codec stays where serving is hot (doc/score
-  streams).
+- Plain Parquet columns rather than the custom varint codec: positions
+  are int32 lists in zstd parquet (``build.write_parquet``, like every
+  artifact), and the phrase path reads positions for only the 2-3
+  queried terms — a term-pruned, row-group-prunable scan, never a
+  full-index decode.  Zstd's entropy stage is what compresses the
+  small position values; parquet itself writes them as plain or
+  dictionary-encoded int32s.  The custom codec stays where serving is
+  hot (doc/score streams).  Each shard is written as its own file.
 - Placement comes from docmeta (the placement authority), so position
   rows co-shuffle with exactly the posting shards that can contain
   them; phrase verification cogroups the two sides on shard with no
@@ -153,13 +155,10 @@ def build_positions(spark: SparkSession, docs: DataFrame, index_dir: str) -> dic
     from pyspark.sql import Observation
 
     obs = Observation()
-    (
-        pos.join(placement, "doc_id")
-        .repartition(cfg.n_shards, "shard")
-        .sortWithinPartitions("shard", "term", "doc_id")
-        .select("shard", "term", "doc_id", "poss")
-        .observe(obs, F.count(F.lit(1)).alias("rows"))
-        .write.mode("overwrite").parquet(os.path.join(index_dir, rel))
+    write_positions(
+        pos.join(placement, "doc_id").observe(obs, F.count(F.lit(1)).alias("rows")),
+        [int(s) for s in paths["structure"]],
+        os.path.join(index_dir, rel),
     )
     # owner map, like structure: incremental adds append a generation
     # positions file for their new shards instead of rebuilding this one
@@ -178,6 +177,19 @@ def _as_owner_map(owned, structure_owners: dict) -> dict:
     if isinstance(owned, str):
         return {str(s): owned for s in structure_owners}
     return dict(owned)
+
+
+def write_positions(rows: DataFrame, shards, path: str) -> None:
+    """Write ``(shard, term, doc_id, poss)`` rows with one file per
+    shard of ``shards``, term-sorted within it."""
+    from .build import place_shards, write_parquet
+
+    write_parquet(
+        place_shards(rows, shards)
+        .sortWithinPartitions("shard", "term", "doc_id")
+        .select("shard", "term", "doc_id", "poss"),
+        path,
+    )
 
 
 def read_positions(spark: SparkSession, index_dir: str, owned) -> DataFrame:
@@ -222,12 +234,10 @@ def extend_positions_for_delta(
         stopwords=cfg.stopwords or None, min_len=cfg.min_token_len,
         letters=cfg.token_letters,
     )
-    (
-        pos.join(meta_new.select("doc_id", "shard"), "doc_id")
-        .repartition(max(1, len(set(shards_new))), "shard")
-        .sortWithinPartitions("shard", "term", "doc_id")
-        .select("shard", "term", "doc_id", "poss")
-        .write.mode("overwrite").parquet(os.path.join(index_dir, rel))
+    write_positions(
+        pos.join(meta_new.select("doc_id", "shard"), "doc_id"),
+        shards_new,
+        os.path.join(index_dir, rel),
     )
     owned = _as_owner_map(paths["positions"], paths["structure"])
     owned.update({str(s): rel for s in shards_new})
@@ -251,14 +261,12 @@ def remap_positions_for_compact(
     shuffle vs an O(corpus) re-tokenize — and compact doesn't retain
     raw text anyway.  Returns the new owner map."""
     rel = f"positions_compact_v{version}.parquet"
-    (
+    write_positions(
         read_positions(spark, index_dir, paths["positions"])
         .drop("shard")
-        .join(meta_live.select("doc_id", "shard"), "doc_id")
-        .repartition(n_shards, "shard")
-        .sortWithinPartitions("shard", "term", "doc_id")
-        .select("shard", "term", "doc_id", "poss")
-        .write.mode("overwrite").parquet(os.path.join(index_dir, rel))
+        .join(meta_live.select("doc_id", "shard"), "doc_id"),
+        range(n_shards),
+        os.path.join(index_dir, rel),
     )
     return {str(s): rel for s in range(n_shards)}
 

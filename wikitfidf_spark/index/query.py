@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import json
 import math
+import numbers
 import os
 import re
 from collections.abc import Iterator, Sequence
@@ -43,7 +44,7 @@ from pyspark.sql.types import IntegralType
 
 from ..operators.scoring import QUANT, round_half_up
 from . import codec
-from .build import load_manifest
+from .build import PLACE_KEY, load_manifest, place_shards
 
 
 #: structure-half vs score-half column split for the unioned
@@ -76,6 +77,14 @@ def _merged_lists(pdf: pd.DataFrame) -> pd.DataFrame:
     return pd.concat([pdf.loc[fused], merged], ignore_index=True)
 
 
+def _qid(v) -> int:
+    """A query id as a Python int.  A non-integer raises: ``int()``
+    would silently truncate ``0.5`` or parse ``"3"``."""
+    if not isinstance(v, numbers.Integral):
+        raise TypeError(f"query_id must be an integer, got {v!r}")
+    return int(v)
+
+
 def _check_unique_qids(qids: "Iterable[int]") -> None:
     """Batch APIs key per-query limits and the final rank window on
     query_id — duplicate ids would silently merge two queries' results
@@ -86,11 +95,25 @@ def _check_unique_qids(qids: "Iterable[int]") -> None:
     seen: set[int] = set()
     dups: set[int] = set()
     for qid in qids:
+        qid = _qid(qid)
         if not -(2**31) <= qid < 2**31:
             raise ValueError(f"query_id {qid} is outside int32 [-2**31, 2**31 - 1]")
         (dups if qid in seen else seen).add(qid)
     if dups:
         raise ValueError(f"duplicate query_id(s) in batch: {sorted(dups)}")
+
+
+def _check_request(qid: int, terms_fields: dict, int_fields: dict) -> None:
+    """Type checks every batch request shares, naming the field: each
+    of ``terms_fields`` is a list of strings (a bare string would be
+    iterated as characters), each of ``int_fields`` an integer (a
+    float ``k`` would be truncated)."""
+    for name, terms in terms_fields.items():
+        if isinstance(terms, (str, bytes)) or not all(isinstance(t, str) for t in terms):
+            raise TypeError(f"query {qid}: {name} must be a list of strings, got {terms!r}")
+    for name, v in int_fields.items():
+        if not isinstance(v, numbers.Integral):
+            raise ValueError(f"query {qid}: {name} must be an integer, got {v!r}")
 
 
 def _sql_lit(v: "str | int") -> str:
@@ -423,6 +446,7 @@ class InvertedIndex:
         from .build import _read_scores, _read_structure, index_paths
 
         p = index_paths(self.manifest)
+        self._shards = sorted(int(s) for s in p["structure"])
         self.structure = _read_structure(spark, index_dir, p)
         # single file after a full refresh, an owner map while
         # deferred-refresh deltas are outstanding (bounded staleness)
@@ -475,6 +499,10 @@ class InvertedIndex:
         """
         _check_unique_qids(q.query_id for q in queries)
         for q in queries:
+            _check_request(
+                q.query_id, {"terms": q.terms, "exclude": q.exclude},
+                {"k": q.k, "offset": q.offset, "min_should_match": q.min_should_match},
+            )
             if not q.terms:
                 # an empty term list would silently yield zero rows for
                 # this qid — indistinguishable from "no matches"; the
@@ -568,12 +596,12 @@ class InvertedIndex:
         if predicate is not None:
             allowed = self.docmeta.filter(predicate).select("shard", "doc_id")
             local = (
-                rows.groupBy("shard")
-                .cogroup(allowed.groupBy("shard"))
+                self._by_shard(rows)
+                .cogroup(self._by_shard(allowed))
                 .applyInPandas(per_shard_taat_filtered, _LOCAL_SCHEMA)
             )
         else:
-            local = rows.groupBy("shard").applyInPandas(per_shard_taat, _LOCAL_SCHEMA)
+            local = self._by_shard(rows).applyInPandas(per_shard_taat, _LOCAL_SCHEMA)
         return self._rank_and_limit(local)
 
     def topk(
@@ -669,6 +697,15 @@ class InvertedIndex:
         c_rows = self.scores.filter(term_filter).select(*keys, *_SCORE_COLS)
         return s_rows.unionByName(c_rows, allowMissingColumns=True)
 
+    def _by_shard(self, df: DataFrame):
+        """``df`` grouped per shard for a per-shard kernel, each shard
+        in its own partition up to the session's shuffle-partition
+        count (:func:`place_shards`).  Grouping on the per-shard
+        placement key reuses that one exchange, also on both sides of a
+        cogroup; shards that share a partition stay separate groups."""
+        n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        return place_shards(df, self._shards, n).groupBy(PLACE_KEY)
+
     @staticmethod
     def _rank_and_limit(local: DataFrame) -> DataFrame:
         """Global merge: per-query window top-k over the ≤ shards*(k+off)
@@ -721,6 +758,7 @@ class InvertedIndex:
         phrases = list(phrases)
         _check_unique_qids(q.query_id for q in phrases)
         for q in phrases:
+            _check_request(q.query_id, {"terms": q.terms}, {"k": q.k, "slop": q.slop})
             if len(q.terms) < 2:
                 raise ValueError(f"query {q.query_id}: phrase needs at least 2 terms")
             if q.k < 1:
@@ -768,8 +806,8 @@ class InvertedIndex:
             return label(_taat_kernel(pdf, spec, query_allowed=allowed))
 
         local = (
-            rows.groupBy("shard")
-            .cogroup(pos_rows.groupBy("shard"))
+            self._by_shard(rows)
+            .cogroup(self._by_shard(pos_rows))
             .applyInPandas(per_shard_phrase, _LOCAL_SCHEMA)
         )
         return self._rank_and_limit(local)
@@ -1036,7 +1074,7 @@ class InvertedIndex:
         vocabulary), then one rank window per query replaces the
         per-call TakeOrdered.  Row-identical to :meth:`prefix_terms`
         per query (same (df desc, term asc) cut)."""
-        prefixes = [(int(qid), p) for qid, p in prefixes]
+        prefixes = [(_qid(qid), p) for qid, p in prefixes]
         _check_unique_qids(qid for qid, _ in prefixes)
         if any(not p for _, p in prefixes):
             raise ValueError("prefix must be non-empty (the full dictionary is .dictionary)")
@@ -1119,7 +1157,7 @@ class InvertedIndex:
         ``|panels| * max_expansions`` dictionary rows.  Row-identical
         per panel to :meth:`wildcard_topk` (equivalence-tested); a
         panel whose pattern matches nothing yields no rows."""
-        panels = [(int(qid), p) for qid, p in panels]
+        panels = [(_qid(qid), p) for qid, p in panels]
         _check_unique_qids(qid for qid, _ in panels)
         compiled = [
             (qid, *wildcard_regex(p)) for qid, p in panels
@@ -1187,7 +1225,9 @@ class InvertedIndex:
         asc) cut)."""
         if max_dist < 0:
             raise ValueError(f"max_dist must be >= 0, got {max_dist}")
-        queries = [(int(qid), q) for qid, q in queries]
+        if n < 1:
+            raise ValueError(f"n must be >= 1, got {n}")
+        queries = [(_qid(qid), q) for qid, q in queries]
         _check_unique_qids(qid for qid, _ in queries)
         qdf = self.spark.createDataFrame(queries, "query_id int, q string")
         w = Window.partitionBy("query_id").orderBy(
@@ -1529,7 +1569,7 @@ class InvertedIndex:
         a broadcast term→panel fan-out (a term shared by two panels
         fans to both).  Fixing match-set semantics here fixes all
         three aggregations at once."""
-        queries = [(int(qid), sorted(set(terms))) for qid, terms in queries]
+        queries = [(_qid(qid), sorted(set(terms))) for qid, terms in queries]
         _check_unique_qids(qid for qid, _ in queries)
         if not queries or any(not terms for _, terms in queries):
             raise ValueError("every panel needs at least one term")
@@ -1558,7 +1598,7 @@ class InvertedIndex:
         The membership-only sibling is :meth:`_panel_match_sets`."""
         if mode not in ("OR", "AND"):
             raise ValueError(f"unknown mode {mode!r}: use 'OR' or 'AND'")
-        queries = [(int(qid), sorted(set(terms))) for qid, terms in queries]
+        queries = [(_qid(qid), sorted(set(terms))) for qid, terms in queries]
         _check_unique_qids(qid for qid, _ in queries)
         if not queries or any(not terms for _, terms in queries):
             raise ValueError("every panel needs at least one term")
@@ -1789,7 +1829,7 @@ class InvertedIndex:
                             f"panel {qid}: term {t!r} appears in more than one group"
                         )
                     seen.add(t)
-            norm.append((int(qid), gs))
+            norm.append((_qid(qid), gs))
         _check_unique_qids(qid for qid, _ in norm)
         from ..operators.scoring import bm25_term_scores
         from .build import _load_cfg
@@ -1909,7 +1949,7 @@ class InvertedIndex:
         from ..operators.similarity import DOT_QUANT
 
         queries = [
-            (int(qid), list(terms), np.asarray(list(qv), dtype=np.float64))
+            (_qid(qid), list(terms), np.asarray(list(qv), dtype=np.float64))
             for qid, terms, qv in queries
         ]
         _check_unique_qids(qid for qid, _, _ in queries)

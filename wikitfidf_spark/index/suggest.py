@@ -30,7 +30,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .build import _save_manifest, index_paths, load_manifest
+from .build import _save_manifest, index_paths, load_manifest, write_parquet
 from .query import _in_values
 
 
@@ -96,12 +96,12 @@ def build_suggest_index(
     dictionary = spark.read.parquet(os.path.join(index_dir, paths["dictionary"]))
     rel = f"suggest_v{int(manifest.get('version', 0))}_d{max_dist}.parquet"
     keys = _delete_keys(dictionary.select("term"), "term", max_dist)
-    (
+    write_parquet(
         keys.join(dictionary.select("term", "df"), "term")
         .repartition("key")
         .sortWithinPartitions("key")
-        .select("key", "term", "df")
-        .write.mode("overwrite").parquet(os.path.join(index_dir, rel))
+        .select("key", "term", "df"),
+        os.path.join(index_dir, rel),
     )
     manifest["paths"]["suggest"] = rel
     manifest["suggest_version"] = int(manifest.get("version", 0))
@@ -178,9 +178,9 @@ def suggest_indexed_batch(
     whole batch); shared keys between queries are scanned once."""
     if max_dist < 0:
         raise ValueError(f"max_dist must be >= 0, got {max_dist}")
-    from .query import _check_unique_qids  # lazy: query.py imports nothing from here
+    from .query import _check_unique_qids, _qid  # lazy: query.py imports nothing from here
 
-    queries = [(int(qid), q) for qid, q in queries]
+    queries = [(_qid(qid), q) for qid, q in queries]
     _check_unique_qids(qid for qid, _ in queries)
     tbl = _open_suggest_table(spark, index_dir, max_dist)
     panel = spark.createDataFrame(
