@@ -524,8 +524,8 @@ def q_index_filtered_topk(spark, sf_dir):
     same terms as the unfiltered flagship, restricted to docs whose
     topic is 'en' — the filter+rank shape real search serving needs.
     Scores of surviving docs are identical to the unfiltered engine's
-    (the oracle checks rank AND score); the relational mirror is
-    InvertedIndex.topk_filtered, parity-tested in tests."""
+    (the oracle checks rank AND score); tests check the same path
+    against a pure-Python BM25 restricted to the predicate's docs."""
     from wikitfidf_spark.index.query import Query
 
     idx = _cached_index(spark, sf_dir)
@@ -727,7 +727,7 @@ def q_index_prefix_terms(spark, sf_dir):
     """Dictionary prefix search (autocomplete primitive): top-10
     highest-df terms starting with PREFIX_Q.  O(vocab) scan with the
     StartsWith predicate pushed into the dictionary parquet; top-n is
-    TakeOrderedAndProject — never touches postings or corpus."""
+    a per-query rank cut — never touches postings or corpus."""
     idx = _cached_index(spark, sf_dir)
     return idx.prefix_terms(PREFIX_Q, 10)
 
@@ -764,8 +764,8 @@ def q_index_prefix_batch(spark, sf_dir):
     """Two autocomplete panels served in ONE job
     (InvertedIndex.prefix_terms_batch): the prefix panel broadcasts
     against the O(vocab) dictionary with a StartsWith theta-join and
-    one rank window per panel replaces the per-call TakeOrdered —
-    row-identical per panel to index_prefix_terms."""
+    one rank window per panel cuts each to n — index_prefix_terms is
+    the one-panel case of the same method."""
     idx = _cached_index(spark, sf_dir)
     return idx.prefix_terms_batch([(0, PREFIX_Q), (1, PREFIX_Q2)], n=10)
 

@@ -6,6 +6,7 @@ corpus with no Spark in the loop)."""
 from __future__ import annotations
 
 import math
+import re
 import shutil
 from collections import Counter
 from contextlib import contextmanager
@@ -74,14 +75,18 @@ def test_prefix_empty_raises(idx):
         idx.prefix_terms("")
 
 
-def test_suggest_matches_oracle(idx, py_stats):
+def _py_suggest(py_stats, q, d, n):
     _, _, dfc, _ = py_stats
-    q, d = "arg_ctx", 2  # exact hit + arg_ctx77/arg_cfg/arg_ptr neighbors
-    want = sorted(
+    return sorted(
         ((t, _lev(t, q), dfc[t]) for t in dfc
          if abs(len(t) - len(q)) <= d and _lev(t, q) <= d),
         key=lambda x: (x[1], -x[2], x[0]),
-    )[:10]
+    )[:n]
+
+
+def test_suggest_matches_oracle(idx, py_stats):
+    q, d = "arg_ctx", 2  # exact hit + arg_ctx77/arg_cfg/arg_ptr neighbors
+    want = _py_suggest(py_stats, q, d, 10)
     got = [(r["term"], r["dist"], r["df"]) for r in idx.suggest(q, d, 10).collect()]
     assert got == want and len(got) > 0
 
@@ -93,18 +98,32 @@ def test_suggest_exact_hit_ranks_first(idx, py_stats):
     assert got[0]["term"] == term and got[0]["dist"] == 0
 
 
-def test_prefix_terms_batch_equals_per_call(idx):
+def _py_prefix(py_stats, prefix, n):
+    _, _, dfc, cfc = py_stats
+    return sorted(
+        ((t, dfc[t], cfc[t]) for t in dfc if t.startswith(prefix)),
+        key=lambda x: (-x[1], x[0]),
+    )[:n]
+
+
+def test_prefix_terms_batch_equals_per_call(idx, py_stats):
+    """Each batch panel and the single call (a one-panel batch) equal
+    the pure-Python expectation; the prefixes' OR pushes into the
+    dictionary scan."""
     # one keystroke tick's panels: hits, a no-match prefix, a 1-char one
     prefixes = [(0, "re"), (1, "arg_"), (2, "zzzznope"), (3, "m")]
-    got = idx.prefix_terms_batch(prefixes, n=7).collect()
+    batch = idx.prefix_terms_batch(prefixes, n=7)
     by_qid: dict[int, list] = {}
-    for r in got:
+    for r in batch.collect():
         by_qid.setdefault(r["query_id"], []).append((r["term"], r["df"], r["cf"]))
     for qid, p in prefixes:
-        want = [(r["term"], r["df"], r["cf"]) for r in idx.prefix_terms(p, 7).collect()] \
-            if p else []
+        want = _py_prefix(py_stats, p, 7)
         assert by_qid.get(qid, []) == want, f"prefix panel {qid} ({p!r}) diverged"
+        single = [(r["term"], r["df"], r["cf"]) for r in idx.prefix_terms(p, 7).collect()]
+        assert single == want, f"prefix_terms({p!r}) diverged"
     assert 2 not in by_qid  # no-match prefix yields no rows, not an error
+    e = batch._sc._jvm.PythonSQLUtils.explainString(batch._jdf.queryExecution(), "formatted")
+    assert "StringStartsWith(term,re)" in e and "StringStartsWith(term,arg_)" in e
 
 
 def test_prefix_terms_batch_guards(idx):
@@ -123,8 +142,10 @@ def test_suggest_batch_equals_per_call(idx, py_stats):
     for r in got:
         by_qid.setdefault(r["query_id"], []).append((r["term"], r["dist"], r["df"]))
     for qid, q in queries:
-        want = [(r["term"], r["dist"], r["df"]) for r in idx.suggest(q, 2, 8).collect()]
+        want = _py_suggest(py_stats, q, 2, 8)
         assert by_qid.get(qid, []) == want, f"suggest panel {qid} ({q!r}) diverged"
+        single = [(r["term"], r["dist"], r["df"]) for r in idx.suggest(q, 2, 8).collect()]
+        assert single == want, f"suggest({q!r}) diverged"
     assert by_qid[1][0] == (hot, 0, dfc[hot])  # exact hit still ranks first
 
 
@@ -328,7 +349,10 @@ def test_suggest_indexed_equals_scan(spark, idx, py_stats):
         assert fast == scan, (q, d)
 
 
-def test_suggest_indexed_batch_equals_per_call(spark, idx):
+def test_suggest_indexed_batch_equals_per_call(spark, idx, py_stats):
+    """Each batch panel and the single call (a one-panel batch) equal
+    the pure-Python expectation; the union of the batch's deletion
+    keys pushes into the key table's scan."""
     from wikitfidf_spark.index.suggest import (
         build_suggest_index,
         suggest_indexed,
@@ -337,16 +361,20 @@ def test_suggest_indexed_batch_equals_per_call(spark, idx):
 
     build_suggest_index(spark, IDX_DIR, max_dist=2)
     queries = [(0, "arg_ctx"), (1, "core_get_ctx"), (2, "zzzz")]
-    got = suggest_indexed_batch(spark, IDX_DIR, queries, max_dist=2, n=10).collect()
+    batch = suggest_indexed_batch(spark, IDX_DIR, queries, max_dist=2, n=10)
     by_qid: dict[int, list] = {}
-    for r in got:
+    for r in batch.collect():
         by_qid.setdefault(r["query_id"], []).append((r["term"], r["dist"], r["df"]))
     for qid, q in queries:
-        want = [
+        want = _py_suggest(py_stats, q, 2, 10)
+        assert by_qid.get(qid, []) == want, (qid, q)
+        single = [
             (r["term"], r["dist"], r["df"])
             for r in suggest_indexed(spark, IDX_DIR, q, 2, 10).collect()
         ]
-        assert by_qid.get(qid, []) == want, (qid, q)
+        assert single == want, (q, "single")
+    e = batch._sc._jvm.PythonSQLUtils.explainString(batch._jdf.queryExecution(), "formatted")
+    assert re.search(r"PushedFilters: \[[^\]]*In\(key,", e), e
     with pytest.raises(ValueError, match="duplicate"):
         suggest_indexed_batch(spark, IDX_DIR, [(0, "a"), (0, "b")])
     with pytest.raises(ValueError, match="max_dist"):
@@ -1020,18 +1048,18 @@ def test_facet_histogram_guards(idx):
         idx.facet_histogram([], edges=(0, 10))
 
 
-def test_collapse_topk_matches_oracle(idx, py_stats):
-    """Field collapsing: the best-scoring doc per topic, groups ranked
-    by their representative's score, vs a pure-Python oracle."""
+def _py_collapse(py_stats, terms, k, mode="OR"):
+    """Best-scoring doc per topic (ties doc asc), groups ranked by
+    their representative (score desc, doc asc), top k → (topic, doc,
+    score_q)."""
     tfs, langs, dfc, _ = py_stats
     dls = {d: sum(c.values()) for d, c in tfs.items()}
     n = len(tfs)
     avgdl = sum(dls.values()) / n
-    terms = ["arg_ctx77", "arg_cfg"]
     scores = {}
     for d, c in tfs.items():
         present = [t for t in set(terms) if t in c]
-        if present:
+        if present and (mode == "OR" or len(present) == len(set(terms))):
             scores[d] = sum(
                 bm25_quantized_py(c[t], dls[d], dfc[t], n, avgdl) for t in present
             )
@@ -1040,10 +1068,17 @@ def test_collapse_topk_matches_oracle(idx, py_stats):
         cur = best.get(langs[d])
         if cur is None or (-s, d) < (-cur[1], cur[0]):
             best[langs[d]] = (d, s)
-    want = sorted(
+    return sorted(
         ((lang, d, s) for lang, (d, s) in best.items()),
         key=lambda x: (-x[2], x[1]),
-    )[:5]
+    )[:k]
+
+
+def test_collapse_topk_matches_oracle(idx, py_stats):
+    """Field collapsing: the best-scoring doc per topic, groups ranked
+    by their representative's score, vs a pure-Python oracle."""
+    terms = ["arg_ctx77", "arg_cfg"]
+    want = _py_collapse(py_stats, terms, 5)
     got = [
         (r["topic"], r["doc_id"], r["score_q"])
         for r in idx.collapse_topk(terms, field="topic", k=5).collect()
@@ -1070,11 +1105,13 @@ def test_facet_histogram_rejects_nan_edges(idx):
         idx.facet_histogram(["arg_cfg"], edges=(0.0, float("nan"), 100.0))
 
 
-def test_collapse_topk_batch_equals_per_call(idx):
-    """collapse_topk_batch == a loop of single collapse_topk calls, in
-    both modes; a term shared by two panels fans out to both and
-    per-panel ordering (score desc, doc asc) survives the rank
-    window."""
+def test_collapse_topk_batch_equals_per_call(idx, py_stats):
+    """Each collapse_topk_batch panel and the single collapse_topk call
+    (a one-panel batch) equal the pure-Python collapse, in both modes;
+    a term shared by two panels fans out to both and per-panel
+    ordering (score desc, doc asc) survives the rank window."""
+    from wikitfidf_spark.operators.scoring import QUANT
+
     t1, t2, t3 = [
         r["term"]
         for r in idx.dictionary.orderBy(F.desc("df"), F.asc("term")).limit(3).collect()
@@ -1089,10 +1126,15 @@ def test_collapse_topk_batch_equals_per_call(idx):
             )
         for qid, terms in panels:
             want = [
+                (topic, d, s, s / QUANT)
+                for topic, d, s in _py_collapse(py_stats, terms, 5, mode)
+            ]
+            assert by_qid.get(qid, []) == want, f"collapse panel {qid} ({mode}) diverged"
+            single = [
                 (r["topic"], r["doc_id"], r["score_q"], r["score"])
                 for r in idx.collapse_topk(terms, field="topic", k=5, mode=mode).collect()
             ]
-            assert by_qid.get(qid, []) == want, f"collapse panel {qid} ({mode}) diverged"
+            assert single == want, f"collapse_topk({terms}, {mode}) diverged"
         assert by_qid  # hot terms must match something
 
 
@@ -1625,7 +1667,8 @@ def test_malformed_requests_fail_loudly(idx):
     """Malformed batch requests raise naming the field instead of being
     cast or iterated silently: a bare string as ``terms``, non-integral
     ``k``/``offset``/``min_should_match``, non-string terms, non-integer
-    query ids, and ``suggest_batch(n=0)``."""
+    query ids, ``n=0`` on the prefix and suggest families, unknown
+    docmeta columns and malformed predicates."""
     from wikitfidf_spark.index.query import PhraseQuery, Query
 
     with pytest.raises(TypeError, match="terms"):
@@ -1651,10 +1694,47 @@ def test_malformed_requests_fail_loudly(idx):
         idx.facet_counts_batch([(0.5, ["arg_cfg"])])
     with pytest.raises(TypeError, match="query_id"):
         idx.suggest_batch([("x", "arg_cfg")])
-    with pytest.raises(ValueError, match="n must be >= 1"):
-        idx.suggest_batch([(0, "arg_cfg")], n=0)
-    # integral numpy ids and k still serve
+    from wikitfidf_spark.index.suggest import suggest_indexed, suggest_indexed_batch
+
+    for call in (
+        lambda: idx.suggest_batch([(0, "arg_cfg")], n=0),
+        lambda: idx.suggest("arg_cfg", n=0),
+        lambda: idx.prefix_terms_batch([(0, "arg")], n=0),
+        lambda: idx.prefix_terms("arg", n=0),
+        lambda: suggest_indexed(idx.spark, idx.index_dir, "arg_cfg", n=0),
+        lambda: suggest_indexed_batch(idx.spark, idx.index_dir, [(0, "arg_cfg")], n=0),
+    ):
+        with pytest.raises(ValueError, match="n must be >= 1"):
+            call()
+    # unknown docmeta columns name the argument they came from
+    for arg, call in (
+        ("facet", lambda: idx.facet_counts_batch([(0, ["arg_cfg"])], facet="nope")),
+        ("facet", lambda: idx.facet_counts(["arg_cfg"], facet="nope")),
+        ("col", lambda: idx.facet_histogram_batch([(0, ["arg_cfg"])], col="nope")),
+        ("col", lambda: idx.facet_stats(["arg_cfg"], col="nope")),
+        ("field", lambda: idx.collapse_topk(["arg_cfg"], field="nope")),
+        ("field", lambda: idx.bucket_top_hits_batch([(0, ["arg_cfg"])], field="nope")),
+    ):
+        with pytest.raises(ValueError, match=f"{arg}='nope' is not a docmeta column"):
+            call()
+    # a predicate that does not parse or resolve raises naming it
+    some_doc = idx.docmeta.select("doc_id").first()["doc_id"]
+    for pred in ("topic = = 'go'", "no_such_col = 1", "doc_len + 1"):
+        for call in (
+            lambda: idx.topk_batch([Query(0, ["arg_cfg"])], predicate=pred),
+            lambda: idx.snippets_batch(idx.docmeta, [Query(0, ["arg_cfg"])], predicate=pred),
+            lambda: idx.more_like_this_batch([some_doc], predicate=pred),
+        ):
+            with pytest.raises(ValueError, match="predicate"):
+                call()
+    # integral numpy ids and k still serve; the unfiltered kernel's
+    # applyInPandas callback raises no eval-type inference warning
+    import warnings
+
     import numpy as _np
 
-    ok = idx.topk_batch([Query(_np.int64(3), ["arg_cfg"], "OR", _np.int32(2))]).collect()
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        ok = idx.topk_batch([Query(_np.int64(3), ["arg_cfg"], "OR", _np.int32(2))]).collect()
+    assert not [w for w in caught if "infer the eval type" in str(w.message)], caught
     assert {r["query_id"] for r in ok} == {3} and len(ok) == 2

@@ -86,63 +86,74 @@ def test_wand_rank_identity(spark, built, oracle):
         assert by_q.get(q.query_id, []) == _oracle_topk(oracle, q.terms, q.k, q.mode), q
 
 
-def test_relational_equals_wand(spark, built, oracle):
+def test_single_topk_equals_oracle(spark, built, oracle):
+    """The single-query ``topk`` (a one-query ``topk_batch``) ranks
+    exactly like the pure-Python BM25 oracle."""
     idx = InvertedIndex(spark, IDX_DIR)
     for q in QUERIES[:3]:
-        engine = [(r["doc_id"], r["score_q"]) for r in idx.topk(q.terms, q.k, q.mode).orderBy(F.desc("score_q"), "doc_id").collect()]
-        rel = [(r["doc_id"], r["score_q"]) for r in idx.topk_relational(q.terms, q.k, q.mode).collect()]
-        assert engine == rel, q
+        engine = [(r["doc_id"], r["score_q"]) for r in idx.topk(q.terms, q.k, q.mode).orderBy("rank").collect()]
+        assert engine == _oracle_topk(oracle, q.terms, q.k, q.mode), q
 
 
-def test_filtered_topk_global_scores_restricted_candidates(spark, built, corpus, oracle):
-    """topk_filtered must rank ONLY docs passing the docmeta predicate
-    while keeping GLOBAL BM25 stats (idf/avgdl from the whole corpus) —
-    filtering restricts candidates, never changes a survivor's score."""
-    from wikitfidf_spark.operators.scoring import bm25_quantized_py
-
-    tfs, dls, dfc, n, avgdl = oracle
-    langs = {
+def _langs(corpus):
+    return {
         r["doc_id"]: r["lang"]
         for r in corpus.withColumn("doc_id", F.xxhash64("repo", "path", "commit"))
         .select("doc_id", "lang").collect()
     }
+
+
+def _oracle_filtered_topk(oracle, langs, lang, terms, k, mode):
+    """``_oracle_topk`` over the docs of one ``lang`` only, with the
+    corpus-wide statistics: a filter restricts candidates, never a
+    survivor's score."""
+    tfs, dls, dfc, n, avgdl = oracle
+    kept = {d: c for d, c in tfs.items() if langs[d] == lang}
+    return _oracle_topk((kept, dls, dfc, n, avgdl), terms, k, mode)
+
+
+def test_filtered_topk_global_scores_restricted_candidates(spark, built, corpus, oracle):
+    """topk_batch(predicate=) must rank ONLY docs passing the docmeta
+    predicate while keeping GLOBAL BM25 stats (idf/avgdl from the whole
+    corpus) — filtering restricts candidates, never changes a
+    survivor's score."""
+    _, _, dfc, _, _ = oracle
+    langs = _langs(corpus)
     idx = InvertedIndex(spark, IDX_DIR)
     term = max(dfc, key=lambda t: (dfc[t], t))  # hottest term: hits every lang
-    got = sorted(
-        ((r["doc_id"], r["score_q"]) for r in
-         idx.topk_filtered([term], 10, "OR", "topic = 'python'").collect()),
-        key=lambda t: (-t[1], t[0]),
-    )
-    exp = {
-        d: bm25_quantized_py(c[term], dls[d], dfc[term], n, avgdl)
-        for d, c in tfs.items()
-        if langs[d] == "python" and term in c
-    }
-    exp = sorted(exp.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
-    assert got == exp and len(got) > 0
-    assert all(langs[d] == "python" for d, _ in got)
+    got = [
+        (r["doc_id"], r["score_q"]) for r in
+        idx.topk_batch([Query(0, [term], "OR", 10)], predicate="topic = 'python'")
+        .orderBy("rank").collect()
+    ]
+    assert got == _oracle_filtered_topk(oracle, langs, "python", [term], 10, "OR")
+    assert len(got) > 0 and all(langs[d] == "python" for d, _ in got)
 
 
-def test_filtered_engine_paths_equal_relational(spark, built, oracle):
-    """Both filtered paths must agree: the cogrouped kernel (allowed ids
-    co-shuffled by shard, vectorized np.isin mask) and the relational
-    semi-join mirror — for every query and mode."""
+def test_filtered_topk_batch_equals_oracle(spark, built, corpus, oracle):
+    """The cogrouped filtered kernel (allowed ids co-shuffled by shard,
+    vectorized np.isin mask) ranks every query of a batch like the
+    pure-Python oracle restricted to the predicate's docs, in both
+    modes."""
     idx = InvertedIndex(spark, IDX_DIR)
     _, _, dfc, _, _ = oracle
+    langs = _langs(corpus)
     hot = sorted(dfc, key=lambda t: (-dfc[t], t))[:2]
     pred = "topic = 'go'"
     qs = [Query(0, hot, "OR", 10), Query(1, [hot[0]], "AND", 5),
           Query(2, hot, "AND", 10)]
-    norm = lambda rows: sorted(
-        (r["query_id"], r["doc_id"], r["score_q"]) for r in rows
+    taat = sorted(
+        (r["query_id"], r["rank"], r["doc_id"], r["score_q"])
+        for r in idx.topk_batch(qs, predicate=pred).collect()
     )
-    taat = norm(idx.topk_batch(qs, predicate=pred).collect())
-    rel = sorted(
-        (q.query_id, r["doc_id"], r["score_q"])
+    want = sorted(
+        (q.query_id, rank, d, s)
         for q in qs
-        for r in idx.topk_filtered(q.terms, q.k, q.mode, pred).collect()
+        for rank, (d, s) in enumerate(
+            _oracle_filtered_topk(oracle, langs, "go", q.terms, q.k, q.mode), 1
+        )
     )
-    assert taat == rel and len(taat) > 0
+    assert taat == want and len(taat) > 0
     # an unsatisfiable predicate must yield empty, not error
     assert idx.topk_batch(qs[:1], predicate="topic = 'nope'").count() == 0
 

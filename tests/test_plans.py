@@ -349,11 +349,21 @@ def test_batch_serving_plans(spark, tmp_path_factory):
     assert mb.count() > 0
 
 
+def _window_partitions(p: str) -> list[str]:
+    """The partition columns of every Window operator in an executed
+    plan string (exprIds stripped)."""
+    return [
+        re.sub(r"#\d+", "", cols)
+        for cols in re.findall(r"Window \[.*?\], \[([^\]]*)\], \[", p)
+    ]
+
+
 def test_wildcard_and_collapse_plans(spark, tmp_path_factory):
     """Round-5 final serving additions keep the scale shapes:
-    - expand_wildcard pushes the literal prefix into the dictionary
-      scan as StartsWith (row-group pruning on the term-sorted
-      dictionary) and cuts with TakeOrderedAndProject;
+    - expand_wildcard (one panel of the batch expansion) pushes the
+      literal prefix into the dictionary scan as StartsWith (row-group
+      pruning on the term-sorted dictionary), and its only window is
+      the per-panel cap partitioned by query_id;
     - wildcard_topk_batch's expansion join is a broadcast of the tiny
       panel, never nested-loop over the vocabulary rows;
     - facet_histogram's bucket index is a pure expression (no Python
@@ -366,7 +376,7 @@ def test_wildcard_and_collapse_plans(spark, tmp_path_factory):
     exp = idx.expand_wildcard("arg_c*")
     e = explain_str(exp)
     assert "StringStartsWith(term,arg_c)" in e      # pushed into the scan
-    assert "TakeOrderedAndProject" in plan(exp)
+    assert _window_partitions(plan(exp)) == ["query_id"]
 
     pdf_plan = explain_str(
         idx.dictionary.select("term", "df")
@@ -399,7 +409,7 @@ def test_wildcard_and_collapse_plans(spark, tmp_path_factory):
     # skewed field value can't serialize onto one partition
     ec = explain_str(coll)
     assert "partial_min" in ec
-    assert "Window" not in pc
+    assert _window_partitions(pc) == ["query_id"]
     assert coll.count() > 0
 
     # batch shapes keep the scale properties: the panel fan-out is a

@@ -1,26 +1,28 @@
 """BM25 top-k query engine over the sharded posting-list index.
 
-Two formulations, both rank-identical (tests assert it):
+Top-k is one term-at-a-time (TAAT) kernel per shard inside
+``applyInPandas`` (:func:`_taat_kernel`): decode the shard's queried
+posting rows in one pass, then score the whole query batch in chunked
+vectorized passes (gather, stable sort on query·doc, ``reduceat`` sums,
+one sort for every query's top k) over integer quantized scores
+(bit-deterministic, see operators/scoring.py).  Because the index is
+document-partitioned, each shard's scores are complete, so the global
+answer is a merge of ≤ shards*k rows per query.  A metadata
+``predicate`` is a mask inside the same kernel.
 
-- **serving**: one term-at-a-time (TAAT) kernel per shard inside
-  ``applyInPandas`` (:func:`_taat_kernel`) — decode the shard's
-  queried posting rows in one pass, then score the whole query batch
-  in chunked vectorized passes (gather, stable sort on query·doc,
-  ``reduceat`` sums, one sort for every query's top k) over integer
-  quantized scores (bit-deterministic, see operators/scoring.py).
-  Because the index is document-partitioned, each shard's scores are
-  complete, so the global answer is a merge of ≤ shards*k rows per
-  query.
-- **relational** (the oracle-checkable path): decode postings to
-  (doc_id, term, tf, score_q) rows with ``mapInPandas``, then plain
-  DataFrame agg + top-k.  Also serves the degenerate TF-IDF mode
-  (BASELINE.json:north_star last sentence): reference formula
-  tfidf = round4(tf/doc_len * log10(N/df)) per tfidf.go:100-103.
+The aggregation families (facets, collapse, function score, ...)
+decode postings to (term, doc_id, tf, score_q) rows with
+``mapInPandas`` (:meth:`InvertedIndex.decoded`) and aggregate them as
+plain DataFrames.  The same decode serves the degenerate TF-IDF mode
+(BASELINE.json:north_star last sentence): reference formula
+tfidf = round4(tf/doc_len * log10(N/df)) per tfidf.go:100-103.
 
-Queries run **batched**: one Spark job scores an arbitrary list of
-queries (each shard task scores every query of the batch in one kernel
-call) — this is what makes q/s scale instead of paying per-query job
-overhead.
+Every family serves **batches**: one Spark job answers a list of
+queries or panels, and a single-query method is a one-panel call of
+its batch (query id 0, then ``.drop("query_id")``), so a family has
+one code path and one validation.  Each per-query rank cut is
+:func:`~wikitfidf_spark.operators.topk.top_n_per_group` partitioned by
+query id.
 
 Tie-break everywhere: (score desc, doc_id asc) — SURVEY.md §7
 rank-identity requirement.
@@ -28,7 +30,6 @@ rank-identity requirement.
 
 from __future__ import annotations
 
-import json
 import math
 import numbers
 import os
@@ -38,11 +39,13 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType
 
 from ..operators.scoring import QUANT, round_half_up
+from ..operators.topk import top_n_per_group
 from . import codec
 from .build import PLACE_KEY, load_manifest, place_shards
 
@@ -139,6 +142,16 @@ def _in_values(col: str, values: "Iterable[str | int]") -> Column:
     if not lits:
         return F.lit(False)
     return F.expr(f"`{col}` IN ({', '.join(lits)})")
+
+
+def _startswith_any(col: str, prefixes: "Iterable[str]") -> Column:
+    """``col`` starts with one of ``prefixes``, as ONE parsed OR of
+    ``startswith`` calls; each pushes into a parquet scan as
+    ``StringStartsWith`` (row-group pruning on a term-sorted file)."""
+    uniq = sorted(set(prefixes))
+    if not uniq:
+        return F.lit(False)
+    return F.expr(" OR ".join(f"startswith(`{col}`, {_sql_lit(p)})" for p in uniq))
 
 
 def _k_off_labeler(kmap: "dict[int, tuple[int, int]]"):
@@ -554,6 +567,7 @@ class InvertedIndex:
                         raise ValueError(
                             f"query {q.query_id}: term {t!r} has conflicting boosts"
                         )
+        allowed = self._allowed_docs(predicate) if predicate is not None else None
         # excluded terms' postings are fetched too — their doc ids form
         # the shard-local must_not masks (never scored)
         all_terms = sorted(
@@ -584,20 +598,22 @@ class InvertedIndex:
         rows = self._posting_rows(all_terms)
         label = _k_off_labeler({q.query_id: (q.k, q.offset) for q in queries})
 
-        def per_shard_taat(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        # the per-shard callbacks carry no type hints: PySpark infers an
+        # eval type from hints, fails on the bare ``key``, warns, and
+        # falls back to the grouped-map type it picks for no hints
+        def per_shard_taat(key, pdf):
             return label(_taat_kernel(pdf, qspec, None))
 
         # cogrouped filtered variants: apdf holds this shard's allowed
         # doc ids with their native int64 dtype (a null-padded union
         # would route them through float64 and corrupt xxhash-range ids)
-        def per_shard_taat_filtered(key, pdf: pd.DataFrame, apdf: pd.DataFrame) -> pd.DataFrame:
+        def per_shard_taat_filtered(key, pdf, apdf):
             return label(_taat_kernel(pdf, qspec, np.unique(apdf["doc_id"].to_numpy())))
 
-        if predicate is not None:
-            allowed = self.docmeta.filter(predicate).select("shard", "doc_id")
+        if allowed is not None:
             local = (
                 self._by_shard(rows)
-                .cogroup(self._by_shard(allowed))
+                .cogroup(self._by_shard(allowed.select("shard", "doc_id")))
                 .applyInPandas(per_shard_taat_filtered, _LOCAL_SCHEMA)
             )
         else:
@@ -706,16 +722,37 @@ class InvertedIndex:
         n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         return place_shards(df, self._shards, n).groupBy(PLACE_KEY)
 
+    def _allowed_docs(self, predicate: str) -> DataFrame:
+        """The docmeta rows ``predicate`` selects.  A predicate that does
+        not parse, or does not resolve to a boolean over docmeta
+        columns, raises ``ValueError`` naming it, not a raw Spark
+        parser or analyzer error."""
+        try:
+            return self.docmeta.filter(predicate)
+        except AnalysisException as e:  # ParseException is one too
+            raise ValueError(
+                f"predicate {predicate!r} is not a boolean SQL expression over the"
+                f" docmeta columns {self.docmeta.columns}: {e}"
+            ) from None
+
+    def _docmeta_col(self, arg: str, name: str) -> None:
+        """``ValueError`` naming the argument ``arg`` unless ``name`` is
+        a docmeta column."""
+        if name not in self.docmeta.columns:
+            raise ValueError(
+                f"{arg}={name!r} is not a docmeta column: {self.docmeta.columns}"
+            )
+
     @staticmethod
     def _rank_and_limit(local: DataFrame) -> DataFrame:
-        """Global merge: per-query window top-k over the ≤ shards*(k+off)
+        """Global merge: per-query top-k over the ≤ shards*(k+off)
         shard-local results.  Each row carries its query's ``k`` and
         ``off`` (:func:`_k_off_labeler`); ranks are absolute, the offset
         window filters off < rank <= off + k."""
-        w = Window.partitionBy("query_id").orderBy(F.desc("score_q"), F.asc("doc_id"))
-        out = local.withColumn("rank", F.row_number().over(w)).filter(
-            (F.col("rank") > F.col("off")) & (F.col("rank") <= F.col("off") + F.col("k"))
-        )
+        out = top_n_per_group(
+            local, ["query_id"], [F.desc("score_q"), F.asc("doc_id")],
+            F.col("off") + F.col("k"),
+        ).filter(F.col("rank") > F.col("off"))
         return out.select(
             "query_id", "doc_id", "score_q",
             (F.col("score_q").cast("double") / F.lit(float(QUANT))).alias("score"),
@@ -789,7 +826,7 @@ class InvertedIndex:
         qspec = [(q.query_id, list(q.terms), q.k, q.slop) for q in phrases]
         label = _k_off_labeler({q.query_id: (q.k, 0) for q in phrases})
 
-        def per_shard_phrase(key, pdf: pd.DataFrame, ppdf: pd.DataFrame) -> pd.DataFrame:
+        def per_shard_phrase(key, pdf, ppdf):
             # shard-level work is paid ONCE for the batch: the positions
             # rows are grouped by term once, each phrase verifies
             # adjacency over that grouping, and one kernel pass scores
@@ -999,11 +1036,10 @@ class InvertedIndex:
                 4,
             ),
         )
-        w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"), F.asc("term"))
         top_terms: dict[int, list[str]] = {}
         for r in (
-            scored.withColumn("r", F.row_number().over(w))
-            .filter(F.col("r") <= m).select("doc_id", "term", "r")
+            top_n_per_group(scored, ["doc_id"], [F.desc("tfidf"), F.asc("term")], m, "r")
+            .select("doc_id", "term", "r")
             .orderBy("doc_id", "r").collect()
         ):
             top_terms.setdefault(r["doc_id"], []).append(r["term"])
@@ -1048,71 +1084,91 @@ class InvertedIndex:
     def prefix_terms(self, prefix: str, n: int = 10) -> DataFrame:
         """Term-dictionary prefix search (the autocomplete primitive):
         the ``n`` highest-df terms starting with ``prefix``, ties
-        term-asc.  Pure JVM: ``StartsWith`` pushes into the dictionary
-        parquet scan (only term/df/cf columns read), and the top-n is a
-        TakeOrderedAndProject over the filtered rows — no shuffle of
-        the full vocabulary.  The dictionary is O(vocab), not
-        O(corpus), so this stays cheap at any corpus size."""
-        if not prefix:
-            raise ValueError("prefix must be non-empty (the full dictionary is .dictionary)")
-        return (
-            self.dictionary.filter(F.col("term").startswith(prefix))
-            .select("term", "df", "cf")
-            .orderBy(F.desc("df"), F.asc("term"))
-            .limit(n)
-        )
+        term-asc → (term, df, cf).  One-panel :meth:`prefix_terms_batch`."""
+        return self.prefix_terms_batch([(0, prefix)], n).drop("query_id")
 
     def prefix_terms_batch(
         self, prefixes: Sequence[tuple[int, str]], n: int = 10
     ) -> DataFrame:
         """Prefix search for a batch of (query_id, prefix) panels in ONE
         job → (query_id, term, df, cf) — the autocomplete serving shape
-        (one keystroke tick fans out many live prefix panels).  Plan:
-        the prefix panel broadcasts against the O(vocab) dictionary
-        with a ``StartsWith`` theta-join (vocab × |batch| predicate
-        evaluations, whole-stage codegen — no Python, no shuffle of the
-        vocabulary), then one rank window per query replaces the
-        per-call TakeOrdered.  Row-identical to :meth:`prefix_terms`
-        per query (same (df desc, term asc) cut)."""
+        (one keystroke tick fans out many live prefix panels), the
+        ``n`` highest-df terms per panel, ties term-asc.  Plan: an OR
+        of the batch's prefixes pushes into the dictionary parquet scan
+        as ``StartsWith`` (row-group pruning on the term-sorted
+        dictionary; only term/df/cf columns read), the survivors join
+        the broadcast prefix panel with a ``StartsWith`` theta-join
+        (whole-stage codegen — no Python, no shuffle of the
+        vocabulary), then one rank window per query cuts to ``n``.
+        The dictionary is O(vocab), not O(corpus), so this stays cheap
+        at any corpus size."""
+        if n < 1:
+            raise ValueError(f"n must be >= 1, got {n}")
         prefixes = [(_qid(qid), p) for qid, p in prefixes]
         _check_unique_qids(qid for qid, _ in prefixes)
         if any(not p for _, p in prefixes):
             raise ValueError("prefix must be non-empty (the full dictionary is .dictionary)")
         pdf = self.spark.createDataFrame(prefixes, "query_id int, prefix string")
-        w = Window.partitionBy("query_id").orderBy(F.desc("df"), F.asc("term"))
-        return (
-            self.dictionary.select("term", "df", "cf")
+        cand = (
+            self.dictionary.filter(_startswith_any("term", [p for _, p in prefixes]))
+            .select("term", "df", "cf")
             .join(F.broadcast(pdf), F.col("term").startswith(F.col("prefix")))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= F.lit(n))
+        )
+        return (
+            top_n_per_group(cand, ["query_id"], [F.desc("df"), F.asc("term")], n)
             .select("query_id", "term", "df", "cf")
             .orderBy("query_id", F.desc("df"), F.asc("term"))
         )
+
+    def _expand_wildcards(
+        self, panels: Sequence[tuple[int, str]], max_expansions: int
+    ) -> DataFrame:
+        """Wildcard term expansion for a batch of (query_id, pattern)
+        panels → (query_id, term, df, cf), unordered: each panel's
+        ``max_expansions`` highest-df matching terms, ties term-asc
+        (Lucene's top-terms rewrite).  Plan: when every pattern has a
+        literal prefix before its first wildcard, an OR of those
+        prefixes pushes into the dictionary parquet scan as
+        ``StartsWith`` (row-group pruning on the term-sorted
+        dictionary); the survivors join the broadcast panel with a
+        prefix + ``regexp_like`` theta-join (whole-stage codegen, no
+        Python), and one rank window per panel applies the cap —
+        O(prefix range) for anchored patterns, O(vocab) worst case for
+        leading-wildcard ones, never O(corpus)."""
+        panels = [(_qid(qid), p) for qid, p in panels]
+        _check_unique_qids(qid for qid, _ in panels)
+        compiled = [
+            (qid, *wildcard_regex(p)) for qid, p in panels
+        ]  # raises on an empty pattern
+        if max_expansions < 1:
+            raise ValueError(f"max_expansions must be >= 1, got {max_expansions}")
+        pdf = self.spark.createDataFrame(
+            compiled, "query_id int, rx string, prefix string"
+        )
+        d = self.dictionary
+        if all(prefix for _, _, prefix in compiled):
+            d = d.filter(_startswith_any("term", [prefix for _, _, prefix in compiled]))
+        cand = d.select("term", "df", "cf").join(
+            F.broadcast(pdf),
+            F.col("term").startswith(F.col("prefix"))
+            & F.regexp_like(F.col("term"), F.col("rx")),
+        )
+        return top_n_per_group(
+            cand, ["query_id"], [F.desc("df"), F.asc("term")], max_expansions, "r"
+        ).select("query_id", "term", "df", "cf")
 
     def expand_wildcard(self, pattern: str, max_expansions: int = 32) -> DataFrame:
         """Wildcard term expansion over the dictionary (Lucene's
         multi-term rewrite primitive): ``*`` matches any run of
         characters, ``?`` exactly one.  Returns the ``max_expansions``
-        highest-df matching terms (ties term-asc) as (term, df, cf).
-        Plan: the literal prefix before the first wildcard pushes into
-        the dictionary parquet scan as ``StartsWith`` (row-group
-        pruning on the term-sorted dictionary), the anchored match runs
-        as a JVM ``RLIKE`` over the survivors (whole-stage codegen, no
-        Python), and the cut is a TakeOrderedAndProject — O(prefix
-        range) for anchored patterns, O(vocab) worst case for
-        leading-wildcard ones, never O(corpus).  The deterministic
-        df-ranked cap bounds downstream scoring cost no matter how
-        broad the pattern (Lucene's top-terms rewrite)."""
-        if max_expansions < 1:
-            raise ValueError(f"max_expansions must be >= 1, got {max_expansions}")
-        rx, prefix = wildcard_regex(pattern)
-        d = self.dictionary.select("term", "df", "cf")
-        if prefix:
-            d = d.filter(F.col("term").startswith(prefix))
+        highest-df matching terms (ties term-asc) as (term, df, cf),
+        in that order — one panel of :meth:`_expand_wildcards`.  The
+        deterministic df-ranked cap bounds downstream scoring cost no
+        matter how broad the pattern."""
         return (
-            d.filter(F.col("term").rlike(rx))
+            self._expand_wildcards([(0, pattern)], max_expansions)
             .orderBy(F.desc("df"), F.asc("term"))
-            .limit(max_expansions)
+            .drop("query_id")
         )
 
     def wildcard_topk(
@@ -1149,37 +1205,15 @@ class InvertedIndex:
         max_expansions: int = 32,
     ) -> DataFrame:
         """Wildcard search for a batch of (query_id, pattern) panels:
-        ONE dictionary job expands every pattern (the panel broadcasts
-        against the O(vocab) dictionary with a ``regexp_like`` + prefix
-        theta-join, whole-stage codegen; one rank window per panel
-        applies the (df desc, term asc) cap), then ONE ``topk_batch``
-        scores all expansions.  The intermediate collect is bounded by
+        ONE dictionary job expands every pattern
+        (:meth:`_expand_wildcards`), then ONE ``topk_batch`` scores all
+        expansions.  The intermediate collect is bounded by
         ``|panels| * max_expansions`` dictionary rows.  Row-identical
         per panel to :meth:`wildcard_topk` (equivalence-tested); a
         panel whose pattern matches nothing yields no rows."""
-        panels = [(_qid(qid), p) for qid, p in panels]
-        _check_unique_qids(qid for qid, _ in panels)
-        compiled = [
-            (qid, *wildcard_regex(p)) for qid, p in panels
-        ]  # raises on an empty pattern, like expand_wildcard
-        if max_expansions < 1:
-            raise ValueError(f"max_expansions must be >= 1, got {max_expansions}")
-        pdf = self.spark.createDataFrame(
-            compiled, "query_id int, rx string, prefix string"
-        )
-        w = Window.partitionBy("query_id").orderBy(F.desc("df"), F.asc("term"))
-        exp = (
-            self.dictionary.select("term", "df")
-            .join(
-                F.broadcast(pdf),
-                F.col("term").startswith(F.col("prefix"))
-                & F.regexp_like(F.col("term"), F.col("rx")),
-            )
-            .withColumn("r", F.row_number().over(w))
-            .filter(F.col("r") <= F.lit(max_expansions))
-            .select("query_id", "term")
-            .collect()
-        )
+        exp = self._expand_wildcards(panels, max_expansions).select(
+            "query_id", "term"
+        ).collect()
         by_qid: dict[int, list[str]] = {}
         for r in exp:
             by_qid.setdefault(r["query_id"], []).append(r["term"])
@@ -1192,37 +1226,21 @@ class InvertedIndex:
     def suggest(self, query_term: str, max_dist: int = 1, n: int = 10) -> DataFrame:
         """Spell-suggest over the term dictionary: terms within
         ``max_dist`` Levenshtein edits of ``query_term``, ranked
-        (distance asc, df desc, term asc).  The length band
-        ``|len(term) − len(q)| ≤ max_dist`` is a necessary condition
-        for edit distance ≤ max_dist, so it prunes the vocabulary
-        BEFORE the O(len²) distance — both predicates and
-        ``levenshtein`` itself run JVM-side (whole-stage codegen), no
-        Python in the loop."""
-        if max_dist < 0:
-            raise ValueError(f"max_dist must be >= 0, got {max_dist}")
-        qlen = len(query_term)
-        return (
-            self.dictionary.filter(
-                F.abs(F.length("term") - F.lit(qlen)) <= F.lit(max_dist)
-            )
-            .withColumn("dist", F.levenshtein(F.col("term"), F.lit(query_term)))
-            .filter(F.col("dist") <= F.lit(max_dist))
-            .select("term", "dist", "df")
-            .orderBy(F.asc("dist"), F.desc("df"), F.asc("term"))
-            .limit(n)
-        )
+        (distance asc, df desc, term asc) → (term, dist, df).
+        One-panel :meth:`suggest_batch`."""
+        return self.suggest_batch([(0, query_term)], max_dist, n).drop("query_id")
 
     def suggest_batch(
         self, queries: Sequence[tuple[int, str]], max_dist: int = 1, n: int = 10
     ) -> DataFrame:
         """Spell-suggest for a batch of (query_id, term) lookups in ONE
-        job → (query_id, term, dist, df).  The length band
-        ``|len(term) − len(q)| ≤ max_dist`` rides the broadcast
+        job → (query_id, term, dist, df), the ``n`` best per query by
+        (dist asc, df desc, term asc).  The length band
+        ``|len(term) − len(q)| ≤ max_dist`` is a necessary condition
+        for edit distance ≤ max_dist; it rides the broadcast
         theta-join condition, so the O(len²) ``levenshtein`` only runs
         on banded (term, query) pairs — all JVM codegen, one dictionary
-        scan for the whole batch instead of one per call.  Row-identical
-        to :meth:`suggest` per query (same (dist asc, df desc, term
-        asc) cut)."""
+        scan for the whole batch."""
         if max_dist < 0:
             raise ValueError(f"max_dist must be >= 0, got {max_dist}")
         if n < 1:
@@ -1230,10 +1248,7 @@ class InvertedIndex:
         queries = [(_qid(qid), q) for qid, q in queries]
         _check_unique_qids(qid for qid, _ in queries)
         qdf = self.spark.createDataFrame(queries, "query_id int, q string")
-        w = Window.partitionBy("query_id").orderBy(
-            F.asc("dist"), F.desc("df"), F.asc("term")
-        )
-        return (
+        cand = (
             self.dictionary.select("term", "df")
             .join(
                 F.broadcast(qdf),
@@ -1241,8 +1256,11 @@ class InvertedIndex:
             )
             .withColumn("dist", F.levenshtein(F.col("term"), F.col("q")))
             .filter(F.col("dist") <= F.lit(max_dist))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= F.lit(n))
+        )
+        return (
+            top_n_per_group(
+                cand, ["query_id"], [F.asc("dist"), F.desc("df"), F.asc("term")], n
+            )
             .select("query_id", "term", "dist", "df")
             .orderBy("query_id", F.asc("dist"), F.desc("df"), F.asc("term"))
         )
@@ -1261,21 +1279,11 @@ class InvertedIndex:
         background rate, computed as exact integer products divided
         ONCE (IEEE division is correctly rounded, so the score is
         bit-identical across engines; deliberately NOT the JLH/chi²
-        log shapes, whose libm transcendentals differ).
-
-        Plan: membership-only decode of the queried postings →
-        distinct match set; ONE scan of the tf generations (column-
-        pruned to (doc_id, term), tombstone-anti-joined) semi-joined
-        to the match set → fg_df per term; the (match-vocab-sized) fg
-        table joins the dictionary for bg_df; the match count rides a
-        broadcast one-row agg, never a collect.  During a bounded-
-        staleness window the foreground counts live docs (delta
-        generations included), so bg_df is the structure-derived live
-        df and N the live doc count: both sides are measured on the
-        same corpus snapshot and ``fg_df <= bg_df`` holds.  Delegates to :meth:`significant_terms_batch` with
-        one panel — one code path for the lift semantics."""
-        if not list(terms):
-            raise ValueError("needs at least one term")
+        log shapes, whose libm transcendentals differ).  During a
+        bounded-staleness window bg_df is the structure-derived live df
+        and N the live doc count, measured on the same snapshot as the
+        foreground, so ``fg_df <= bg_df`` holds.  One-panel
+        :meth:`significant_terms_batch`."""
         return (
             self.significant_terms_batch([(0, list(terms))], n=n, min_fg_df=min_fg_df)
             .drop("query_id")
@@ -1294,7 +1302,7 @@ class InvertedIndex:
         tf-generation scan joins the (query_id, doc_id) match table
         (per-panel fg counts in one partial agg); per-panel match
         counts and the dictionary bg_df ride broadcast joins; one rank
-        window per panel replaces the per-call TakeOrdered.
+        window per panel cuts to ``n``.
         Row-identical per panel to :meth:`significant_terms`
         (equivalence-tested) — fixed job costs paid once per batch."""
         from .build import _tombstones, index_paths
@@ -1339,14 +1347,14 @@ class InvertedIndex:
         lift = (F.col("fg_df").cast("double") * F.lit(float(n_docs))) / (
             F.col("bg_df").cast("double") * F.col("m_cnt").cast("double")
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("lift"), F.desc("fg_df"), F.asc("term")
+        scored = bg.join(F.broadcast(m_df), "query_id").select(
+            "query_id", "term", "fg_df", "bg_df", lift.alias("lift")
         )
         return (
-            bg.join(F.broadcast(m_df), "query_id")
-            .select("query_id", "term", "fg_df", "bg_df", lift.alias("lift"))
-            .withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") <= n)
+            top_n_per_group(
+                scored, ["query_id"], [F.desc("lift"), F.desc("fg_df"), F.asc("term")],
+                n, "_rk",
+            )
             .drop("_rk")
             .orderBy("query_id", F.desc("lift"), F.desc("fg_df"), F.asc("term"))
         )
@@ -1546,38 +1554,40 @@ class InvertedIndex:
         """Facet counts over the OR-match set: how many live docs
         matching ANY of ``terms`` fall in each ``facet`` bucket (a
         docmeta column), ordered (count desc, facet asc) — the
-        aggregation panel next to search results.
-
-        Plan: term-pruned posting scan → doc ids decoded per list →
-        distinct (match set, ≪ corpus for selective terms) → join
-        docmeta (AQE picks broadcast when the match set is small) →
-        partial-agg count per facet.  Nothing here is O(corpus) except
-        the docmeta side of the join, which prunes to (doc_id, facet)
-        columns."""
+        aggregation panel next to search results.  One-panel
+        :meth:`facet_counts_batch`."""
         return (
             self.facet_counts_batch([(0, list(terms))], facet=facet)
             .drop("query_id")
         )
 
-    def _panel_match_sets(
+    def _panels(
         self, queries: Sequence[tuple[int, Sequence[str]]]
-    ) -> tuple[list[tuple[int, list[str]]], DataFrame]:
-        """The shared front half of every facet batch (counts /
-        histogram / stats): normalize and validate the (query_id,
-        terms) panels, then build the per-(panel, doc) DISTINCT match
-        set — ONE term-pruned posting decode for the union of terms +
-        a broadcast term→panel fan-out (a term shared by two panels
-        fans to both).  Fixing match-set semantics here fixes all
-        three aggregations at once."""
+    ) -> tuple[list[tuple[int, list[str]]], list[str], DataFrame]:
+        """Normalize and validate (query_id, terms) panels → (panels
+        with sorted distinct terms, the union of their terms, the
+        (query_id, term) frame that fans each decoded term out to every
+        panel holding it).  The one front door of the panel families."""
         queries = [(_qid(qid), sorted(set(terms))) for qid, terms in queries]
         _check_unique_qids(qid for qid, _ in queries)
         if not queries or any(not terms for _, terms in queries):
             raise ValueError("every panel needs at least one term")
-        all_terms = sorted({t for _, terms in queries for t in terms})
         tq = self.spark.createDataFrame(
             [(qid, t) for qid, terms in queries for t in terms],
             "query_id int, term string",
         )
+        return queries, sorted({t for _, terms in queries for t in terms}), tq
+
+    def _panel_match_sets(
+        self, queries: Sequence[tuple[int, Sequence[str]]]
+    ) -> tuple[list[tuple[int, list[str]]], DataFrame]:
+        """The shared front half of every facet batch (counts /
+        histogram / stats): the :meth:`_panels`, then the per-(panel,
+        doc) DISTINCT match set — ONE term-pruned posting decode for
+        the union of terms + a broadcast term→panel fan-out (a term
+        shared by two panels fans to both).  Fixing match-set semantics
+        here fixes all three aggregations at once."""
+        queries, all_terms, tq = self._panels(queries)
         match = (
             self.decoded_docs(all_terms)
             .join(F.broadcast(tq), "term")
@@ -1588,25 +1598,18 @@ class InvertedIndex:
 
     def _panel_scored_aggs(
         self, queries: Sequence[tuple[int, Sequence[str]]], mode: str
-    ) -> tuple[list[tuple[int, list[str]]], DataFrame]:
+    ) -> DataFrame:
         """The shared SCORED front half of the panel batch rankers
-        (field collapse / function score): normalize and validate the
-        panels, decode the union of terms once WITH scores, broadcast
-        the term→panel fan-out, and aggregate one score sum per
-        (panel, doc) — AND panels additionally require the panel's
-        full distinct-term count (broadcast per-panel size table).
-        The membership-only sibling is :meth:`_panel_match_sets`."""
+        (field collapse / function score / bucket top hits): the
+        :meth:`_panels`, the union of terms decoded once WITH scores,
+        the broadcast term→panel fan-out, and one score sum per
+        (panel, doc) → (query_id, doc_id, score_q) — AND panels
+        additionally require the panel's full distinct-term count
+        (broadcast per-panel size table).  The membership-only sibling
+        is :meth:`_panel_match_sets`."""
         if mode not in ("OR", "AND"):
             raise ValueError(f"unknown mode {mode!r}: use 'OR' or 'AND'")
-        queries = [(_qid(qid), sorted(set(terms))) for qid, terms in queries]
-        _check_unique_qids(qid for qid, _ in queries)
-        if not queries or any(not terms for _, terms in queries):
-            raise ValueError("every panel needs at least one term")
-        all_terms = sorted({t for _, terms in queries for t in terms})
-        tq = self.spark.createDataFrame(
-            [(qid, t) for qid, terms in queries for t in terms],
-            "query_id int, term string",
-        )
+        queries, all_terms, tq = self._panels(queries)
         d = (
             self.decoded(all_terms).select("term", "doc_id", "score_q")
             .join(F.broadcast(tq), "term")
@@ -1616,7 +1619,7 @@ class InvertedIndex:
                 [(qid, len(terms)) for qid, terms in queries],
                 "query_id int, q_n_terms int",
             )
-            agg = (
+            return (
                 d.groupBy("query_id", "doc_id")
                 .agg(
                     F.sum("score_q").alias("score_q"),
@@ -1626,11 +1629,7 @@ class InvertedIndex:
                 .filter(F.col("n_terms") == F.col("q_n_terms"))
                 .select("query_id", "doc_id", "score_q")
             )
-        else:
-            agg = d.groupBy("query_id", "doc_id").agg(
-                F.sum("score_q").alias("score_q")
-            )
-        return queries, agg
+        return d.groupBy("query_id", "doc_id").agg(F.sum("score_q").alias("score_q"))
 
     def facet_counts_batch(
         self, queries: Sequence[tuple[int, Sequence[str]]], facet: str = "topic"
@@ -1641,6 +1640,7 @@ class InvertedIndex:
         terms, broadcast fan-out, per-(query, doc) distinct), one
         docmeta join, one partial-agg count — the per-panel fixed cost
         (scan + decode + join) is paid once for the whole batch."""
+        self._docmeta_col("facet", facet)
         _, docs = self._panel_match_sets(queries)
         return (
             docs.join(self.docmeta.select("doc_id", facet), "doc_id")
@@ -1661,17 +1661,10 @@ class InvertedIndex:
         ``[edges[i], edges[i+1])`` of a numeric docmeta column →
         (bucket_start, bucket_end, n_docs), bucket-start ascending.
         Values outside ``[edges[0], edges[-1])`` are not counted —
-        callers wanting an overflow bucket add a high edge.
-
-        Plan: the same term-pruned decode → distinct match set →
-        docmeta join as :meth:`facet_counts`; the bucket index is a
-        pure JVM expression (Σ (value >= edge) − 1 over the literal
-        edge list — no UDF, no extra shuffle beyond the count agg)."""
-        uniq = sorted(set(terms))
-        if not uniq:
-            raise ValueError("needs at least one term")
+        callers wanting an overflow bucket add a high edge.  One-panel
+        :meth:`facet_histogram_batch`."""
         return (
-            self.facet_histogram_batch([(0, uniq)], col=col, edges=edges)
+            self.facet_histogram_batch([(0, list(terms))], col=col, edges=edges)
             .drop("query_id")
         )
 
@@ -1698,6 +1691,7 @@ class InvertedIndex:
             not math.isfinite(e) for e in edges
         ) or any(not (a < b) for a, b in zip(edges, edges[1:])):
             raise ValueError("edges must be >= 2 finite, strictly increasing values")
+        self._docmeta_col("col", col)
         _, match = self._panel_match_sets(queries)
         v = F.col(col).cast("double")
         idx = sum((v >= F.lit(e)).cast("int") for e in edges) - F.lit(1)
@@ -1722,11 +1716,8 @@ class InvertedIndex:
         ``stats`` aggregation next to search results): count / min /
         max / sum / avg / median of a numeric docmeta column over the
         live docs matching ANY of ``terms`` → one row (n_docs, min_v,
-        max_v, sum_v, avg_v, median_v).  Same term-pruned decode → distinct match set →
-        pruned docmeta join plan as :meth:`facet_counts`; the stats are
-        one partial-agg (map-side combine) over the match set.  avg is
-        derived sum/count, so for integer-valued columns every output
-        is exact and engine-independent."""
+        max_v, sum_v, avg_v, median_v).  One-panel
+        :meth:`facet_stats_batch`."""
         return (
             self.facet_stats_batch([(0, list(terms))], col=col).drop("query_id")
         )
@@ -1742,8 +1733,8 @@ class InvertedIndex:
         One posting scan decoded once for the union of terms, broadcast
         term→panel fan-out, per-(panel, doc) distinct, one docmeta
         join, one partial agg — fixed job costs paid once per batch
-        (the :meth:`facet_counts_batch` shape).  Row-identical per
-        panel to :meth:`facet_stats`, which delegates here.
+        (the :meth:`facet_counts_batch` shape).  avg is sum/count, so
+        integer columns give exact, engine-independent stats.
 
         NULL semantics follow the Elasticsearch stats agg: ``n_docs``
         counts matched docs where the field is PRESENT (non-null),
@@ -1751,6 +1742,7 @@ class InvertedIndex:
         those same docs, so the outputs stay mutually consistent on
         nullable columns (a panel whose matches all lack the field
         yields no row, like a no-match panel)."""
+        self._docmeta_col("col", col)
         _, match = self._panel_match_sets(queries)
         v = F.col(col).cast("double")
         return (
@@ -1810,7 +1802,7 @@ class InvertedIndex:
         member) under a composite "qid:gid" scoring key, so one
         term-pruned decode + one broadcast term→(panel, group) map +
         one partial agg serve every panel; per-panel rank windows
-        replace the per-call TakeOrdered.  Row-identical per panel to
+        cut to ``k``.  Row-identical per panel to
         :meth:`synonym_topk`, which delegates here."""
         if mode not in ("OR", "AND"):
             raise ValueError(f"unknown mode {mode!r}: use 'OR' or 'AND'")
@@ -1877,15 +1869,9 @@ class InvertedIndex:
                 .filter(F.col("_ng") == F.col("_want"))
                 .drop("_want")
             )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score_q"), F.asc("doc_id")
-        )
-        return (
-            agg.drop("_ng")
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .orderBy("query_id", "rank")
-        )
+        return top_n_per_group(
+            agg.drop("_ng"), ["query_id"], [F.desc("score_q"), F.asc("doc_id")], k
+        ).orderBy("query_id", "rank")
 
     # ---------- hybrid lexical + dense retrieval ----------
 
@@ -2011,10 +1997,12 @@ class InvertedIndex:
                 * F.lit(1e6) + F.lit(0.5)
             ) / F.lit(1e6),
         )
-        w_cos = Window.partitionBy("query_id").orderBy(
-            F.desc_nulls_last("cos"), F.asc("doc_id")
-        )
-        fused = scored.withColumn("rank_cos", F.row_number().over(w_cos)).withColumn(
+        # each query's pool holds at most m candidates, so the cut at m
+        # only ranks them
+        fused = top_n_per_group(
+            scored, ["query_id"], [F.desc_nulls_last("cos"), F.asc("doc_id")], m,
+            "rank_cos",
+        ).withColumn(
             "rrf_q",
             F.floor(
                 (
@@ -2025,15 +2013,15 @@ class InvertedIndex:
                 ) * F.lit(1e9) + F.lit(0.5)
             ).cast("long"),
         )
-        w_k = Window.partitionBy("query_id").orderBy(F.desc("rrf_q"), F.asc("doc_id"))
         return (
-            fused.withColumn("rank_k", F.row_number().over(w_k))
-            .filter(F.col("rank_k") <= F.lit(k))
+            top_n_per_group(
+                fused, ["query_id"], [F.desc("rrf_q"), F.asc("doc_id")], k, "rank_k"
+            )
             .select("query_id", "doc_id", "bm25_q", "cos", "rrf_q")
             .orderBy("query_id", F.desc("rrf_q"), F.asc("doc_id"))
         )
 
-    # ---------- relational (oracle-checkable) path ----------
+    # ---------- decoded postings (the aggregation families' input) ----------
 
     def decoded(self, terms: Sequence[str] | None = None) -> DataFrame:
         """(term, doc_id, tf, score_q) rows decoded from postings, one
@@ -2078,71 +2066,6 @@ class InvertedIndex:
 
         return rows.mapInPandas(decode, "term string, doc_id long")
 
-    def topk_relational(
-        self, terms: Sequence[str], k: int = 10, mode: str = "OR"
-    ) -> DataFrame:
-        """Same answer as :meth:`topk_batch` via plain DataFrame ops
-        (the correctness mirror; also the ANSI-SQL-expressible
-        formulation).  Degenerate unfiltered case of
-        :meth:`topk_filtered` — one scoring body."""
-        return self.topk_filtered(terms, k, mode, "true")
-
-    def topk_filtered(
-        self,
-        terms: Sequence[str],
-        k: int = 10,
-        mode: str = "OR",
-        predicate: str = "true",
-    ) -> DataFrame:
-        """Metadata-filtered BM25 top-k: rank only documents whose
-        docmeta row satisfies ``predicate`` (any SQL expression over
-        docmeta columns — topic, doc_len, the id columns...).
-
-        Physical shape: decode the queried posting lists, LEFT-SEMI
-        join the allowed doc ids, aggregate, cut.  The allowed set is
-        produced by a pushed-down docmeta scan; at 10^12 docs
-        co-locate the semi join by bucketing docmeta on the same
-        doc-hash the shards use (filters selective enough to broadcast
-        get auto-broadcast by Catalyst).  Scores are the same exact
-        quantized impacts the unfiltered paths serve — filtering never
-        changes a surviving document's score."""
-        agg = self._scored_doc_agg(terms, mode, predicate)
-        return (
-            agg.orderBy(F.desc("score_q"), F.asc("doc_id"))
-            .limit(k)
-            .select(
-                "doc_id", "score_q",
-                (F.col("score_q").cast("double") / F.lit(float(QUANT))).alias("score"),
-            )
-        )
-
-    def _scored_doc_agg(
-        self, terms: Sequence[str], mode: str, predicate: str = "true"
-    ) -> DataFrame:
-        """The shared relational scoring body: decode the queried
-        posting lists, optionally LEFT-SEMI join the docmeta rows
-        matching ``predicate``, aggregate per doc → (doc_id, score_q).
-        The distinct-term count (and its per-doc tracking hash set) is
-        only added when AND mode needs it."""
-        if mode not in ("OR", "AND"):
-            raise ValueError(f"unknown mode {mode!r}: use 'OR' or 'AND'")
-        uniq = sorted(set(terms))
-        d = self.decoded(uniq)
-        if predicate.strip().lower() != "true":  # unfiltered: skip the semi join
-            allowed = self.docmeta.filter(predicate).select("doc_id")
-            d = d.join(allowed, "doc_id", "left_semi")
-        if mode == "AND":
-            return (
-                d.groupBy("doc_id")
-                .agg(
-                    F.sum("score_q").alias("score_q"),
-                    F.countDistinct("term").alias("n_terms"),
-                )
-                .filter(F.col("n_terms") == len(uniq))
-                .drop("n_terms")
-            )
-        return d.groupBy("doc_id").agg(F.sum("score_q").alias("score_q"))
-
     def function_score_topk(
         self,
         terms: Sequence[str],
@@ -2160,16 +2083,13 @@ class InvertedIndex:
         the factor reorders globally (a low-BM25 doc with a large
         factor can out-rank the lexical top-m), so the pool cut cannot
         be taken before the multiply.  The plan stays O(match set):
-        the shared relational scoring body (term-pruned decode → one
-        partial agg per doc) joins the factor column pruned out of
-        docmeta, multiplies, and cuts with TakeOrderedAndProject.
+        the shared scored panel body (:meth:`_panel_scored_aggs`:
+        term-pruned decode → one partial agg per doc) joins the factor
+        column pruned out of docmeta, multiplies, and cuts per panel.
         Integer × integer keeps every score exact and
         engine-independent (the reason ``factor`` must be integral —
         fractional weighting belongs in Query.boosts or hybrid RRF).
-        Delegates to :meth:`function_score_topk_batch` with one panel
-        — one code path for the factor semantics."""
-        if not list(terms):
-            raise ValueError("needs at least one term")
+        One-panel :meth:`function_score_topk_batch`."""
         return (
             self.function_score_topk_batch(
                 [(0, list(terms))], k=k, mode=mode, factor=factor
@@ -2202,25 +2122,19 @@ class InvertedIndex:
             raise ValueError(
                 f"factor column {factor!r} must be an integral docmeta column, got {ftype}"
             )
-        _, scored = self._panel_scored_aggs(queries, mode)
+        scored = self._panel_scored_aggs(queries, mode)
         fac = self.docmeta.select(
             "doc_id", F.col(factor).cast("long").alias("_factor")
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score_fs"), F.asc("doc_id")
+        fs = scored.join(fac, "doc_id").select(
+            "query_id",
+            "doc_id",
+            "score_q",
+            (F.col("score_q") * F.col("_factor")).alias("score_fs"),
         )
-        return (
-            scored.join(fac, "doc_id")
-            .select(
-                "query_id",
-                "doc_id",
-                "score_q",
-                (F.col("score_q") * F.col("_factor")).alias("score_fs"),
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .orderBy("query_id", "rank")
-        )
+        return top_n_per_group(
+            fs, ["query_id"], [F.desc("score_fs"), F.asc("doc_id")], k
+        ).orderBy("query_id", "rank")
 
     def collapse_topk(
         self,
@@ -2234,46 +2148,10 @@ class InvertedIndex:
         distinct value of a docmeta ``field``, then cut to the k best
         groups → (field, doc_id, score_q, score) — result diversity
         for serving (one hit per repo, per site, per license...).
-
-        Exact, not per-shard approximate: a field value's docs span
-        doc-partitioned shards, so the collapse is a global decision —
-        scoring uses the relational body over the term-pruned decode
-        (O(match set), same exact quantized impacts the kernels serve).
-        Each group's representative is an ASSOCIATIVE min over
-        (−score, doc) structs — a two-phase hash aggregation with
-        map-side partial combine, so a skewed field value (half the
-        corpus in one repo) costs a partial agg, not a single-partition
-        window.  Ties: (score desc, doc asc) inside a group and across
-        groups."""
-        if not set(terms):
-            raise ValueError("needs at least one term")
-        if k < 1:
-            raise ValueError(f"k must be >= 1, got {k}")
-        agg = self._scored_doc_agg(terms, mode)
-        best = (
-            agg.join(self.docmeta.select("doc_id", field), "doc_id")
-            .groupBy(field)
-            .agg(
-                F.min(
-                    F.struct(
-                        (-F.col("score_q")).alias("neg_score"),
-                        F.col("doc_id").alias("doc_id"),
-                    )
-                ).alias("best")
-            )
-        )
-        return (
-            best.select(
-                field,
-                F.col("best.doc_id").alias("doc_id"),
-                (-F.col("best.neg_score")).alias("score_q"),
-            )
-            .orderBy(F.desc("score_q"), F.asc("doc_id"))
-            .limit(k)
-            .withColumn(
-                "score", F.col("score_q").cast("double") / F.lit(float(QUANT))
-            )
-        )
+        One-panel :meth:`collapse_topk_batch`."""
+        return self.collapse_topk_batch(
+            [(0, list(terms))], field=field, k=k, mode=mode
+        ).drop("query_id")
 
     def collapse_topk_batch(
         self,
@@ -2284,21 +2162,25 @@ class InvertedIndex:
     ) -> DataFrame:
         """Field-collapsed top-k for a batch of (query_id, terms)
         panels in ONE job → (query_id, field, doc_id, score_q, score).
+
+        Exact, not per-shard approximate: a field value's docs span
+        doc-partitioned shards, so the collapse is a global decision.
         One term-pruned posting scan decoded once for the union of
         terms, a broadcast term→panel fan-out, per-(panel, doc) score
         aggregation (AND additionally requires the panel's full
         distinct-term count, checked against a broadcast per-panel
-        size table), one docmeta join, and the same associative
-        min-struct representative pick as :meth:`collapse_topk` —
-        still a two-phase hash agg with map-side partial combine, so a
-        skewed field value costs a partial agg, not a single-partition
-        window.  The only window is the per-panel rank cut to the k
-        best groups (partitioned by query_id — bounded by the batch's
-        result size, not the corpus).  Row-identical per panel to
-        :meth:`collapse_topk` (same (score desc, doc asc) ties)."""
+        size table) and one docmeta join.  Each group's representative
+        is an ASSOCIATIVE min over (−score, doc) structs — a two-phase
+        hash agg with map-side partial combine, so a skewed field value
+        (half the corpus in one repo) costs a partial agg, not a
+        single-partition window.  The only window is the per-panel
+        rank cut to the k best groups (partitioned by query_id —
+        bounded by the batch's result size, not the corpus).  Ties:
+        (score desc, doc asc) inside a group and across groups."""
         if k < 1:
             raise ValueError(f"k must be >= 1, got {k}")
-        _, agg = self._panel_scored_aggs(queries, mode)
+        self._docmeta_col("field", field)
+        agg = self._panel_scored_aggs(queries, mode)
         best = (
             agg.join(self.docmeta.select("doc_id", field), "doc_id")
             .groupBy("query_id", field)
@@ -2317,12 +2199,8 @@ class InvertedIndex:
                 (-F.col("best.neg_score")).alias("score_q"),
             )
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score_q"), F.asc("doc_id")
-        )
         return (
-            best.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= F.lit(k))
+            top_n_per_group(best, ["query_id"], [F.desc("score_q"), F.asc("doc_id")], k)
             .drop("rank")
             .withColumn(
                 "score", F.col("score_q").cast("double") / F.lit(float(QUANT))
@@ -2375,29 +2253,20 @@ class InvertedIndex:
         only its own matching rows, never the corpus."""
         if n < 1 or k < 1:
             raise ValueError(f"n and k must be >= 1, got n={n} k={k}")
-        _, agg = self._panel_scored_aggs(queries, mode)
+        self._docmeta_col("field", field)
+        agg = self._panel_scored_aggs(queries, mode)
         j = agg.join(self.docmeta.select("doc_id", field), "doc_id")
-        wh = Window.partitionBy("query_id", field).orderBy(
-            F.desc("score_q"), F.asc("doc_id")
+        hits = top_n_per_group(
+            j, ["query_id", field], [F.desc("score_q"), F.asc("doc_id")], n, "hit_rank"
         )
-        hits = (
-            j.withColumn("hit_rank", F.row_number().over(wh))
-            .filter(F.col("hit_rank") <= n)
+        reps = hits.filter(F.col("hit_rank") == 1).select(
+            "query_id", field,
+            F.col("score_q").alias("rep_score"),
+            F.col("doc_id").alias("rep_doc"),
         )
-        wb = Window.partitionBy("query_id").orderBy(
-            F.desc("rep_score"), F.asc("rep_doc")
-        )
-        buckets = (
-            hits.filter(F.col("hit_rank") == 1)
-            .select(
-                "query_id", field,
-                F.col("score_q").alias("rep_score"),
-                F.col("doc_id").alias("rep_doc"),
-            )
-            .withColumn("bucket_rank", F.row_number().over(wb))
-            .filter(F.col("bucket_rank") <= k)
-            .select("query_id", field, "bucket_rank")
-        )
+        buckets = top_n_per_group(
+            reps, ["query_id"], [F.desc("rep_score"), F.asc("rep_doc")], k, "bucket_rank"
+        ).select("query_id", field, "bucket_rank")
         return (
             hits.join(buckets, ["query_id", field])
             .select(

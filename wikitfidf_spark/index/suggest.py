@@ -30,8 +30,9 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.topk import top_n_per_group
 from .build import _save_manifest, index_paths, load_manifest, write_parquet
-from .query import _in_values
+from .query import _check_unique_qids, _in_values, _qid
 
 
 def _deletes_py(s: str, max_dist: int) -> set[str]:
@@ -142,18 +143,11 @@ def suggest_indexed(
 ) -> DataFrame:
     """Fuzzy suggest through the deletion-neighborhood index —
     identical results to the scan path (tests + the driver oracle
-    assert it), O(candidates) instead of O(vocab) per query."""
-    qkeys = sorted(_deletes_py(query_term, max_dist))
-    tbl = _open_suggest_table(spark, index_dir, max_dist)
-    return (
-        tbl.filter(_in_values("key", qkeys))
-        .select("term", "df").distinct()
-        .withColumn("dist", F.levenshtein(F.col("term"), F.lit(query_term)))
-        .filter(F.col("dist") <= F.lit(max_dist))
-        .select("term", "dist", "df")
-        .orderBy(F.asc("dist"), F.desc("df"), F.asc("term"))
-        .limit(n)
-    )
+    assert it), O(candidates) instead of O(vocab) per query.
+    One-panel :func:`suggest_indexed_batch`."""
+    return suggest_indexed_batch(
+        spark, index_dir, [(0, query_term)], max_dist, n
+    ).drop("query_id")
 
 
 def suggest_indexed_batch(
@@ -164,41 +158,36 @@ def suggest_indexed_batch(
     n: int = 10,
 ) -> DataFrame:
     """Indexed fuzzy suggest for a batch of (query_id, term) lookups in
-    ONE job → (query_id, term, dist, df) — row-identical per query to
-    :func:`suggest_indexed` (same candidate set, same (dist asc, df
-    desc, term asc) cut).
+    ONE job → (query_id, term, dist, df), the ``n`` best per query by
+    (dist asc, df desc, term asc).
 
     Plan: every query's deletion neighborhood is generated driver-side
-    (tiny, O(len^d) strings each) into one broadcast (key, query_id)
-    panel; ONE equi-join against the key-sorted table replaces the
-    per-call ``isin`` point lookups, candidates dedupe per (query_id,
-    term), the exact ``levenshtein`` verifies against the query string
-    carried on the panel, and one rank window per query replaces the
-    per-call TakeOrdered.  The table side stays O(candidates of the
-    whole batch); shared keys between queries are scanned once."""
+    (tiny, O(len^d) strings each); their union pushes into the
+    key-sorted table's scan as one ``IN`` (row-group pruning — point
+    lookups, no scan) and one broadcast (key, query_id) panel
+    equi-joins the survivors; candidates dedupe per (query_id, term),
+    the exact ``levenshtein`` verifies against the query string
+    carried on the panel, and one rank window per query cuts to ``n``.
+    The table side stays O(candidates of the whole batch); shared keys
+    between queries are scanned once."""
     if max_dist < 0:
         raise ValueError(f"max_dist must be >= 0, got {max_dist}")
-    from .query import _check_unique_qids, _qid  # lazy: query.py imports nothing from here
-
+    if n < 1:
+        raise ValueError(f"n must be >= 1, got {n}")
     queries = [(_qid(qid), q) for qid, q in queries]
     _check_unique_qids(qid for qid, _ in queries)
     tbl = _open_suggest_table(spark, index_dir, max_dist)
-    panel = spark.createDataFrame(
-        [(qid, key, q) for qid, q in queries for key in sorted(_deletes_py(q, max_dist))],
-        "query_id int, key string, q string",
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("dist"), F.desc("df"), F.asc("term")
-    )
-    return (
-        tbl.join(F.broadcast(panel), "key")
+    keys = [(qid, key, q) for qid, q in queries for key in sorted(_deletes_py(q, max_dist))]
+    panel = spark.createDataFrame(keys, "query_id int, key string, q string")
+    cand = (
+        tbl.filter(_in_values("key", sorted({key for _, key, _ in keys})))
+        .join(F.broadcast(panel), "key")
         .select("query_id", "q", "term", "df").distinct()
         .withColumn("dist", F.levenshtein(F.col("term"), F.col("q")))
         .filter(F.col("dist") <= F.lit(max_dist))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.lit(n))
+    )
+    return (
+        top_n_per_group(cand, ["query_id"], [F.asc("dist"), F.desc("df"), F.asc("term")], n)
         .select("query_id", "term", "dist", "df")
         .orderBy("query_id", F.asc("dist"), F.desc("df"), F.asc("term"))
     )

@@ -28,10 +28,11 @@ def top_n_per_group(
     df: DataFrame,
     group_cols: Sequence[str],
     order_by: Sequence[Column],
-    n: int,
+    n: int | Column,
     rank_col: str = "rank",
 ) -> DataFrame:
-    """row_number window top-k; ``order_by`` must be a total order."""
+    """row_number window top-k; ``order_by`` must be a total order.
+    ``n`` may be a Column, a per-row cut (each query's own k)."""
     w = Window.partitionBy(*group_cols).orderBy(*order_by)
     return df.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= n)
 
