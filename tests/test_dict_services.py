@@ -1694,6 +1694,23 @@ def test_malformed_requests_fail_loudly(idx):
         idx.facet_counts_batch([(0.5, ["arg_cfg"])])
     with pytest.raises(TypeError, match="query_id"):
         idx.suggest_batch([("x", "arg_cfg")])
+    # a bare string as a panel's terms (or as a synonym panel's groups,
+    # or as one group) would be iterated as characters
+    for field, call in (
+        ("terms", lambda: idx.facet_counts_batch([(0, "arg_cfg")])),
+        ("terms", lambda: idx.facet_histogram_batch([(0, "arg_cfg")], col="doc_len")),
+        ("terms", lambda: idx.facet_stats_batch([(0, "arg_cfg")], col="doc_len")),
+        ("terms", lambda: idx.collapse_topk_batch([(0, "arg_cfg")])),
+        ("terms", lambda: idx.function_score_topk_batch([(0, "arg_cfg")])),
+        ("terms", lambda: idx.bucket_top_hits_batch([(0, "arg_cfg")])),
+        ("terms", lambda: idx.significant_terms_batch([(0, "arg_cfg")])),
+        ("terms", lambda: idx.facet_counts_batch([(0, ["arg_cfg", 7])])),
+        ("groups", lambda: idx.synonym_topk_batch([(0, "arg_cfg")])),
+        ("groups", lambda: idx.synonym_topk_batch([(0, ["arg_cfg", "arg_ctx"])])),
+        ("groups", lambda: idx.synonym_topk_batch([(0, [["arg_cfg"], "arg_ctx"])])),
+    ):
+        with pytest.raises(TypeError, match=field):
+            call()
     from wikitfidf_spark.index.suggest import suggest_indexed, suggest_indexed_batch
 
     for call in (

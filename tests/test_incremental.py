@@ -303,6 +303,15 @@ def test_stale_window_tfidf_covers_delta_only_terms(spark, tmp_path):
     assert len(got) == n_delta  # every delta doc scored, none dropped
     assert all(r["tfidf"] is not None for r in got)
 
+    # an exact op after the deferred add re-scores the whole index: the
+    # two stale counters reset together
+    from wikitfidf_spark.index.build import delete_documents
+
+    assert load_manifest(d)["metrics"]["stale_delta_scores_bytes"] > 0
+    delete_documents(spark, [got[0]["doc_id"]], d)
+    m = load_manifest(d)
+    assert (m["stale_deltas"], m["metrics"]["stale_delta_scores_bytes"]) == (0, 0)
+
 
 def test_stale_window_did_you_mean_keeps_delta_only_terms(spark, tmp_path):
     """did_you_mean must not 'correct' a term that exists only in an
@@ -672,6 +681,12 @@ def test_randomized_update_lifecycle_converges(spark, tmp_path, seed):
             refresh_scores(spark, d)
         elif choice == "compact":
             compact(spark, d)
+        # the two stale counters move together: a deferred add raises
+        # both, and every op that re-scores the index resets both
+        m = load_manifest(d)
+        assert (m["stale_deltas"] == 0) == (
+            m["metrics"].get("stale_delta_scores_bytes", 0) == 0
+        ), (ops, choice, m["stale_deltas"], m["metrics"].get("stale_delta_scores_bytes"))
 
     refresh_scores(spark, d)
     compact(spark, d)
@@ -681,3 +696,41 @@ def test_randomized_update_lifecycle_converges(spark, tmp_path, seed):
     build_index(spark, survivors, fresh_dir, CFG, resume=False)
     assert load_manifest(d)["metrics"]["total_docs"] == len(live)
     assert _postings_rows(spark, fresh_dir) == _postings_rows(spark, d)
+
+
+def test_lifecycle_ops_start_no_more_spark_jobs(spark, tmp_path):
+    """The Spark jobs each lifecycle op starts on one small index (the
+    status tracker's job ids before and after the op, nothing else
+    running).  Each count may only fall.  The pinned counts were
+    measured before every op ended in one commit tail, on this 120-doc,
+    4-shard index: exact add 41, deferred add 30, refresh 21, delete 50,
+    compact 27."""
+    from wikitfidf_spark.index.build import compact, delete_documents, refresh_scores
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(fn) -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        before = set(tracker.getJobIdsForGroup())
+        fn()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(set(tracker.getJobIdsForGroup()) - before)
+
+    docs = make_code_files(spark, n_docs=120, seed=42)
+    thirds = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(3))
+    parts = [docs.filter(thirds == i).cache() for i in range(3)]
+    for p in parts:
+        p.count()
+    d = str(tmp_path / "idx_jobs")
+    build_index(spark, parts[0], d, CFG, resume=False)
+    victim = parts[0].select(F.xxhash64("repo", "path", "commit")).first()[0]
+    counts = {
+        "exact add": jobs(lambda: add_documents(spark, parts[1], d)),
+        "deferred add": jobs(lambda: add_documents(spark, parts[2], d, refresh_scores=False)),
+        "refresh": jobs(lambda: refresh_scores(spark, d)),
+        "delete": jobs(lambda: delete_documents(spark, [victim], d)),
+        "compact": jobs(lambda: compact(spark, d)),
+    }
+    pinned = {"exact add": 41, "deferred add": 30, "refresh": 21, "delete": 50, "compact": 27}
+    assert all(counts[op] <= pinned[op] for op in pinned), (counts, pinned)

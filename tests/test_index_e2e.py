@@ -228,13 +228,10 @@ def test_resume_after_partial_build(spark, corpus):
     cfg = IndexConfig(n_shards=4, n_salts=4)
     build_index(spark, corpus, d2, cfg)
     full = load_manifest(d2)
-    # simulate a crash: drop the structure/scores + dictionary phases
+    # simulate a crash: drop the structure + dictionary phases
     shutil.rmtree(os.path.join(d2, "structure_g0.parquet"))
-    # pre-fusion builds wrote a separate scores_v0; fused builds don't
-    shutil.rmtree(os.path.join(d2, "scores_v0.parquet"), ignore_errors=True)
     m = load_manifest(d2)
     del m["phases"]["structure"], m["phases"]["dictionary"]
-    m["phases"].pop("scores", None)
     with open(os.path.join(d2, "manifest.json"), "w") as f:
         json.dump(m, f)
     res = build_index(spark, corpus, d2, cfg)  # resume

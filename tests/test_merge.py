@@ -197,7 +197,10 @@ def test_mutators_reject_stale_format_dst(spark, dirs, tmp_path):
     """Every mutator validates the DST index's format before touching
     it (via _load_cfg): mutating a pre-current-format directory under
     new-layout assumptions would leave a half-migrated index, so the
-    guard must fire before any write."""
+    guard must fire before any write.  So do a resumed build, a reader
+    and a merge that takes the directory as its SRC: no code path reads
+    a manifest of another format, which is what lets the lifecycle ops
+    rely on every key the current format's writers set."""
     import json
 
     from wikitfidf_spark.index.build import (
@@ -213,6 +216,9 @@ def test_mutators_reject_stale_format_dst(spark, dirs, tmp_path):
     m["format"] = 3
     json.dump(m, open(mpath, "w"))
     before = sorted(os.listdir(stale))
+    dst = str(tmp_path / "fresh_dst")
+    shutil.copytree(b_dir, dst)
+    dst_before = load_manifest(dst)
     docs = make_code_files(spark, n_docs=10, seed=7)
     for op in (
         lambda: merge_from_index(spark, stale, b_dir),
@@ -220,10 +226,14 @@ def test_mutators_reject_stale_format_dst(spark, dirs, tmp_path):
         lambda: delete_documents(spark, docs.select(F.xxhash64("repo", "path", "commit").alias("doc_id")).limit(1), stale),
         lambda: _refresh(spark, stale),
         lambda: _compact(spark, stale),
+        lambda: build_index(spark, docs, stale, CFG, resume=True),
+        lambda: InvertedIndex(spark, stale),
+        lambda: merge_from_index(spark, dst, stale),
     ):
         with pytest.raises(ValueError, match="format"):
             op()
     assert sorted(os.listdir(stale)) == before  # nothing was written
+    assert load_manifest(dst) == dst_before  # nor into the merge's dst
 
 
 @pytest.fixture(scope="module")

@@ -8,8 +8,8 @@ BASELINE.json:north_rule):
   2. docmeta     (doc_id, repo, path, commit, topic, doc_len, content_sha256)
   3. dictionary  (term, df, cf)                salted two-phase agg
   4. structure   (shard, term, sub_shard, docs/tfs/dls payloads + block
-                 firsts/counts)
-  5. scores      (shard, term, sub_shard, scores payload + block-max)
+                 firsts/counts) with the scores (scores payload +
+                 block-max) fused into the same encode pass
 
 Postings are SPLIT into two artifacts along the incremental-update
 fault line:
@@ -46,6 +46,19 @@ fault line:
   the window on a schedule, amortizing the O(corpus) pass over K
   deltas.
 
+Every lifecycle op (build, add, merge, delete, compact, refresh, the
+deferred add) ends in one manifest commit (:func:`_commit`): it stamps
+the version, score epoch, stale counters, metrics and wall times and
+makes the op's one atomic manifest save.  Every op that writes scores
+index-wide writes its per-shard lineage through :func:`_write_lineage`,
+whose observed totals are the posting and byte metrics.  Add, merge,
+delete and compact share :func:`_update_derived` (dictionary, docmeta
+stats, structure encode, scores, lineage); :func:`refresh_scores` is
+that tail with no shard to re-encode.  Only the format named by
+:data:`INDEX_FORMAT` is read or written: every entry point refuses a
+manifest of another format, so the ops rely on every key the current
+writers set.
+
 Partitioning strategy (the 100 TB story):
 - The index is **document-partitioned**: ``shard = xxhash64(doc_id) %
   n_shards``.  Every shard holds the full postings of its documents for
@@ -78,7 +91,7 @@ from collections.abc import Iterable, Sequence
 from dataclasses import asdict, dataclass, field
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import termstats
@@ -314,6 +327,52 @@ def _phase_done(m: dict, name: str, path: str) -> bool:
     return name in m["phases"] and os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
+def _commit(
+    index_dir: str,
+    manifest: dict,
+    metrics: dict,
+    *,
+    t_start: float | None,
+    version: int | None = None,
+    epoch: tuple[int, float] | None = None,
+    stale_scores_bytes: int | None = None,
+) -> BuildResult:
+    """The one commit every lifecycle op ends with: stamp the version,
+    the score epoch and stale counters, ``metrics`` and the wall times,
+    then save the manifest atomically.  Outside build's phase
+    checkpoints this is the only manifest save of this module, so an op
+    that fails before it leaves the index at its prior version.
+
+    - ``epoch=(n_docs, avgdl)``: every score now reflects these global
+      stats — the epoch moves to this version and the staleness window
+      closes (``stale_deltas`` and ``stale_delta_scores_bytes`` reset
+      together);
+    - ``stale_scores_bytes``: a deferred add scored that many bytes
+      against the current epoch — one more stale delta;
+    - ``t_start=None`` (a resume that ran nothing) keeps the recorded
+      ``build_wall_sec_total``."""
+    m = manifest["metrics"]
+    if version is not None:
+        manifest["version"] = version
+    if epoch is not None:
+        manifest["score_epoch"] = {
+            "version": int(manifest.get("version", 0)), "n_docs": epoch[0], "avgdl": epoch[1],
+        }
+        manifest["stale_deltas"] = 0
+        m["stale_delta_scores_bytes"] = 0
+    if stale_scores_bytes is not None:
+        manifest["stale_deltas"] += 1
+        m["stale_delta_scores_bytes"] = int(m.get("stale_delta_scores_bytes", 0)) + stale_scores_bytes
+    m.update(metrics)
+    # the actual elapsed of THIS op: phase walls overlap by design
+    # (docmeta runs under the encode), so their sum is its own metric
+    if t_start is not None:
+        m["build_wall_sec_total"] = round(time.time() - t_start, 3)
+    m["build_phase_sec_sum"] = round(sum(p["wall_sec"] for p in manifest["phases"].values()), 3)
+    _save_manifest(index_dir, manifest)
+    return BuildResult(index_dir=index_dir, metrics=m)
+
+
 def encode_structure_df(
     tf: DataFrame,
     meta: DataFrame | None,
@@ -508,8 +567,6 @@ def _write_dictionary(
     (token total, vocab size, skew ratio) observed DURING the write —
     no read-back aggregate jobs, no separate skew_ratio job.  Returns
     the re-read stats DataFrame and {tok, n_terms, skew}."""
-    from pyspark.sql import Observation
-
     obs = Observation()
     stats = termstats.global_term_stats(tf_all, n_salts=cfg.n_salts).observe(
         obs,
@@ -527,6 +584,32 @@ def _write_dictionary(
         "n_terms": n_terms,
         "skew": (float(row["max_df"]) / mean_df) if mean_df else 0.0,
     }
+
+
+def _write_lineage(structure: DataFrame, scores: DataFrame | None, path: str) -> dict:
+    """The one per-shard lineage write (north_rule): posting lists,
+    postings, structure and score bytes per shard, from the int sidecar
+    columns only — payloads are never re-read.  ``scores=None``: the
+    ``structure`` rows carry their own ``scores_bytes`` (a fused file).
+    The index-wide totals ride the write as an Observation and come back
+    as {n_postings, structure_bytes, scores_bytes}."""
+    aggs = [
+        F.count("*").alias("n_lists"),
+        F.sum("n_docs").alias("n_postings"),
+        F.sum("payload_bytes").alias("structure_bytes"),
+    ]
+    if scores is None:
+        lineage = structure.groupBy("shard").agg(*aggs, F.sum("scores_bytes").alias("scores_bytes"))
+    else:
+        lineage = structure.groupBy("shard").agg(*aggs).join(
+            scores.groupBy("shard").agg(F.sum("scores_bytes").alias("scores_bytes")),
+            "shard", "left",
+        )
+    totals = ("n_postings", "structure_bytes", "scores_bytes")
+    obs = Observation()
+    write_parquet(lineage.observe(obs, *[F.sum(c).alias(c) for c in totals]), path)
+    row = obs.get
+    return {c: int(row[c] or 0) for c in totals}
 
 
 def score_postings_df(
@@ -621,13 +704,11 @@ def build_index(
     manifest["format"] = INDEX_FORMAT
 
     t_start = time.time()
-    ran_phases: list[str] = []  # phases executed by THIS invocation
     tf_path = os.path.join(index_dir, "tf.parquet")
     meta_path = os.path.join(index_dir, "docmeta.parquet")
     dict_path = os.path.join(index_dir, "dictionary.parquet")
-    struct_rel, scores_rel = "structure_g0.parquet", "scores_v0.parquet"
+    struct_rel = "structure_g0.parquet"
     struct_path = os.path.join(index_dir, struct_rel)
-    scores_path = os.path.join(index_dir, scores_rel)
     lineage_path = os.path.join(index_dir, "lineage.parquet")
 
     base = docs if not cfg.id_cols else docs.withColumn("doc_id", F.xxhash64(*cfg.id_cols))
@@ -640,10 +721,9 @@ def build_index(
 
     # ---- phase 1: per-doc term frequencies (JVM codegen tokenize by
     # default; Arrow fused tokenize+count for pluggable Python tokenizers)
-    if not _phase_done(manifest, "tf", tf_path):
+    need_tf = not _phase_done(manifest, "tf", tf_path)
+    if need_tf:
         t0 = time.time()
-        from pyspark.sql import Observation
-
         obs, obs_in = Observation(), Observation()
         # row count + token total folded into the write via observe —
         # the old write + full re-read + count round trip was pure
@@ -663,7 +743,6 @@ def build_index(
             "total_tokens": int(obs.get["tok"] or 0),
             "wall_sec": time.time() - t0,
         }
-        ran_phases.append("tf")
         _save_manifest(index_dir, manifest)
     tf = spark.read.parquet(tf_path)
 
@@ -688,8 +767,6 @@ def build_index(
     need_dict = not _phase_done(manifest, "dictionary", dict_path)
 
     def _run_docmeta() -> dict:
-        from pyspark.sql import Observation as _Obs
-
         # reuse the doclens aggregate the parallel doclens phase just
         # wrote instead of re-deriving the identical O(|tf|) groupBy —
         # docmeta is off the critical path, so waiting on f_dl (also
@@ -702,7 +779,7 @@ def build_index(
             f_dl.result()
         t0 = time.time()
         doclens = spark.read.parquet(dl_path).select("doc_id", "doc_len")
-        obs = _Obs()
+        obs = Observation()
         meta_cols = [*cfg.id_cols, "topic", "content_sha256"]
         # the duplicate guard (duplicate natural keys or a hash
         # collision would silently merge tf rows and corrupt postings)
@@ -780,29 +857,15 @@ def build_index(
         # itself (CollectMetrics on the pre-tokenize scan), so builds
         # over expensive input lineages (non-parquet sources, heavy
         # upstream transforms) never pay a second pass
-        tf_phase = manifest["phases"]["tf"]
-        if "input_docs" in tf_phase:
-            n_docs = int(tf_phase["input_docs"])
-            tok = int(tf_phase["total_tokens"])
-        elif "total_docs" in manifest["metrics"]:
-            n_docs = int(manifest["metrics"]["total_docs"])
-            tok = int(manifest["metrics"]["total_tokens"])
-        else:  # resume of a pre-observe partial build: legacy fallback
-            n_docs = int(docs.count())
-            tok = int(stats.agg(F.sum("cf").alias("t")).collect()[0]["t"] or 0)
+        n_docs = int(manifest["phases"]["tf"]["input_docs"])
+        tok = int(manifest["phases"]["tf"]["total_tokens"])
         avgdl = float(tok) / n_docs if n_docs else 0.0
-        if dict_res is not None or "total_docs" not in manifest["metrics"]:
-            if dict_res is not None:
-                manifest["phases"]["dictionary"] = {
-                    "rows": dict_res["n_terms"], "wall_sec": dict_res["wall_sec"],
-                }
+        if dict_res is not None:
+            manifest["phases"]["dictionary"] = {
+                "rows": dict_res["n_terms"], "wall_sec": dict_res["wall_sec"],
+            }
             manifest["metrics"].update(
-                total_tokens=tok,
-                total_docs=n_docs,
-                avgdl=avgdl,
-                skew_ratio=(
-                    dict_res["skew"] if dict_res is not None else termstats.skew_ratio(stats)
-                ),
+                total_tokens=tok, total_docs=n_docs, avgdl=avgdl, skew_ratio=dict_res["skew"],
             )
             _save_manifest(index_dir, manifest)
 
@@ -813,13 +876,11 @@ def build_index(
         # re-read + re-decode + second write), which BENCH.md measured as
         # part of the build's Amdahl tail.  The combined file serves both
         # artifacts (readers project their side's columns); any later
-        # refresh/delete/compact splits scores back out as its own
+        # add/delete/refresh splits scores back out as its own
         # versioned file via score_postings_df — bit-identical by
         # construction (same float64 expression over the same values).
-        from pyspark.sql import Observation
-
-        if not _phase_done(manifest, "structure", struct_path):
-            ran_phases.append("structure")
+        need_struct = not _phase_done(manifest, "structure", struct_path)
+        if need_struct:
             t0 = time.time()
             obs = Observation()
             # meta=None: canonical placement derives from doc_id as an
@@ -827,26 +888,15 @@ def build_index(
             # docmeta never enters the dominant phase's data path
             combined = encode_structure_df(
                 tf, None, stats, cfg, doclens=doclens_r, score_globals=(n_docs, avgdl)
-            ).observe(
-                obs,
-                F.count(F.lit(1)).alias("lists"),
-                F.sum("n_docs").alias("postings"),
-                F.sum("payload_bytes").alias("bytes"),
-                F.sum("scores_bytes").alias("sbytes"),
-            )
+            ).observe(obs, F.count(F.lit(1)).alias("lists"))
             write_parquet(combined, struct_path)
-            row = obs.get
             wall = time.time() - t0
             manifest["phases"]["structure"] = {
-                "rows": int(row["lists"] or 0), "wall_sec": wall, "fused_scores": True,
+                "rows": int(obs.get["lists"] or 0), "wall_sec": wall, "fused_scores": True,
             }
+            lin = _write_lineage(spark.read.parquet(struct_path), None, lineage_path)
             m = manifest["metrics"]
-            m.update(
-                n_postings=int(row["postings"] or 0),
-                structure_bytes=int(row["bytes"] or 0),
-                scores_bytes=int(row["sbytes"] or 0),
-            )
-            m["payload_bytes"] = int(m["structure_bytes"]) + int(m["scores_bytes"])
+            m.update(lin, payload_bytes=lin["structure_bytes"] + lin["scores_bytes"])
             m["postings_per_sec"] = m["n_postings"] / wall if wall > 0 else 0.0
             # same pass now ⇒ the round-comparable structure rate equals the
             # headline rate (r1/r2 reported the pre-fusion structure-only wall)
@@ -859,59 +909,6 @@ def build_index(
                     spark.read.parquet(struct_path), stats, cfg, n_docs, avgdl
                 )
             )
-            # per-shard lineage (north_rule): int/sidecar columns only — the
-            # binary payloads are never re-read for metrics
-            lineage = (
-                spark.read.parquet(struct_path)
-                .groupBy("shard")
-                .agg(
-                    F.count("*").alias("n_lists"),
-                    F.sum("n_docs").alias("n_postings"),
-                    F.sum("payload_bytes").alias("structure_bytes"),
-                    F.sum("scores_bytes").alias("scores_bytes"),
-                )
-            )
-            write_parquet(lineage, lineage_path)
-            _save_manifest(index_dir, manifest)
-        elif not manifest["phases"]["structure"].get("fused_scores") and not _phase_done(
-            manifest, "scores", scores_path
-        ):
-            # resume of a pre-fusion partial build (structure file on disk
-            # without score columns): finish it with the separate score pass
-            ran_phases.append("scores")
-            t0 = time.time()
-            structure_r = spark.read.parquet(struct_path)
-            obs = Observation()
-            scores = score_postings_df(structure_r, stats, cfg, n_docs, avgdl).observe(
-                obs, F.count(F.lit(1)).alias("lists"), F.sum("scores_bytes").alias("bytes")
-            )
-            write_parquet(scores, scores_path)
-            row = obs.get
-            manifest["phases"]["scores"] = {
-                "rows": int(row["lists"] or 0), "wall_sec": time.time() - t0
-            }
-            manifest["metrics"]["scores_bytes"] = int(row["bytes"] or 0)
-            manifest["metrics"]["score_refresh_shuffled"] = _score_refresh_shuffled(scores)
-            lineage = (
-                structure_r.groupBy("shard")
-                .agg(
-                    F.count("*").alias("n_lists"),
-                    F.sum("n_docs").alias("n_postings"),
-                    F.sum("payload_bytes").alias("structure_bytes"),
-                )
-                .join(
-                    spark.read.parquet(scores_path)
-                    .groupBy("shard").agg(F.sum("scores_bytes").alias("scores_bytes")),
-                    "shard", "left",
-                )
-            )
-            write_parquet(lineage, lineage_path)
-            m = manifest["metrics"]
-            m["payload_bytes"] = int(m.get("structure_bytes", 0)) + int(m["scores_bytes"])
-            wall_s = manifest["phases"]["structure"]["wall_sec"]
-            wall = wall_s + (time.time() - t0)
-            m["postings_per_sec"] = m["n_postings"] / wall if wall > 0 else 0.0
-            m["structure_postings_per_sec"] = m["n_postings"] / wall_s if wall_s > 0 else 0.0
             _save_manifest(index_dir, manifest)
 
         # ---- join the docmeta thread (it overlapped the encode above)
@@ -952,43 +949,31 @@ def build_index(
         # futures are already consumed above, shutdown is instant)
         pool.shutdown(wait=False, cancel_futures=True)
 
-    # actual elapsed wall of this invocation — NOT the sum of per-phase
-    # walls, which double-counts concurrency (docmeta overlaps the
-    # encode, doclens overlaps the dictionary).  A pure-resume call (no
-    # phase ran) keeps the previously-recorded wall; the overlap-blind
-    # sum stays visible as its own metric for per-phase accounting.
-    if ran_phases or need_meta or need_dict or need_dl:
-        manifest["metrics"]["build_wall_sec_total"] = round(time.time() - t_start, 3)
-    manifest["metrics"]["build_phase_sec_sum"] = round(
-        sum(p["wall_sec"] for p in manifest["phases"].values()), 3
+    # the first completion starts the lifecycle state: paths, the
+    # generation counters and the score epoch (deferred adds serve
+    # against it until a refresh).  Resuming a finished index keeps the
+    # state its later ops committed.
+    first = "paths" not in manifest
+    if first:
+        manifest.update(
+            paths={
+                "tf": ["tf.parquet"],
+                "docmeta": ["docmeta.parquet"],
+                "dictionary": "dictionary.parquet",
+                "structure": {str(s): struct_rel for s in range(cfg.n_shards)},
+                # scores are served from the combined structure file
+                "scores": struct_rel,
+                "lineage": "lineage.parquet",
+            },
+            # generation shards for future deltas start above the canonical range
+            next_shard_base=cfg.n_shards,
+            next_gen=1,
+        )
+    ran = need_tf or need_meta or need_dict or need_dl or need_struct
+    return _commit(
+        index_dir, manifest, {},
+        t_start=t_start if ran else None, epoch=(n_docs, avgdl) if first else None,
     )
-    manifest.setdefault("paths", {
-        "tf": ["tf.parquet"],
-        "docmeta": ["docmeta.parquet"],
-        "dictionary": "dictionary.parquet",
-        "structure": {str(s): struct_rel for s in range(cfg.n_shards)},
-        # fused builds serve scores from the combined structure file
-        # (readers project); a pre-fusion resume finished the separate
-        # scores_v0 file instead
-        "scores": (
-            struct_rel
-            if manifest["phases"].get("structure", {}).get("fused_scores")
-            else scores_rel
-        ),
-        "lineage": "lineage.parquet",
-    })
-    # generation shards for future deltas start above the canonical range
-    manifest.setdefault("next_shard_base", cfg.n_shards)
-    manifest.setdefault("next_gen", 1)
-    # the global-stat epoch the current score files were computed with;
-    # deferred-refresh adds serve against it until refresh_scores runs
-    manifest.setdefault(
-        "score_epoch",
-        {"version": int(manifest.get("version", 0)), "n_docs": n_docs, "avgdl": avgdl},
-    )
-    manifest.setdefault("stale_deltas", 0)
-    _save_manifest(index_dir, manifest)
-    return BuildResult(index_dir=index_dir, metrics=manifest["metrics"])
 
 
 def index_paths(manifest: dict) -> dict:
@@ -1079,39 +1064,44 @@ def _update_derived(
     manifest: dict,
     cfg: IndexConfig,
     tf_all: DataFrame,
-    tf_enc: DataFrame,
+    tf_enc: DataFrame | None,
     meta_all: DataFrame,
-    owned_shards: list[int],
-    struct_rel: str,
     version: int,
     phase_name: str,
     t_start: float,
     paths_update: dict,
     *,
+    owned_shards: Sequence[int] = (),
+    struct_rel: str | None = None,
     reset_owners: bool = False,
     meta_enc: DataFrame | None = None,
     drop_path_keys: tuple[str, ...] = (),
 ) -> BuildResult:
-    """Shared incremental-update tail (add/delete/compact):
+    """The derived-state tail of add, merge, delete, compact and
+    refresh:
 
-    - dictionary + docmeta: recomputed globally (cheap salted agg over
-      tf generations — a columnar scan, no payload work);
+    - dictionary + docmeta stats: recomputed globally (cheap salted agg
+      over tf generations — a columnar scan, no payload work); docmeta
+      is rewritten as one versioned file unless ``paths_update`` names
+      its generation files (adds, merges and refresh keep it
+      generational — no O(corpus) rewrite per delta);
     - structure: ``tf_enc`` (the delta generation for adds, the
       affected shards' docs for deletes, everything for compact) is
       encoded into ``struct_rel``, which becomes the owner of
       ``owned_shards``; all other shards keep their existing files
-      untouched (``reset_owners`` drops them — compaction);
+      untouched (``reset_owners`` drops them — compaction).  With no
+      ``struct_rel`` (a refresh) nothing is re-encoded;
     - scores: refreshed for the WHOLE index by the shuffle-free map
       pass (exact global idf/avgdl demands it; it touches only the
-      light score stream).
+      light score stream) — or, for compact, fused into its encode;
+    - one per-shard lineage write and one :func:`_commit`, which closes
+      the staleness window.
 
     Sub-shard split factors are evaluated with the stats current at
     each shard's encode time; shards encoded in different generations
     may therefore split a hot term differently — harmless (sub-lists
     stay doc-disjoint per shard) and erased by compaction, which
     re-encodes everything with one dictionary."""
-    from pyspark.sql import Observation
-
     paths = index_paths(manifest)
     dict_rel = f"dictionary_v{version}.parquet"
     scores_rel = f"scores_v{version}.parquet"
@@ -1119,8 +1109,6 @@ def _update_derived(
     meta_rel = f"docmeta_v{version}.parquet"
 
     if "docmeta" in paths_update:
-        # caller keeps docmeta generational (adds append a generation
-        # file) — no O(corpus) consolidation rewrite per delta
         meta_r = meta_all
     else:
         write_parquet(meta_all, os.path.join(index_dir, meta_rel))
@@ -1137,26 +1125,23 @@ def _update_derived(
     avgdl = float(int(dl["s"] or 0)) / n_docs_all if n_docs_all else 0.0
 
     owned = sorted(set(owned_shards))
-    if reset_owners:
-        owners = {str(s): struct_rel for s in owned}
-    else:
-        owners = {**paths["structure"], **{str(s): struct_rel for s in owned}}
-
+    owners = {} if reset_owners else dict(paths["structure"])
+    owners.update({str(s): struct_rel for s in owned})
     # compact (reset_owners) re-encodes EVERY shard with the final
     # stats, so the score stream fuses into the same pass (the fresh-
     # build layout: one combined file, single-scan serving); partial
-    # updates keep the separate index-wide score map.
+    # updates and the refresh run the separate index-wide score map.
     fuse = reset_owners
-    obs_s = Observation()
-    # meta_enc restricts the encode's (doc_len, shard) join to the rows
-    # being re-encoded — for a delta generation that's the delta's own
-    # docmeta, not an O(corpus) join against the full table
-    struct_delta = encode_structure_df(
-        tf_enc, meta_enc if meta_enc is not None else meta_r, stats_r, cfg,
-        score_globals=(n_docs_all, avgdl) if fuse else None, shards=owned,
-    ).observe(obs_s, F.count(F.lit(1)).alias("lists"))
-    write_parquet(struct_delta, os.path.join(index_dir, struct_rel))
-    n_reencoded = int(obs_s.get["lists"] or 0)
+    if struct_rel is not None:
+        obs_s = Observation()
+        # meta_enc restricts the encode's (doc_len, shard) join to the
+        # rows being re-encoded — for a delta generation that's the
+        # delta's own docmeta, not an O(corpus) join against the full table
+        struct_delta = encode_structure_df(
+            tf_enc, meta_enc if meta_enc is not None else meta_r, stats_r, cfg,
+            score_globals=(n_docs_all, avgdl) if fuse else None, shards=owned,
+        ).observe(obs_s, F.count(F.lit(1)).alias("lists"))
+        write_parquet(struct_delta, os.path.join(index_dir, struct_rel))
 
     new_paths = {
         **paths,
@@ -1174,88 +1159,54 @@ def _update_derived(
     for k in drop_path_keys:
         new_paths.pop(k, None)
     structure_all = _read_structure(spark, index_dir, new_paths)
-    if fuse:
-        combined_r = spark.read.parquet(os.path.join(index_dir, struct_rel))
-        scores_bytes = int(
-            combined_r.agg(F.sum("scores_bytes").alias("b")).collect()[0]["b"] or 0
-        )
-        # degrade flag from the PLANNED (not run) refresh, as in build
-        manifest["metrics"]["score_refresh_shuffled"] = _score_refresh_shuffled(
-            score_postings_df(structure_all, stats_r, cfg, n_docs_all, avgdl)
-        )
-        lineage = combined_r.groupBy("shard").agg(
-            F.count("*").alias("n_lists"),
-            F.sum("n_docs").alias("n_postings"),
-            F.sum("payload_bytes").alias("structure_bytes"),
-            F.sum("scores_bytes").alias("scores_bytes"),
-        )
-    else:
-        obs_sc = Observation()
-        scores_df = score_postings_df(structure_all, stats_r, cfg, n_docs_all, avgdl).observe(
-            obs_sc, F.sum("scores_bytes").alias("bytes")
-        )
+    scores_df = score_postings_df(structure_all, stats_r, cfg, n_docs_all, avgdl)
+    if not fuse:
         write_parquet(scores_df, os.path.join(index_dir, scores_rel))
-        scores_bytes = int(obs_sc.get["bytes"] or 0)
-        manifest["metrics"]["score_refresh_shuffled"] = _score_refresh_shuffled(scores_df)
-
-        lineage = (
-            structure_all.groupBy("shard")
-            .agg(
-                F.count("*").alias("n_lists"),
-                F.sum("n_docs").alias("n_postings"),
-                F.sum("payload_bytes").alias("structure_bytes"),
-            )
-            .join(
-                spark.read.parquet(os.path.join(index_dir, scores_rel))
-                .groupBy("shard").agg(F.sum("scores_bytes").alias("scores_bytes")),
-                "shard", "left",
-            )
-        )
-    write_parquet(lineage, os.path.join(index_dir, lin_rel))
-    lin = spark.read.parquet(os.path.join(index_dir, lin_rel)).agg(
-        F.sum("n_postings").alias("p"), F.sum("structure_bytes").alias("sb")
-    ).collect()[0]
+    # a fused file carries its own scores_bytes column
+    lin = _write_lineage(
+        spark.read.parquet(os.path.join(index_dir, struct_rel)) if fuse else structure_all,
+        None if fuse else spark.read.parquet(os.path.join(index_dir, scores_rel)),
+        os.path.join(index_dir, lin_rel),
+    )
 
     wall = time.time() - t_start
     manifest["paths"] = new_paths
-    manifest["version"] = version
-    # every _update_derived path rewrites scores index-wide with the
-    # fresh dictionary -> the staleness window closes here
-    manifest["score_epoch"] = {"version": version, "n_docs": n_docs_all, "avgdl": avgdl}
-    manifest["stale_deltas"] = 0
-    prior_owned = set(paths["structure"])
-    manifest["phases"][phase_name] = {
-        "rows": n_reencoded,
-        "wall_sec": wall,
-        # how many PRE-EXISTING shards this update re-encoded (adds: 0 —
-        # new docs land in fresh generation shards; deletes: the shards
-        # the dead docs lived in; compact: all)
-        "existing_shards_reencoded": len(prior_owned & {str(s) for s in owned}),
-        "new_shards": len({str(s) for s in owned} - prior_owned),
-        "total_shards": len(owners),
-    }
-    manifest["metrics"].update(
-        total_tokens=int(srow["tok"] or 0),
-        total_docs=n_docs_all,
-        live_total_docs=n_docs_all,
-        docs_with_terms=int(dl["nonempty"] or 0),
-        avgdl=avgdl,
-        skew_ratio=srow["skew"],
-        n_postings=int(lin["p"] or 0),
-        structure_bytes=int(lin["sb"] or 0),
-        scores_bytes=scores_bytes,
-        payload_bytes=int(lin["sb"] or 0) + scores_bytes,
-        postings_per_sec=(int(lin["p"] or 0) / wall if wall > 0 else 0.0),
+    if struct_rel is None:
+        manifest["phases"][phase_name] = {
+            "rows": 0, "wall_sec": wall, "stale_deltas_closed": manifest["stale_deltas"],
+        }
+        rate = {}
+    else:
+        prior_owned = set(paths["structure"])
+        manifest["phases"][phase_name] = {
+            "rows": int(obs_s.get["lists"] or 0),
+            "wall_sec": wall,
+            # how many PRE-EXISTING shards this update re-encoded (adds: 0 —
+            # new docs land in fresh generation shards; deletes: the shards
+            # the dead docs lived in; compact: all)
+            "existing_shards_reencoded": len(prior_owned & {str(s) for s in owned}),
+            "new_shards": len({str(s) for s in owned} - prior_owned),
+            "total_shards": len(owners),
+        }
+        rate = {"postings_per_sec": lin["n_postings"] / wall if wall > 0 else 0.0}
+    return _commit(
+        index_dir, manifest,
+        {
+            "total_tokens": srow["tok"],
+            "total_docs": n_docs_all,
+            "live_total_docs": n_docs_all,
+            "docs_with_terms": int(dl["nonempty"] or 0),
+            "avgdl": avgdl,
+            "skew_ratio": srow["skew"],
+            **lin,
+            "payload_bytes": lin["structure_bytes"] + lin["scores_bytes"],
+            **rate,
+            # the degrade flag of the index-wide score map (planned, not
+            # run, when compact fused the scores)
+            "score_refresh_shuffled": _score_refresh_shuffled(scores_df),
+        },
+        t_start=t_start, version=version, epoch=(n_docs_all, avgdl),
     )
-    # same semantics as build_index: actual elapsed of THIS operation
-    # (phase walls overlap by design; their sum stays visible as
-    # build_phase_sec_sum for per-phase accounting)
-    manifest["metrics"]["build_wall_sec_total"] = round(time.time() - t_start, 3)
-    manifest["metrics"]["build_phase_sec_sum"] = round(
-        sum(p["wall_sec"] for p in manifest["phases"].values()), 3
-    )
-    _save_manifest(index_dir, manifest)
-    return BuildResult(index_dir=index_dir, metrics=manifest["metrics"])
 
 
 def _generation_layout(manifest: dict, cfg: IndexConfig, n_new_docs: int) -> tuple[int, int]:
@@ -1268,7 +1219,7 @@ def _generation_layout(manifest: dict, cfg: IndexConfig, n_new_docs: int) -> tup
     everything back to canonical hash placement, so the byte-identity
     invariant is untouched.  Shared by add_documents and
     merge_from_index — the sizing policy must not drift between them."""
-    shard_base = int(manifest.get("next_shard_base", cfg.n_shards))
+    shard_base = int(manifest["next_shard_base"])
     live = int(
         manifest["metrics"].get("live_total_docs", manifest["metrics"]["total_docs"])
     )
@@ -1396,8 +1347,8 @@ def add_documents(
     # len(paths["tf"]), which resets after compact() collapses tf to one
     # file and would make a post-compaction add overwrite tf_g1/
     # docmeta_g1/structure_g1 in place under readers holding a pre-flip
-    # manifest (fallback keeps pre-counter manifests working)
-    gen = int(manifest.get("next_gen", len(paths["tf"])))
+    # manifest
+    gen = int(manifest["next_gen"])
     version = int(manifest.get("version", 0)) + 1
     t_start = time.time()
 
@@ -1504,8 +1455,6 @@ def _add_stale(
     last refresh's global-stat epoch.  Nothing O(corpus) runs here —
     no global dictionary agg, no index-wide score map; both fold into
     the next :func:`refresh_scores`."""
-    from pyspark.sql import Observation
-
     paths = index_paths(manifest)
     struct_rel = f"structure_g{gen}.parquet"
 
@@ -1517,10 +1466,7 @@ def _add_stale(
     # decision rides the same frame as a separate df_split column with
     # EXACT merged df (see below).  Cost: O(delta) salted agg + one
     # columnar scan of the epoch dictionary.
-    epoch = manifest.get("score_epoch") or {
-        "n_docs": manifest["metrics"]["total_docs"],
-        "avgdl": manifest["metrics"]["avgdl"],
-    }
+    epoch = manifest["score_epoch"]
     stats_delta = termstats.global_term_stats(tf_new, n_salts=cfg.n_salts)
     stale_dict = spark.read.parquet(
         os.path.join(index_dir, paths["dictionary"])
@@ -1533,7 +1479,7 @@ def _add_stale(
     # merged df = epoch df + df over every un-refreshed generation +
     # this delta — O(staleness window, bounded by maybe_compact's
     # max_stale_deltas), never an O(corpus) rescan.
-    n_stale = int(manifest.get("stale_deltas", 0))
+    n_stale = int(manifest["stale_deltas"])
     delta_df = stats_delta.select("term", F.col("df").alias("df_delta"))
     if n_stale:
         stale_tf = (
@@ -1579,7 +1525,6 @@ def _add_stale(
     n_lists = int(row["lists"] or 0)
     delta_scores_bytes = int(row["sbytes"] or 0)
     enc_wall = time.time() - t_enc
-    sc_wall = 0.0  # fused into the encode pass
 
     # owner maps: structure as usual; scores converts the single-file
     # pointer to an owner map on the first deferred delta (the delta's
@@ -1598,17 +1543,14 @@ def _add_stale(
         "structure": {**paths["structure"], **{str(s): struct_rel for s in shards_new}},
         "scores": sc_owned,
     }
-    manifest["version"] = version
-    manifest["stale_deltas"] = int(manifest.get("stale_deltas", 0)) + 1
     n_delta_docs = meta_new.count()
-    wall = time.time() - t_start
     manifest["phases"][f"delta_g{gen}_stale"] = {
         "rows": n_lists,
-        "wall_sec": wall,
+        "wall_sec": time.time() - t_start,
         # the split the bench reports: what an exact-mode add would
         # additionally pay is the refresh, absent here by construction
         "delta_encode_wall_sec": enc_wall,
-        "delta_scores_wall_sec": sc_wall,  # 0.0: fused into the encode
+        "delta_scores_wall_sec": 0.0,  # fused into the encode
         "fused_scores": True,
         "existing_shards_reencoded": 0,
         "new_shards": len(set(shards_new)),
@@ -1617,15 +1559,12 @@ def _add_stale(
     }
     # metrics stay epoch-consistent (they describe what the score files
     # were computed with); the live corpus size is tracked separately
-    manifest["metrics"]["live_total_docs"] = (
-        int(manifest["metrics"].get("live_total_docs", manifest["metrics"]["total_docs"]))
-        + int(n_delta_docs)
+    m = manifest["metrics"]
+    return _commit(
+        index_dir, manifest,
+        {"live_total_docs": int(m.get("live_total_docs", m["total_docs"])) + int(n_delta_docs)},
+        t_start=t_start, version=version, stale_scores_bytes=delta_scores_bytes,
     )
-    manifest["metrics"]["stale_delta_scores_bytes"] = (
-        int(manifest["metrics"].get("stale_delta_scores_bytes", 0)) + delta_scores_bytes
-    )
-    _save_manifest(index_dir, manifest)
-    return BuildResult(index_dir=index_dir, metrics=manifest["metrics"])
 
 
 def merge_from_index(
@@ -1698,12 +1637,7 @@ def merge_indexes(
     src_manifests = []
     for src_dir in src_dirs:
         src_manifest = load_manifest(src_dir)
-        if src_manifest.get("format") != INDEX_FORMAT:
-            raise ValueError(
-                f"{src_dir} holds index format {src_manifest.get('format')} "
-                f"(merge expects {INDEX_FORMAT}); rebuild it"
-            )
-        src_cfg = _load_cfg(src_manifest, src_dir)
+        src_cfg = _load_cfg(src_manifest, src_dir)  # refuses other formats
         if src_cfg.to_json() != cfg.to_json():
             raise ValueError(
                 f"src index {src_dir} was built with a different config; rebuild one side"
@@ -1711,7 +1645,7 @@ def merge_indexes(
         src_manifests.append(src_manifest)
     paths = index_paths(manifest)
     all_src_paths = [index_paths(m) for m in src_manifests]
-    gen = int(manifest.get("next_gen", len(paths["tf"])))
+    gen = int(manifest["next_gen"])
     version = int(manifest.get("version", 0)) + 1
     t_start = time.time()
 
@@ -1811,14 +1745,14 @@ def merge_indexes(
 def refresh_scores(spark: SparkSession, index_dir: str) -> BuildResult:
     """Close the bounded-staleness window: rebuild the global dictionary
     over all live tf generations and re-map EVERY score file with the
-    exact merged-corpus stats (the same shuffle-free pass a full-refresh
-    add runs).  After this the index is bit-identical to one whose every
-    add ran with ``refresh_scores=True`` (tests assert it) — structure
-    files are not touched.  No-op-cheap when nothing is stale (it still
+    exact merged-corpus stats.  This is :func:`_update_derived` with no
+    shard to re-encode: the same shuffle-free score pass, lineage write
+    and commit an exact-mode add runs, with docmeta kept generational
+    and structure files untouched.  After it the index is bit-identical
+    to one whose every add ran with ``refresh_scores=True`` (tests
+    assert it).  No-op-cheap when nothing is stale (it still
     recomputes, so callers should gate on ``manifest['stale_deltas']``
     or use :func:`maybe_compact`)."""
-    from pyspark.sql import Observation
-
     manifest = load_manifest(index_dir)
     cfg = _load_cfg(manifest, index_dir)
     paths = index_paths(manifest)
@@ -1829,89 +1763,20 @@ def refresh_scores(spark: SparkSession, index_dir: str) -> BuildResult:
     tf_all = spark.read.parquet(*[os.path.join(index_dir, p) for p in paths["tf"]])
     if tombs is not None:
         tf_all = tf_all.join(tombs.select("doc_id"), "doc_id", "left_anti")
-    dict_rel = f"dictionary_v{version}.parquet"
-    scores_rel = f"scores_v{version}.parquet"
-    lin_rel = f"lineage_v{version}.parquet"
-
-    stats_r, srow = _write_dictionary(
-        spark, tf_all, cfg, os.path.join(index_dir, dict_rel)
-    )
     meta_all = spark.read.parquet(
         *[os.path.join(index_dir, p) for p in paths["docmeta"]]
     )
-    dl = meta_all.agg(
-        F.sum("doc_len").alias("s"), F.count("*").alias("n"),
-        F.sum((F.col("doc_len") > 0).cast("long")).alias("nonempty"),
-    ).collect()[0]
-    n_docs_all = int(dl["n"])
-    avgdl = float(int(dl["s"] or 0)) / n_docs_all if n_docs_all else 0.0
-
-    structure_all = _read_structure(spark, index_dir, paths)
-    obs_sc = Observation()
-    scores_df = score_postings_df(structure_all, stats_r, cfg, n_docs_all, avgdl).observe(
-        obs_sc, F.sum("scores_bytes").alias("bytes")
-    )
-    write_parquet(scores_df, os.path.join(index_dir, scores_rel))
-    scores_bytes = int(obs_sc.get["bytes"] or 0)
-    manifest["metrics"]["score_refresh_shuffled"] = _score_refresh_shuffled(scores_df)
-
-    lineage = (
-        structure_all.groupBy("shard")
-        .agg(
-            F.count("*").alias("n_lists"),
-            F.sum("n_docs").alias("n_postings"),
-            F.sum("payload_bytes").alias("structure_bytes"),
-        )
-        .join(
-            spark.read.parquet(os.path.join(index_dir, scores_rel))
-            .groupBy("shard").agg(F.sum("scores_bytes").alias("scores_bytes")),
-            "shard", "left",
-        )
-    )
-    write_parquet(lineage, os.path.join(index_dir, lin_rel))
-    lin = spark.read.parquet(os.path.join(index_dir, lin_rel)).agg(
-        F.sum("n_postings").alias("p"), F.sum("structure_bytes").alias("sb")
-    ).collect()[0]
-
-    wall = time.time() - t_start
-    manifest["paths"] = {
-        **paths, "dictionary": dict_rel, "scores": scores_rel, "lineage": lin_rel,
-    }
-    manifest["version"] = version
     # a score refresh touches neither placement nor doc sets — the
     # positions artifact rides through unchanged
     if paths.get("positions") is not None and int(
         manifest.get("positions_version", -1)
-    ) == int(manifest.get("version", 0)) - 1:
+    ) == int(manifest.get("version", 0)):
         manifest["positions_version"] = version
-    manifest["score_epoch"] = {"version": version, "n_docs": n_docs_all, "avgdl": avgdl}
-    closed = int(manifest.get("stale_deltas", 0))
-    manifest["stale_deltas"] = 0
-    manifest["phases"][f"refresh_v{version}"] = {
-        "rows": 0, "wall_sec": wall, "stale_deltas_closed": closed,
-    }
-    manifest["metrics"].update(
-        total_tokens=int(srow["tok"] or 0),
-        total_docs=n_docs_all,
-        live_total_docs=n_docs_all,
-        docs_with_terms=int(dl["nonempty"] or 0),
-        avgdl=avgdl,
-        skew_ratio=srow["skew"],
-        n_postings=int(lin["p"] or 0),
-        structure_bytes=int(lin["sb"] or 0),
-        scores_bytes=scores_bytes,
-        payload_bytes=int(lin["sb"] or 0) + scores_bytes,
-        stale_delta_scores_bytes=0,
+    return _update_derived(
+        spark, index_dir, manifest, cfg, tf_all, None, meta_all,
+        version=version, phase_name=f"refresh_v{version}", t_start=t_start,
+        paths_update={"docmeta": paths["docmeta"]},
     )
-    # same semantics as build_index: actual elapsed of THIS operation
-    # (phase walls overlap by design; their sum stays visible as
-    # build_phase_sec_sum for per-phase accounting)
-    manifest["metrics"]["build_wall_sec_total"] = round(time.time() - t_start, 3)
-    manifest["metrics"]["build_phase_sec_sum"] = round(
-        sum(p["wall_sec"] for p in manifest["phases"].values()), 3
-    )
-    _save_manifest(index_dir, manifest)
-    return BuildResult(index_dir=index_dir, metrics=manifest["metrics"])
 
 
 def delete_documents(
@@ -2068,7 +1933,7 @@ def maybe_compact(
     n_files = len(set(index_paths(manifest)["structure"].values()))
     if n_files > max_structure_files:
         return compact(spark, index_dir)
-    if int(manifest.get("stale_deltas", 0)) >= max_stale_deltas:
+    if int(manifest["stale_deltas"]) >= max_stale_deltas:
         return refresh_scores(spark, index_dir)
     return None
 
@@ -2147,8 +2012,10 @@ def index_report(index_dir: str) -> dict:
     - ``avgdl``, ``n_shards``, ``total_tokens``, ``n_postings``
     - ``tf_generations`` — un-compacted generation count (query merge
       width grows ~1 per un-compacted delta)
-    - ``stale_deltas`` — deltas serving epoch-stale scores
-      (``refresh_scores``/``maybe_compact`` close the window)
+    - ``stale_deltas`` — deltas serving epoch-stale scores: each
+      deferred add's commit raises it, and the commit of every op that
+      re-scores the index (refresh, exact add, merge, delete, compact)
+      resets it together with ``stale_delta_scores_bytes``
     - ``has_tombstones`` — deleted docs pending a compact fold
     - ``positions`` — "current" | "stale-dropped" | "absent"
     - ``structure_files`` / ``payload_bytes_on_disk`` — physical file

@@ -1568,6 +1568,8 @@ class InvertedIndex:
         with sorted distinct terms, the union of their terms, the
         (query_id, term) frame that fans each decoded term out to every
         panel holding it).  The one front door of the panel families."""
+        for qid, terms in queries:
+            _check_request(qid, {"terms": terms}, {})
         queries = [(_qid(qid), sorted(set(terms))) for qid, terms in queries]
         _check_unique_qids(qid for qid, _ in queries)
         if not queries or any(not terms for _, terms in queries):
@@ -1810,6 +1812,8 @@ class InvertedIndex:
             raise ValueError(f"k must be >= 1, got {k}")
         norm: list[tuple[int, list[list[str]]]] = []
         for qid, groups in queries:
+            # a bare string (as groups or as one group) fails as groups[i]
+            _check_request(qid, {f"groups[{i}]": g for i, g in enumerate(groups)}, {})
             gs = [list(dict.fromkeys(g)) for g in groups if g]
             if not gs:
                 raise ValueError(f"panel {qid}: needs at least one non-empty group")

@@ -109,13 +109,6 @@ def totals(tf: DataFrame, *, doc_id: str = "doc_id") -> tuple[int, int]:
     return int(row["total_tokens"] or 0), int(row["total_docs"] or 0)
 
 
-def skew_ratio(stats: DataFrame) -> float:
-    """Build metric demanded by north_rule: max(df)/mean(df) over terms —
-    how hot the hottest term is relative to average."""
-    row = stats.agg(F.max("df").alias("mx"), F.avg("df").alias("mean")).collect()[0]
-    return float(row["mx"]) / float(row["mean"]) if row["mean"] else 0.0
-
-
 def term_frequencies_with_topic(
     docs: DataFrame,
     *,
